@@ -53,10 +53,10 @@ def host_probe() -> float:
     return round(time.time() - t0, 2)
 
 
-def host_parallel_ceiling(nproc: int) -> float:
-    """Aggregate pure-CPU loop throughput at ``nproc`` pinned processes
-    relative to one — the host's own parallel-compute ceiling (the VM
-    lowers per-core clock under multi-core load, so no workload can
+def host_parallel_ceiling(high: int, low: int = 1) -> float:
+    """Aggregate pure-CPU loop throughput at ``high`` pinned processes
+    relative to ``low`` — the host's own parallel-compute ceiling (the
+    VM lowers per-core clock under multi-core load, so no workload can
     scale at 1.0 here; this is the denominator for judging engine
     scaling). Returns parallel efficiency in [0, 1]."""
     import subprocess
@@ -75,21 +75,24 @@ def host_parallel_ceiling(nproc: int) -> float:
             stdout=subprocess.PIPE, text=True) for c in range(k)]
         return sum(int(p.communicate()[0].strip()) for p in procs)
 
-    many = aggregate(nproc)
-    one = aggregate(1)
-    return round((many / one) / nproc, 3) if one else 0.0
+    many = aggregate(high)               # hot first: leaves the box in
+    few = aggregate(low)                 # the same throttled state
+    return round((many / few) / (high / low), 3) if few else 0.0
 
 
-def materialize_pages(spark, n: int, parallelism: int) -> None:
-    marker = os.path.join(PAGES_PATH, "_N")
+def materialize_pages(spark, n: int, parallelism: int,
+                      path: str = PAGES_PATH) -> None:
+    """Write ``n`` synthetic webpages as ``parallelism`` parquet files
+    at ``path`` once; later calls with the same shape reuse them."""
+    marker = os.path.join(path, "_N")
     want = f"{n}:{parallelism}"
     if os.path.exists(marker):
         with open(marker) as f:
             if f.read().strip() == want:
                 return
-        shutil.rmtree(PAGES_PATH, ignore_errors=True)
+        shutil.rmtree(path, ignore_errors=True)
     webpages(spark, n, num_partitions=parallelism) \
-        .write.mode("overwrite").parquet(PAGES_PATH)
+        .write.mode("overwrite").parquet(path)
     with open(marker, "w") as f:
         f.write(want)
 

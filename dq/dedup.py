@@ -55,7 +55,11 @@ SHINGLE_SEP = "␟"        # ␟ — never appears in whitespace-split tokens
 
 def exact_signature(text: Column, id_col: Column) -> Column:
     """64-bit signature; NULL/empty text falls back to a per-row value so
-    the null bucket cannot skew the shuffle (they dedup to themselves)."""
+    the null bucket cannot skew the shuffle (they dedup to themselves).
+    Emptiness is tested on the text itself, not via an upstream
+    ``rule_non_empty`` column, so a keeper branch built from this
+    signature depends on no UDF output and column pruning keeps the
+    Arrow stages out of it."""
     return F.when(
         text.isNotNull() & (F.trim(text) != ""), F.xxhash64(text)
     ).otherwise(F.xxhash64(id_col, F.lit("__null__")))

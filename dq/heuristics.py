@@ -49,7 +49,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -333,10 +333,3 @@ def with_heuristics_expr(df: DataFrame, text_col: str = "text",
     }).drop("_words", "_norm")
     return _with_rules(df, cfg)
 
-
-def heuristic_pass(df: DataFrame) -> Column:
-    """Conjunction of all heuristic rule verdicts."""
-    out = F.col(RULE_NAMES[0])
-    for name in RULE_NAMES[1:]:
-        out = out & F.col(name)
-    return out

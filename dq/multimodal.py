@@ -441,9 +441,10 @@ def resize_images(df: DataFrame, width: int, height: int,
     """Distributed REAL resize over a binary media column: mapInPandas
     (iterator form, codec loop per payload — the resize IS the per-
     payload work) appending the resized P6 payload, its dims, and its
-    pixel-byte sum; undecodable payloads get NULL columns instead of
-    failing the batch. 100-TB shape: row-local, no shuffle, payload
-    column stays binary end-to-end."""
+    pixel-byte sum; an undecodable payload gets NULL ``resized`` and
+    ``resized_pixel_sum`` instead of failing the batch (``resized_w`` /
+    ``resized_h`` are the requested size on every row). 100-TB shape:
+    row-local, no shuffle, payload column stays binary end-to-end."""
     out_schema = T.StructType(df.schema.fields + [
         T.StructField("resized", T.BinaryType()),
         T.StructField("resized_w", T.IntegerType()),

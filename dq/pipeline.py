@@ -2,7 +2,7 @@
 
 North-rule composition (BASELINE.json): heuristic rules (native Column
 expressions) + langid + perplexity (broadcast-model pandas UDFs) + exact
-dedup (hash-signature window) → keep/drop = conjunction of rule verdicts
+dedup (hash-signature keeper join) → keep/drop = conjunction of rule verdicts
 (mirroring the reference's "passed = all checks passed",
 ``main.py:188-208``) → compiled-regex PII scrub of kept docs → audit
 writes (per-url lineage, per-partition rule metrics, row-count history)
@@ -32,6 +32,7 @@ from pyspark.storagelevel import StorageLevel
 
 from dq.audit import AuditStore
 from dq.checkpoint import completed_partitions, filter_unprocessed, mark_done
+from dq.dedup import exact_dedup
 from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
 from dq.models import DEFAULT_PPL_THRESHOLD, make_langid_udf, make_perplexity_udf
 from dq.scrub import scrub_udf
@@ -43,21 +44,68 @@ class PipelineConfig:
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD
     heuristics: HeuristicConfig = field(default_factory=HeuristicConfig)
     repartition: int | None = None       # explicit pre-stage balancing
-    # False = skip the langid/perplexity UDF stage and pass rule_lang /
-    # rule_ppl unconditionally, so keep = heuristics ∧ not_dup. The plan
-    # is otherwise IDENTICAL (same projections, same dedup exchange) —
-    # this is what lets the composed pipeline be gated against an exact
-    # SQL oracle (model scores have no SQL mirror; the model rules are
-    # F1-gated separately in tests/test_pipeline.py).
-    enable_model_rules: bool = True
 
 
 ALL_RULES = RULE_NAMES + ["rule_lang", "rule_ppl", "rule_not_dup"]
 
 
+def _heuristics(spark: SparkSession, df: DataFrame,
+                cfg: PipelineConfig) -> DataFrame:
+    return with_heuristics(df, "text", cfg.heuristics)
+
+
+def _models(spark: SparkSession, df: DataFrame,
+            cfg: PipelineConfig) -> DataFrame:
+    langid = make_langid_udf(spark)
+    ppl = make_perplexity_udf(spark)
+    return df.withColumns({
+        "lang_pred": langid(F.col("text")),
+        "ppl": ppl(F.col("text")),
+    }).withColumns({
+        "rule_lang": F.col("lang_pred").isin(*cfg.accept_langs),
+        "rule_ppl": F.col("ppl") <= F.lit(cfg.ppl_threshold),
+    })
+
+
+def _dedup(spark: SparkSession, df: DataFrame,
+           cfg: PipelineConfig) -> DataFrame:
+    # keep-first by url within an exact-text signature. PRECONDITION:
+    # urls are unique non-null (Common-Crawl-style inputs guarantee one
+    # row per capture url); see exact_dedup for the plan shape and the
+    # reason its keeper branch never pulls in the UDF stages.
+    return (exact_dedup(df, "text", "url")
+            .withColumn("rule_not_dup", ~F.col("is_dup_copy"))
+            .drop("is_dup_copy"))
+
+
+def _keep(spark: SparkSession, df: DataFrame,
+          cfg: PipelineConfig) -> DataFrame:
+    """keep = conjunction of every rule verdict the frame carries
+    (the reference's "passed = all checks passed", ``main.py:188-208``)."""
+    keep = F.lit(True)
+    for r in ALL_RULES:
+        if r in df.columns:
+            keep = keep & F.col(r)
+    return df.withColumn("keep", keep)
+
+
+# The pipeline's stages, in order. Every caller composes these: the
+# batch pipeline runs them all, the stream skips dedup (it dedups with
+# watermark-bounded state instead), the rules-only oracle query skips
+# models, and scripts/scaling_bench.py times each one alone.
+STAGES = {
+    "heuristics": _heuristics,
+    "models": _models,
+    "dedup": _dedup,
+    "keep": _keep,
+}
+
+
 def score_pages(spark: SparkSession, pages: DataFrame,
-                cfg: PipelineConfig | None = None) -> DataFrame:
-    """Wide scored frame: input cols + stats + rule_* booleans + keep.
+                cfg: PipelineConfig | None = None,
+                skip: tuple[str, ...] = ()) -> DataFrame:
+    """Wide scored frame: input cols + stats + rule_* booleans + keep,
+    from every stage in ``STAGES`` not named in ``skip``.
 
     The raw ``html`` binary is projected away first: no downstream stage
     reads it, and carrying a multi-KB binary through every projection,
@@ -70,62 +118,28 @@ def score_pages(spark: SparkSession, pages: DataFrame,
     if cfg.repartition:
         from dq.skew import salted_repartition
         df = salted_repartition(df, cfg.repartition)
+    for name, stage in STAGES.items():
+        if name not in skip:
+            df = stage(spark, df, cfg)
+    return df
 
-    df = with_heuristics(df, "text", cfg.heuristics)
 
-    if cfg.enable_model_rules:
-        langid = make_langid_udf(spark)
-        ppl = make_perplexity_udf(spark)
-        df = df.withColumns({
-            "lang_pred": langid(F.col("text")),
-            "ppl": ppl(F.col("text")),
-        })
-        df = df.withColumns({
-            "rule_lang": F.col("lang_pred").isin(*cfg.accept_langs),
-            "rule_ppl": F.col("ppl") <= F.lit(cfg.ppl_threshold),
-        })
-    else:
-        # rules-only mode: same schema (lineage/metrics melt over
-        # ALL_RULES unchanged), model verdicts pass unconditionally
-        df = df.withColumns({
-            "lang_pred": F.lit(None).cast("string"),
-            "ppl": F.lit(None).cast("double"),
-            "rule_lang": F.lit(True),
-            "rule_ppl": F.lit(True),
-        })
+def scrub(scored: DataFrame) -> DataFrame:
+    """PII-scrub the kept docs: ``text_scrubbed`` (NULL for dropped
+    docs) and ``scrub_changed``.
 
-    # exact dedup: 64-bit signature; keep-first by url within a signature.
-    # PRECONDITION: urls are unique non-null (Common-Crawl-style inputs
-    # guarantee one row per capture url) — a duplicated url carrying its
-    # group's min would be marked keeper more than once; see
-    # dq.dedup.exact_dedup(check_unique=True) for the enforced variant.
-    # Null/empty texts get a unique per-row signature (they are dropped by
-    # rule_non_empty anyway) so the null bucket can't skew the shuffle.
-    # Shape: groupBy(sig).agg(min(url)) + join back, NOT a row_number
-    # window — the agg combines map-side so a pathologically duplicated
-    # text cannot produce a single-task straggler, and the join is
-    # AQE-skew-splittable / broadcastable (see dq.dedup.exact_dedup).
-    # The keeper branch is a narrow (url, sig) projection; the signature
-    # deliberately tests text non-emptiness directly rather than via
-    # rule_non_empty (identical semantics: a non-empty trimmed text
-    # always splits to >=1 token) so the branch carries NO dependency on
-    # the UDF stats column and column pruning keeps the Arrow stages out
-    # of it — otherwise the token/model UDFs would run twice per doc.
-    has_text = F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-    sig = F.when(has_text, F.xxhash64(F.col("text"))) \
-           .otherwise(F.xxhash64(F.col("url"), F.lit("nulltext")))
-    df = df.withColumn("text_sig", sig)
-    keepers = (df.select("url", "text_sig")
-               .groupBy("text_sig")
-               .agg(F.min("url").alias("_keep_url")))
-    df = (df.join(keepers, "text_sig")
-            .withColumn("rule_not_dup", F.col("url") == F.col("_keep_url"))
-            .drop("_keep_url"))
-
-    keep = F.lit(True)
-    for r in ALL_RULES:
-        keep = keep & F.col(r)
-    return df.withColumn("keep", keep)
+    The keep-condition goes INSIDE the UDF input: Spark extracts pandas
+    UDFs out of ``when`` branches into an unconditional ArrowEvalPython
+    node, so ``when(keep, scrub_udf(text))`` would still regex-scan every
+    DROPPED doc — feeding ``when(keep, text)`` (null otherwise) instead
+    skips them inside the batch (na_action='ignore'), byte-identically
+    for kept docs."""
+    return (scored
+            .withColumn("text_scrubbed",
+                        scrub_udf(F.when(F.col("keep"), F.col("text"))))
+            .withColumn("scrub_changed",
+                        F.when(F.col("keep"),
+                               F.col("text_scrubbed") != F.col("text"))))
 
 
 def melt_lineage(scored: DataFrame, execution_id: str) -> DataFrame:
@@ -180,26 +194,13 @@ def run_pipeline(
         done = completed_partitions(spark, store, scope)
         pages = filter_unprocessed(pages, done)
 
-    # fold the scrub into the post-window projection and persist WITHOUT
-    # the raw text: every downstream consumer (docs/lineage/metrics/
-    # history) reads the persisted frame, and dropping the dominant
-    # column shrinks the cache ~40% (kept docs carry scrubbed text only;
-    # dropped docs carry none) — the memory-pressure lever that showed up
-    # as sub-linear thread scaling at local[32]
-    scored = score_pages(spark, pages.drop("partition_value"), cfg)
-    # the keep-condition goes INSIDE the UDF input: Spark extracts pandas
-    # UDFs out of `when` branches into an unconditional ArrowEvalPython
-    # node, so `when(keep, scrub_udf(text))` still regex-scans every
-    # DROPPED doc — feeding `when(keep, text)` (null otherwise) instead
-    # skips them inside the batch (na_action='ignore'), byte-identically
-    # for kept docs
-    scored = (scored
-              .withColumn("text_scrubbed",
-                          scrub_udf(F.when(F.col("keep"), F.col("text"))))
-              .withColumn("scrub_changed",
-                          F.when(F.col("keep"),
-                                 F.col("text_scrubbed") != F.col("text")))
-              .drop("text"))
+    # persist WITHOUT the raw text: every downstream consumer (docs/
+    # lineage/metrics/history) reads the persisted frame, and dropping
+    # the dominant column shrinks the cache ~40% (kept docs carry
+    # scrubbed text only; dropped docs carry none) — the memory-pressure
+    # lever that showed up as sub-linear thread scaling at local[32]
+    scored = scrub(score_pages(spark, pages.drop("partition_value"), cfg)
+                   ).drop("text")
     scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
 
     docs = (scored.filter("keep")

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dq import dedup, similarity, textstats
-from dq.heuristics import RULE_NAMES, with_heuristics
-from dq.models import make_langid_udf, make_perplexity_udf
+from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
+from dq.pipeline import ALL_RULES, PipelineConfig, score_pages, scrub
 from dq.scrub import scrub_udf
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -1488,22 +1488,21 @@ FROM scored QUALIFY rank <= {k}
 """
 
 
+# The flagship's config, shared by the flagship and its rules-only
+# oracle gate so the two plans differ only in the models stage.
+_FLAGSHIP_CFG = PipelineConfig(
+    heuristics=HeuristicConfig(min_words=30, min_stopword_frac=0.0,
+                               min_mean_word_len=2.0))
+
+
 def flagship_scored(spark, sf_dir):
     """The flagship's scored frame (``score_pages`` at the flagship
     PipelineConfig) — shared by ``q_quality_filter_pipeline`` and the
     goldens regression test (tests/test_pipeline.py), which pins
     per-source quantized model-score aggregates off this exact
     config."""
-    from dq.heuristics import HeuristicConfig
-    from dq.pipeline import PipelineConfig, score_pages
-
-    pages = _documents_as_webpages(spark, sf_dir)
-    cfg = PipelineConfig(
-        accept_langs=("en",),
-        heuristics=HeuristicConfig(min_words=30, min_stopword_frac=0.0,
-                                   min_mean_word_len=2.0),
-    )
-    return score_pages(spark, pages, cfg)
+    return score_pages(spark, _documents_as_webpages(spark, sf_dir),
+                       _FLAGSHIP_CFG)
 
 
 def q_quality_filter_pipeline(spark, sf_dir):
@@ -1515,8 +1514,6 @@ def q_quality_filter_pipeline(spark, sf_dir):
     quantized score sums are pinned by committed goldens
     (tests/goldens/) so any model change that shifts verdicts or
     scores fails loudly."""
-    from dq.pipeline import ALL_RULES
-
     scored = flagship_scored(spark, sf_dir)
     aggs = [F.sum(F.col(r).cast("long")).alias(f"pass_{r}")
             for r in ALL_RULES]
@@ -1528,30 +1525,19 @@ def q_quality_filter_pipeline(spark, sf_dir):
 
 
 def q_pipeline_rules_only(spark, sf_dir):
-    """The EXACT composed pipeline plan (``score_pages`` + scrub) with
-    the model rules disabled — the oracle gate for the flagship's
-    composition. ``enable_model_rules=False`` keeps every projection,
-    the heuristics Arrow stage, and the dedup keeper exchange identical
-    to ``q_quality_filter_pipeline`` (same HeuristicConfig); only the
-    langid/perplexity UDFs are replaced by unconditional passes, so
-    keep = heuristics ∧ not_dup and every ingredient has an exact SQL
-    mirror: heuristic rules (ORACLE_HEURISTICS semantics at this
-    config), the keep-first-by-url dedup (min(url) per text), and the
-    scrubbed-text fingerprints (scrub is the identity on this corpus —
-    proven separately by scrubbed_fingerprints — so the md5 tallies pin
-    the scrub stage's byte-round-trip inside the composition too)."""
-    from dq.heuristics import HeuristicConfig
-    from dq.pipeline import PipelineConfig, score_pages
-
-    pages = _documents_as_webpages(spark, sf_dir)
-    cfg = PipelineConfig(
-        heuristics=HeuristicConfig(min_words=30, min_stopword_frac=0.0,
-                                   min_mean_word_len=2.0),
-        enable_model_rules=False,
-    )
-    scored = score_pages(spark, pages, cfg)
-    scored = scored.withColumn(
-        "text_scrubbed", scrub_udf(F.when(F.col("keep"), F.col("text"))))
+    """The EXACT composed pipeline plan (``score_pages`` + scrub) minus
+    the models stage — the oracle gate for the flagship's composition.
+    Every other projection, the heuristics Arrow stage, and the dedup
+    keeper exchange are identical to ``q_quality_filter_pipeline``
+    (same HeuristicConfig), so keep = heuristics ∧ not_dup and every
+    ingredient has an exact SQL mirror: heuristic rules
+    (ORACLE_HEURISTICS semantics at this config), the keep-first-by-url
+    dedup (min(url) per text), and the scrubbed-text fingerprints
+    (scrub is the identity on this corpus — proven separately by
+    scrubbed_fingerprints — so the md5 tallies pin the scrub stage's
+    byte-round-trip inside the composition too)."""
+    scored = scrub(score_pages(spark, _documents_as_webpages(spark, sf_dir),
+                               _FLAGSHIP_CFG, skip=("models",)))
     fp_hex = F.md5(F.encode(F.col("text_scrubbed"), "UTF-8"))
     fp_num = F.conv(F.substring(fp_hex, 1, 8), 16, 10).cast("long")
     gated_rules = RULE_NAMES + ["rule_not_dup"]

@@ -5,11 +5,11 @@ this module is the engine-completeness extension: the same rule
 evaluation running continuously over an arriving webpages stream.
 
 Design:
-- **Same expressions, two runtimes.** ``score_stream`` applies the
-  identical heuristic Column expressions and broadcast-model UDFs used
-  by the batch pipeline (dq.heuristics / dq.models) to a streaming
-  DataFrame — Catalyst doesn't care, and keep/drop semantics cannot
-  drift between the two paths because they share the code.
+- **Same stages, two runtimes.** ``score_stream`` runs the batch
+  pipeline's own stage list (``dq.pipeline.STAGES``, minus the global
+  dedup) over a streaming DataFrame — Catalyst doesn't care, and
+  keep/drop semantics cannot drift between the two paths because they
+  share the code.
 - **Event-time windows + watermark** for per-window rule metrics with
   bounded state: late pages beyond the watermark are dropped from the
   aggregation (the batch path has no such cutoff; the audit-table
@@ -18,7 +18,7 @@ Design:
   a landing directory and ``Trigger.AvailableNow`` for catch-up runs,
   which is also exactly how the tests drive it deterministically.
 - **Stateful dedup** via ``dropDuplicatesWithinWatermark`` on the text
-  signature — the streaming analog of the batch exact-dedup window
+  signature — the streaming analog of the batch exact-dedup keeper join
   (state is bounded by the watermark instead of unbounded).
 """
 
@@ -28,8 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
-from dq.models import DEFAULT_PPL_THRESHOLD, make_langid_udf, make_perplexity_udf
+from dq.dedup import exact_signature
+from dq.pipeline import ALL_RULES, PipelineConfig, score_pages
 
 
 def read_webpages_stream(spark: SparkSession, path: str,
@@ -45,37 +45,21 @@ def read_webpages_stream(spark: SparkSession, path: str,
 
 
 def score_stream(spark: SparkSession, pages: DataFrame,
-                 accept_langs: tuple[str, ...] = ("en",),
-                 ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
-                 heuristics: HeuristicConfig | None = None,
+                 cfg: PipelineConfig | None = None,
                  watermark: str = "1 hour") -> DataFrame:
-    """Scored stream: rule_* booleans + keep, exactly the batch
-    semantics minus the global dedup (streaming uses watermark-bounded
-    dedup, see ``streaming_dedup``)."""
-    df = pages.drop("html").withWatermark("warc_ts", watermark)
-    df = with_heuristics(df, "text", heuristics)
-    langid = make_langid_udf(spark)
-    ppl = make_perplexity_udf(spark)
-    df = df.withColumns({
-        "lang_pred": langid(F.col("text")),
-        "ppl": ppl(F.col("text")),
-    }).withColumns({
-        "rule_lang": F.col("lang_pred").isin(*accept_langs),
-        "rule_ppl": F.col("ppl") <= F.lit(ppl_threshold),
-    })
-    keep = F.lit(True)
-    for r in RULE_NAMES + ["rule_lang", "rule_ppl"]:
-        keep = keep & F.col(r)
-    return df.withColumn("keep", keep)
+    """Scored stream: the batch pipeline's stages minus the global dedup
+    (streaming uses watermark-bounded dedup, see ``streaming_dedup``)."""
+    return score_pages(spark, pages.withWatermark("warc_ts", watermark),
+                       cfg, skip=("dedup",))
 
 
 def streaming_dedup(scored: DataFrame) -> DataFrame:
     """Watermark-bounded exact dedup: first arrival of a text signature
     wins; duplicates within the watermark horizon are dropped. State
     size is bounded by (docs per watermark window), not corpus size."""
-    sig = F.when(F.col("rule_non_empty"), F.xxhash64(F.col("text"))) \
-           .otherwise(F.xxhash64(F.col("url"), F.lit("nulltext")))
-    return (scored.withColumn("text_sig", sig)
+    return (scored
+            .withColumn("text_sig",
+                        exact_signature(F.col("text"), F.col("url")))
             .dropDuplicatesWithinWatermark(["text_sig"]))
 
 
@@ -85,7 +69,7 @@ def windowed_rule_metrics(scored: DataFrame,
     the batch ``rule_metrics`` audit table. Watermark (already on the
     frame) bounds state; output mode 'append' emits each window once
     it is final."""
-    rules = RULE_NAMES + ["rule_lang", "rule_ppl"]
+    rules = [r for r in ALL_RULES if r in scored.columns]
     aggs = [F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in rules]
     aggs += [F.count(F.lit(1)).alias("total"),
              F.sum(F.col("keep").cast("long")).alias("kept")]

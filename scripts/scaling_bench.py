@@ -1,9 +1,15 @@
-"""Scaling-efficiency evidence: the same pipeline job at N and 4N cores.
+"""Scaling evidence: the same job at N and 4N cores.
 
 North rule (BASELINE.json): "throughput scaling efficiency >= 0.8 between
-N- and 4N-executor clusters", evidenced in-sandbox as two parallelism
-levels on one machine (32 physical cores, no SMT) over the SAME
-materialized input.
+N- and 4N-executor clusters", evidenced on one machine as two
+parallelism levels over the SAME materialized input.
+
+A job is ``pipeline`` (``run_pipeline`` end to end, its audit frames
+drained into ``noop`` sinks) or the name of one pipeline stage
+(``dq.pipeline.STAGES``, or ``scrub``). A stage job times the real stage
+function alone: its input, the output of the stages before it, is
+cached and materialized before the clock starts, so one badly-scaling
+stage cannot hide inside the end-to-end number.
 
 Measurement protocol (each detail exists because the naive version was
 measured to lie):
@@ -11,19 +17,21 @@ measured to lie):
   ``local[N]`` alone only caps Spark *task* threads — pandas-UDF worker
   processes run beside them, so an un-pinned "8-core" run actually
   consumes ~2-3x that many cores and the comparison flatters N.
-- **Fresh JVM per level** (subprocess), **warm-up run first** (first
-  execution of the plan pays JIT/codegen/python-worker spin-up that is
-  amortized to nothing at production scale: measured 201 s cold vs
-  12 s warm for one stage at 32 threads), then best-of-``reps``.
+- **Fresh JVM per level** (subprocess), **every job warmed up first**
+  on a 10% sample (first execution of a plan pays JIT/codegen/python-
+  worker spin-up that is amortized to nothing at production scale:
+  measured 201 s cold vs 12 s warm for one stage at 32 threads), then
+  best-of-``reps``.
 - **Levels interleaved A/B per rep pair** so slow drift of the shared
-  sandbox host (CPU steal varies over minutes) cancels instead of
-  biasing one side.
+  host (CPU steal varies over minutes) cancels instead of biasing one
+  side; the per-pair efficiencies are the same-minute observations.
 
-Appends one row to BENCH_scaling_runs.md (append-only run log — it
-never touches BENCH.md, whose curated scaling section links there) and
-prints one JSON line.
+Prints one JSON line, with the host's own single-core probe and N->4N
+parallel ceiling beside the job times.
 
-Usage: python scripts/scaling_bench.py [n_docs] [N] [reps]
+Usage: python scripts/scaling_bench.py [n_docs] [N] [reps] [jobs]
+(N defaults to nproc // 4, so 4N is the whole machine; jobs is a
+comma-separated list, default ``pipeline``)
 """
 
 from __future__ import annotations
@@ -33,11 +41,17 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from bench import host_parallel_ceiling, host_probe  # noqa: E402
+from dq.pipeline import STAGES  # noqa: E402
+
+NPROC = len(os.sched_getaffinity(0))
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-N_LOW = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+N_LOW = int(sys.argv[2]) if len(sys.argv) > 2 else max(1, NPROC // 4)
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+JOBS = sys.argv[4].split(",") if len(sys.argv) > 4 else ["pipeline"]
 N_HIGH = N_LOW * 4
 # input must be big enough that parallel work dwarfs per-job fixed cost
 # (driver orchestration, stage scheduling): at 200k docs those ~8 s of
@@ -45,62 +59,66 @@ N_HIGH = N_LOW * 4
 PAGES = f"/tmp/dq_scaling_pages_{N_DOCS}"
 
 CHILD = r"""
-import sys, time, json, datetime as dt
-sys.path.insert(0, ".")
+import datetime as dt, json, sys, time
+from pyspark.storagelevel import StorageLevel
+from dq.pipeline import STAGES, PipelineConfig, run_pipeline, score_pages, scrub
 from dq.session import get_spark
-from dq.pipeline import run_pipeline
 
-cores, pages_path = int(sys.argv[1]), sys.argv[2]
+cores, pages_path, jobs = int(sys.argv[1]), sys.argv[2], sys.argv[3].split(",")
 spark = get_spark("scale", master=f"local[{cores}]",
                   shuffle_partitions=max(cores, 8))
+cfg = PipelineConfig()
+steps = {**STAGES, "scrub": lambda spark, df, cfg: scrub(df)}
+order = list(steps)
 
 
-def one_run(tag, frac=None):
-    pages = spark.read.parquet(pages_path)
-    if frac:
-        pages = pages.sample(frac, seed=1)
+def drain(df):
+    df.write.format("noop").mode("overwrite").save()
+
+
+def run(job, pages):
+    if job == "pipeline":
+        t0 = time.time()
+        out = run_pipeline(spark, pages, job, dt.datetime(2025, 10, 3),
+                           store=None, resume=False, cfg=cfg)
+        for frame in ("docs", "metrics", "lineage"):
+            drain(out[frame])
+        sec = time.time() - t0
+        out["scored"].unpersist()
+        return sec
+    before = score_pages(spark, pages, cfg, skip=order[order.index(job):])
+    before = before.persist(StorageLevel.MEMORY_AND_DISK)
+    drain(before)
     t0 = time.time()
-    out = run_pipeline(spark, pages, tag, dt.datetime(2025, 10, 3),
-                       store=None, resume=False)
-    for frame in ("docs", "metrics", "lineage"):
-        out[frame].write.format("noop").mode("overwrite").save()
+    drain(steps[job](spark, before, cfg))
     sec = time.time() - t0
-    out["scored"].unpersist()
+    before.unpersist()
     return sec
 
 
-one_run("warmup", frac=0.1)             # JIT/codegen/worker spin-up
+pages = spark.read.parquet(pages_path)
+for job in jobs:
+    run(job, pages.sample(0.1, seed=1))
 print("READY", flush=True)
-for line in sys.stdin:                   # parent orchestrates interleaving
-    if line.strip() == "quit":
+for line in sys.stdin:                   # the parent interleaves levels
+    job = line.strip()
+    if job == "quit":
         break
-    sec = one_run(line.strip())
-    print("RESULT " + json.dumps({"cores": cores, "sec": sec}), flush=True)
+    print("RESULT " + json.dumps({"sec": run(job, pages)}), flush=True)
 spark.stop()
 """
 
 
 def materialize() -> None:
-    sub = r"""
-import sys; sys.path.insert(0, ".")
-from dq.session import get_spark
-from dq.synth import webpages
-spark = get_spark("gen", master="local[32]")
-webpages(spark, %d, num_partitions=64).write.mode("overwrite").parquet(%r)
-spark.stop()
-print("RESULT done")
-""" % (N_DOCS, PAGES)
-    run_child(["python", "-c", sub])
-
-
-def run_child(cmd: list[str]) -> dict | None:
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    for line in proc.stdout.splitlines():
-        if line.startswith("RESULT "):
-            payload = line[len("RESULT "):]
-            return json.loads(payload) if payload.startswith("{") else None
-    sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
-    raise SystemExit(f"child failed: {cmd[:2]}")
+    """Write the input once (4 files per core, so 4N runs in waves), in
+    a throwaway JVM using the whole box."""
+    code = ("from bench import materialize_pages\n"
+            "from dq.session import get_spark\n"
+            f"spark = get_spark('gen', master='local[{NPROC}]')\n"
+            f"materialize_pages(spark, {N_DOCS}, {4 * NPROC}, {PAGES!r})\n"
+            "spark.stop()\n")
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=ROOT,
+                   timeout=1800)
 
 
 class Level:
@@ -108,28 +126,24 @@ class Level:
 
     def __init__(self, cores: int):
         self.cores = cores
-        cpuset = f"0-{cores - 1}"
         self.proc = subprocess.Popen(
-            ["taskset", "-c", cpuset, "python", "-c", CHILD,
-             str(cores), PAGES],
+            ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", CHILD,
+             str(cores), PAGES, ",".join(JOBS)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
-            bufsize=1)
-        while True:                      # wait for warm-up
-            line = self.proc.stdout.readline()
-            if not line:
-                raise SystemExit(f"child {cores} died during warmup")
-            if line.startswith("READY"):
-                break
+            bufsize=1, cwd=ROOT)
 
-    def run(self, tag: str) -> float:
-        self.proc.stdin.write(tag + "\n")
-        self.proc.stdin.flush()
+    def read(self, tag: str) -> str:
         while True:
             line = self.proc.stdout.readline()
             if not line:
                 raise SystemExit(f"child {self.cores} died")
-            if line.startswith("RESULT "):
-                return json.loads(line[len("RESULT "):])["sec"]
+            if line.startswith(tag):
+                return line[len(tag):]
+
+    def run(self, job: str) -> float:
+        self.proc.stdin.write(job + "\n")
+        self.proc.stdin.flush()
+        return json.loads(self.read("RESULT "))["sec"]
 
     def stop(self):
         try:
@@ -140,123 +154,40 @@ class Level:
             self.proc.kill()
 
 
-def probe() -> float:
-    """Single-core speed probe — records host throttle state alongside
-    the measurement (the sandbox host's effective clock varies ~2x)."""
-    import time
-    t0 = time.time()
-    s = 0
-    for i in range(20_000_000):
-        s += i * i
-    return round(time.time() - t0, 2)
-
-
-_BURN = r"""
-import time, sys
-t0 = time.time(); n = 0
-while time.time() - t0 < 6:
-    x = 0
-    for i in range(10**6):
-        x += i * i
-    n += 1
-print(n)
-"""
-
-
-def cpu_ceiling() -> float:
-    """The host's OWN parallel-compute ceiling: aggregate pure-CPU loop
-    throughput at N vs 4N pinned processes (register/L1-only work, zero
-    sharing, zero engine). The sandbox VM reduces per-core clock under
-    sustained multi-core load, so even embarrassingly parallel work
-    cannot reach efficiency 1.0 from N to 4N cores here — this measures
-    what the box physically delivers, the denominator for judging the
-    engine's own scaling."""
-    def aggregate(nproc: int) -> int:
-        procs = [subprocess.Popen(
-            ["taskset", "-c", str(c), "python", "-c", _BURN],
-            stdout=subprocess.PIPE, text=True) for c in range(nproc)]
-        return sum(int(p.communicate()[0].strip()) for p in procs)
-    hi = aggregate(N_HIGH)               # hot first: leaves box in the
-    lo = aggregate(N_LOW)                # same throttled state for low
-    return round((hi / lo) / (N_HIGH / N_LOW), 3)
-
-
 def main() -> None:
-    if not os.path.exists(os.path.join(PAGES, "_SUCCESS")):
-        materialize()
-    probe_before = probe()
+    unknown = set(JOBS) - {"pipeline", "scrub", *STAGES}
+    if unknown:
+        raise SystemExit(f"unknown jobs: {sorted(unknown)}")
+    materialize()
+    probe_before = host_probe()
     low, high = Level(N_LOW), Level(N_HIGH)
-    times = {N_LOW: [], N_HIGH: []}
-    for rep in range(REPS):              # interleaved A/B pairs
-        times[N_LOW].append(low.run(f"low-{rep}"))
-        times[N_HIGH].append(high.run(f"high-{rep}"))
+    for level in (low, high):            # both warm up at once
+        level.read("READY")
+    times = {j: {N_LOW: [], N_HIGH: []} for j in JOBS}
+    for _rep in range(REPS):             # interleaved A/B pairs
+        for j in JOBS:
+            times[j][N_LOW].append(low.run(j))
+            times[j][N_HIGH].append(high.run(j))
     low.stop()
     high.stop()
-    ceiling = cpu_ceiling()
-    results = {c: min(v) for c, v in times.items()}
-    probe_after = probe()
-    sys.stderr.write(f"all times: {times}\n")
-    sys.stderr.write(f"probe before: {probe_before}s, after: {probe_after}s\n")
-    sys.stderr.write(f"host cpu ceiling: {ceiling}\n")
-
-    thr = {c: N_DOCS / s for c, s in results.items()}
-    eff = (thr[N_HIGH] / thr[N_LOW]) / (N_HIGH / N_LOW)
-    # per-pair efficiency: each interleaved rep pair ran back-to-back
-    # under the SAME host conditions, so the pair ratio is immune to the
-    # sandbox host's minute-scale throttling drift; the best pair is the
-    # cleanest same-conditions observation
     ratio = N_HIGH / N_LOW
-    pair_effs = [round((tl / th) / ratio, 3)
-                 for tl, th in zip(times[N_LOW], times[N_HIGH])]
-    summary = {
-        "n_docs": N_DOCS,
-        "low_cores": N_LOW, "low_sec": round(results[N_LOW], 2),
-        "low_docs_per_sec": round(thr[N_LOW], 1),
-        "high_cores": N_HIGH, "high_sec": round(results[N_HIGH], 2),
-        "high_docs_per_sec": round(thr[N_HIGH], 1),
-        "speedup": round(thr[N_HIGH] / thr[N_LOW], 2),
-        "scaling_efficiency": round(eff, 3),
-        "pair_efficiencies": pair_effs,
-        "best_pair_efficiency": max(pair_effs),
-        "host_cpu_ceiling": ceiling,
-        "efficiency_vs_host_ceiling": round(eff / ceiling, 3),
-    }
-    print(json.dumps(summary))
-
-    # APPEND-ONLY run log (one table row per invocation). Earlier
-    # revisions rewrote BENCH.md's scaling section wholesale, so one
-    # stray throttled run destroyed the curated cross-round table —
-    # now BENCH.md's scaling prose is hand-curated and links here, and
-    # running this script twice leaves all history intact.
-    import datetime as _dt
-    path = "BENCH_scaling_runs.md"
-    if not os.path.exists(path):
-        with open(path, "w") as f:
-            f.write(
-                "# Scaling bench run log (append-only)\n\n"
-                "One row per `scripts/scaling_bench.py` invocation over "
-                "the same end-to-end pipeline job (heuristics + langid + "
-                "perplexity + dedup + scrub + lineage/metrics), each "
-                "level a fresh `taskset`-pinned JVM, warmed up, "
-                "interleaved A/B reps. `eff` = column-best efficiency; "
-                "`pairs` = per-interleaved-pair (same-minute host "
-                "conditions); `probe` = single-core seconds "
-                "before/after (cool ~1.3-1.6, throttled 3-4.6). "
-                "BENCH.md's curated scaling section interprets these.\n\n"
-                "| when (UTC) | docs | cores | wall sec | docs/s | "
-                "eff | pairs | best pair | host ceiling | probe b/a |\n"
-                "|---|---|---|---|---|---|---|---|---|---|\n")
-    when = _dt.datetime.now(_dt.timezone.utc).strftime("%Y-%m-%d %H:%M")
-    with open(path, "a") as f:
-        f.write(
-            f"| {when} | {N_DOCS:,} | {N_LOW}→{N_HIGH} "
-            f"| {summary['low_sec']}→{summary['high_sec']} "
-            f"| {summary['low_docs_per_sec']}→{summary['high_docs_per_sec']} "
-            f"| {summary['scaling_efficiency']} "
-            f"| {summary['pair_efficiencies']} "
-            f"| {summary['best_pair_efficiency']} "
-            f"| {summary['host_cpu_ceiling']} "
-            f"| {probe_before}/{probe_after} |\n")
+    jobs = {}
+    for j, t in times.items():
+        tl, th = min(t[N_LOW]), min(t[N_HIGH])
+        pairs = [round((a / b) / ratio, 3)
+                 for a, b in zip(t[N_LOW], t[N_HIGH])]
+        jobs[j] = {"low_sec": round(tl, 2), "high_sec": round(th, 2),
+                   "efficiency": round((tl / th) / ratio, 3),
+                   "pair_efficiencies": pairs,
+                   "best_pair_efficiency": max(pairs)}
+        sys.stderr.write(f"{j}: {t}\n")
+    print(json.dumps({
+        "n_docs": N_DOCS, "low_cores": N_LOW, "high_cores": N_HIGH,
+        "jobs": jobs,
+        "host_cpu_ceiling": host_parallel_ceiling(N_HIGH, N_LOW),
+        "probe_before_sec": probe_before,
+        "probe_after_sec": host_probe(),
+    }))
 
 
 if __name__ == "__main__":

@@ -67,3 +67,19 @@ def test_column_form_wrappers(spark):
     # wrappers mirror the underlying callables exactly
     assert out["clean"] == scrub.scrub_string(
         "alpha beta gamma delta contact a@b.co now")
+
+
+def test_driver_heap_fits_the_machine(spark):
+    """The default driver heap is half the physical RAM (DQ_DRIVER_MEM
+    overrides it), and the test session's JVM really launched with it."""
+    import os
+
+    from dq.session import default_driver_memory
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(default_driver_memory()[:-1]) * 2**30 <= max(phys // 2, 2**30)
+    want = os.environ.get("DQ_DRIVER_MEM", default_driver_memory())
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+    max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime() \
+                    .maxMemory()
+    assert max_heap < phys

@@ -2,7 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from dq.heuristics import heuristic_pass, with_heuristics
+from dq.heuristics import with_heuristics
+from dq.pipeline import STAGES
 
 CLEAN = ("the river and the mountain were seen from the village garden "
          "and the people of the valley said that the harvest was good "
@@ -13,12 +14,13 @@ CLEAN = ("the river and the mountain were seen from the village garden "
 
 def _score(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    return with_heuristics(df).withColumn("hpass", heuristic_pass(df)).collect()
+    # the pipeline's keep stage over the heuristic rules alone
+    return STAGES["keep"](spark, with_heuristics(df), None).collect()
 
 
 def test_clean_doc_passes(spark):
     r = _score(spark, [CLEAN])[0]
-    assert r.hpass, r.asDict()
+    assert r.keep, r.asDict()
     assert r.n_words >= 50 and r.stopword_frac > 0.2
     assert r.rule_distinct_ratio and r.rule_symbol_ratio
 
@@ -26,13 +28,13 @@ def test_clean_doc_passes(spark):
 def test_null_and_empty_fail_all(spark):
     for r in _score(spark, [None, "", "   "]):
         assert not r.rule_non_empty
-        assert not r.hpass
+        assert not r.keep
         assert not r.rule_min_words        # gated to False, not NULL
 
 
 def test_short_doc_fails_min_words(spark):
     r = _score(spark, ["only a few words here"])[0]
-    assert not r.rule_min_words and not r.hpass
+    assert not r.rule_min_words and not r.keep
 
 
 def test_symbol_heavy_fails(spark):

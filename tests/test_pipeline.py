@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from dq.audit import AuditStore
 from dq.checkpoint import mark_done
-from dq.pipeline import PipelineConfig, run_pipeline, score_pages
+from dq.pipeline import run_pipeline, score_pages
 from dq.scrub import scrub_string
 from dq.synth import BUCKETS, webpages
 
@@ -53,6 +53,29 @@ def test_keep_drop_f1_vs_oracle(spark):
     recall = tp / (tp + fn) if tp + fn else 1.0
     f1 = 2 * precision * recall / (precision + recall)
     assert f1 >= 0.99, (f1, tp, fp, fn)
+
+
+def _final_plan(df) -> str:
+    """The executed (post-AQE) physical plan of ``df``'s own query."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+
+
+def test_scored_plan_has_one_python_crossing(spark):
+    """The stages keep the Python boundary crossed once per document:
+    score_pages executes ONE ArrowEvalPython node (token stats, langid
+    and perplexity fused) and one dedup exchange, so the keeper branch
+    never pulls in the UDFs; run_pipeline's scored frame adds only the
+    scrub node."""
+    pages = webpages(spark, 2000)
+    plan = _final_plan(score_pages(spark, pages))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    out = run_pipeline(spark, pages, "plan", RUN_TS, resume=False)
+    plan = _final_plan(out["scored"])
+    assert plan.count("ArrowEvalPython") == 2, plan
+    out["scored"].unpersist()
 
 
 def test_flagship_goldens(spark):

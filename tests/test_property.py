@@ -20,10 +20,12 @@ Python over batches, which is exactly what makes them property-testable.
 """
 
 import math
+import random
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from dq import models
 from dq.models import LANGID_MODEL, LM_MODEL
 from dq.scrub import (
     EMAIL_RE, EMAIL_TOKEN, IP_TOKEN, IPV4_RE, PHONE_RE, PHONE_TOKEN,
@@ -89,3 +91,41 @@ def test_perplexity_batch_equals_per_doc(docs):
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert (math.isinf(g) and math.isinf(w)) or g == w, (g, w)
+
+
+def _chunk_boundary_batch():
+    """~500 mixed docs (deterministic) whose sliced bytes exceed both
+    scorer chunks, one doc larger than ``_PPL_CHUNK`` on its own, and
+    empty / None docs scattered through and trailing the batch."""
+    rng = random.Random(20251003)
+    words = ["the", "of", "and", "river", "mountain", "der", "und", "le",
+             "la", "que", "zzqx", "İstanbul", "straße", "日本語", "\U0001F600",
+             "naïve", "x1", "555-0123", "a", "ſ"]
+    docs = [" ".join(rng.choice(words) for _ in range(rng.randint(0, 160)))
+            for _ in range(480)]
+    for i in range(0, 480, 37):
+        docs[i] = None if i % 2 else ""
+    big = " ".join(rng.choice(words) for _ in range(40_000))
+    docs.insert(250, big)
+    docs += ["", None, "", ""]
+    assert len(big.encode()) > models._PPL_CHUNK
+    assert sum(len(d.encode()) for d in docs if d) > models._PPL_CHUNK
+    assert sum(min(len(d.encode()), models.MAX_LANGID_BYTES)
+               for d in docs if d) > models._LANGID_CHUNK
+    return docs
+
+
+def test_batch_scorers_cross_chunk_boundaries():
+    """The batch scorers walk document-aligned chunks through reused
+    scratch buffers; across chunk boundaries, a doc bigger than a
+    chunk, and empty/None runs they must still equal the per-doc
+    scorers — twice, so the second pass runs on grown, reused scratch."""
+    docs = _chunk_boundary_batch()
+    want_lang = [LANGID_MODEL.predict(d) for d in docs]
+    want_ppl = [LM_MODEL.perplexity(d) for d in docs]
+    for _ in range(2):
+        assert LANGID_MODEL.predict_batch(docs) == want_lang
+        got = LM_MODEL.perplexity_batch(docs)
+        assert len(got) == len(want_ppl)
+        for g, w in zip(got, want_ppl):
+            assert (math.isinf(g) and math.isinf(w)) or g == w, (g, w)

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dq import streaming
-from dq.pipeline import PipelineConfig, score_pages
+from dq.pipeline import ALL_RULES, score_pages
 from dq.synth import webpages
 
 
@@ -22,33 +22,33 @@ def landing(spark, tmp_path_factory):
 
 
 def test_stream_keep_matches_batch(spark, landing, tmp_path_factory):
-    """The streaming scorer and the batch scorer agree per url
-    (same expressions, two runtimes) — modulo dedup, which streaming
-    applies with bounded state instead of a global window."""
+    """The streaming scorer and the batch scorer agree per url on every
+    shared rule verdict and model score (same stages, two runtimes) —
+    modulo dedup, which streaming applies with bounded state instead of
+    a global keeper join."""
     out_dir = str(tmp_path_factory.mktemp("out"))
     cp = str(tmp_path_factory.mktemp("cp"))
+    shared = [r for r in ALL_RULES if r != "rule_not_dup"] + ["lang_pred",
+                                                             "ppl"]
     pages = streaming.read_webpages_stream(spark, landing)
     scored = streaming.score_stream(spark, pages)
-    q = (scored.select("url", "keep")
+    q = (scored.select("url", *shared, "keep")
          .writeStream.format("parquet")
          .option("path", out_dir).option("checkpointLocation", cp)
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
 
-    stream_keep = {r["url"]: r["keep"]
-                   for r in spark.read.parquet(out_dir).collect()}
+    stream = {r["url"]: r.asDict()
+              for r in spark.read.parquet(out_dir).collect()}
 
-    batch = score_pages(spark, spark.read.parquet(landing),
-                        PipelineConfig())
-    # compare on the pre-dedup rules: keep_stream == (batch keep ignoring
-    # rule_not_dup)
-    batch_keep_nodedup = {
-        r["url"]: all(r[c] for c in
-                      [c for c in batch.columns
-                       if c.startswith("rule_") and c != "rule_not_dup"])
-        for r in batch.collect()}
-    assert stream_keep == batch_keep_nodedup
-    assert any(stream_keep.values()) and not all(stream_keep.values())
+    batch = score_pages(spark, spark.read.parquet(landing))
+    # the stream's keep == the batch conjunction without rule_not_dup
+    want = {r["url"]: {"url": r["url"], **{c: r[c] for c in shared},
+                       "keep": all(r[c] for c in shared if c in ALL_RULES)}
+            for r in batch.collect()}
+    assert stream == want
+    keeps = [r["keep"] for r in stream.values()]
+    assert any(keeps) and not all(keeps)
 
 
 def test_windowed_metrics_availablenow(spark, landing, tmp_path_factory):
