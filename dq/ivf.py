@@ -1,5 +1,6 @@
-"""IVF (inverted-file) ANN over embedding columns — the k-means
-alternative to the hyperplane-LSH index in :mod:`dq.similarity`.
+"""IVF (inverted-file) ANN over embedding columns — the persisted,
+partition-pruned index and the k-means alternative to the scan-time
+hyperplane LSH in :mod:`dq.similarity`.
 
 Why a second bucketing: hyperplane LSH is data-oblivious — bucket
 shapes ignore the corpus distribution, so clustered corpora waste
@@ -9,7 +10,7 @@ the standard scale path for embedding search (FAISS IVF family,
 Johnson et al., "Billion-scale similarity search with GPUs", 2017 —
 public). Recall is tunable per query via ``nprobe`` without rebuilding
 the index, and storage is 1× the corpus (each vector lives in exactly
-one list) vs the LSH index's bands× replication.
+one list) vs a multi-table LSH index's bands× replication.
 
 Scale shape (the 100-TB story):
 

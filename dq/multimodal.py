@@ -1,38 +1,32 @@
-"""Multimodal (image/audio/video) column plumbing for training-data
-pipelines.
+"""Multimodal (image/audio) column plumbing for training-data pipelines.
 
-Media ride as opaque ``binary`` columns with a typed metadata struct —
-the Spark-side contract (schema, partitioning, Arrow batch shape, UDF
-signatures) is real and tested. Codec status:
+Media ride as opaque ``binary`` columns with a typed metadata struct
+(:func:`with_media_meta`). Every codec is real, dependency-free and
+deterministic, with a synthesizer whose output is a pure function of
+the media id, so decoded values are predictable from the id alone (the
+PPM, PNG and resize queries in dq/queries.py have exact DuckDB oracles):
 
-- **audio/WAV is REAL**: :func:`synthesize_wav` writes genuine PCM16
-  RIFF/WAVE bytes and :func:`decode_audio` parses them back (header +
-  frames + an RMS feature) with the stdlib ``wave`` module — no new
-  dependencies, deterministic, end-to-end tested;
-- **image/PPM is REAL**: :func:`synthesize_ppm` writes genuine binary
-  P6 (portable pixmap) bytes and :func:`decode_ppm_meta` parses header
-  + validates the raster — plugs into :func:`decode_images` as a real
-  decoder, oracle-checked (the synthesized dims are pure arithmetic of
-  the id, so DuckDB predicts the decode output independently);
-- other image formats stay import-gated (``real_image_decoder`` raises
-  ``NotImplementedError`` until PIL ships in the container);
-- ``fake_decode_meta`` is the deterministic image-decode stand-in the
-  tests and the synthetic corpus use: width/height derived from a
-  stable hash of the bytes, so every partitioning produces identical
-  output (and the driver's SQL oracle can reproduce it).
+- **audio/WAV**: :func:`synthesize_wav` writes PCM16 RIFF/WAVE bytes and
+  :func:`decode_audio` parses them back (header + frames + an RMS
+  feature) with the stdlib ``wave`` module;
+- **image/PPM**: :func:`synthesize_ppm` writes binary P6 bytes and
+  :func:`decode_images` parses the header and validates the raster
+  (:func:`decode_ppm_meta`); :func:`resize_images` is a real
+  nearest-neighbour resize that re-encodes P6;
+- **image/PNG**: :func:`synthesize_png` / :func:`decode_pngs` — zlib
+  IDAT, CRC'd chunks and all five scanline filters (stdlib only).
 
-All bulk operators are ``mapInPandas`` (iterator-of-batches: one model /
-decoder init per PARTITION, not per row — the same executor-lifetime
-amortization the langid/perplexity UDFs get via broadcast).
+A NULL or undecodable payload yields a NULL struct, not a failed batch.
+All bulk operators are ``mapInPandas`` (iterator-of-batches: one codec
+loop per Arrow batch, no per-row JVM round trip).
 """
 
 from __future__ import annotations
 
-import hashlib
 import io
 import re
 import wave
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,14 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
-
 MEDIA_META_SCHEMA = T.StructType([
-    T.StructField("media_type", T.StringType()),      # image|audio|video
+    T.StructField("media_type", T.StringType()),      # image|audio
     T.StructField("mime", T.StringType()),
     T.StructField("n_bytes", T.LongType()),
     T.StructField("sha1", T.StringType()),
@@ -57,13 +45,6 @@ IMAGE_META_SCHEMA = T.StructType([
     T.StructField("width", T.IntegerType()),
     T.StructField("height", T.IntegerType()),
     T.StructField("channels", T.IntegerType()),
-])
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("frame_index", T.IntegerType()),
-    T.StructField("frame_ts_ms", T.LongType()),
-    T.StructField("frame_sha1", T.StringType()),
 ])
 
 
@@ -91,63 +72,38 @@ def with_media_meta(df: DataFrame, payload_col: str = "payload",
     ))
 
 
-def _stable_u32(data: bytes, salt: bytes) -> int:
-    """First 4 digest bytes (big-endian) of md5(salt + first 64 payload
-    bytes). md5 deliberately (not sha1): DuckDB exposes md5 natively, so
-    the fake-decode dimensions are reproducible in the driver's SQL
-    oracle (dq/queries.py ORACLE_MULTIMODAL) — the surrogate hash choice
-    is what makes the whole decode query oracle-checkable."""
-    return int.from_bytes(hashlib.md5(salt + data[:64]).digest()[:4], "big")
-
-
-def fake_decode_meta(payload: bytes | None) -> tuple[int, int, int] | None:
-    """Deterministic stand-in for image decode: (width, height, channels)
-    as a pure function of the bytes. Replace with a real decoder by
-    passing ``decoder=`` to :func:`decode_images`."""
-    if payload is None:
-        return None
-    w = 64 + _stable_u32(payload, b"w") % 1984          # 64..2047
-    h = 64 + _stable_u32(payload, b"h") % 1984
-    return (w, h, 3)
-
-
-def real_image_decoder(payload: bytes | None):  # pragma: no cover
-    """PIL-backed decode → (width, height, channels); raises until the
-    container ships PIL (import-gated, NOT silently faked)."""
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image decoding requires PIL; this container has no image "
-            "libraries - use fake_decode_meta or install pillow")
-    import io
-    with Image.open(io.BytesIO(payload)) as im:
-        return (im.width, im.height, len(im.getbands()))
-
-
-def decode_images(df: DataFrame, payload_col: str = "payload",
-                  decoder=fake_decode_meta) -> DataFrame:
-    """Append ``img`` struct (width/height/channels) via ``mapInPandas``.
-
-    Iterator-of-batches form: per-partition setup happens once (a real
-    decoder would open its codec context here), then each Arrow batch is
-    processed vectorized. Output schema = input schema + ``img`` struct,
-    so the operator is schema-stable for Catalyst.
-    """
+def _decode_column(df: DataFrame, payload_col: str, out_col: str,
+                   out_type: T.StructType,
+                   decode: Callable[[bytes | None], dict | None]
+                   ) -> DataFrame:
+    """Append ``out_col`` = ``decode(payload)`` per row via
+    ``mapInPandas``. Output schema = input schema + the struct, so the
+    operator is schema-stable for Catalyst; ``decode`` returns a dict
+    of the struct's fields or None (NULL payload / codec error)."""
     out_schema = T.StructType(df.schema.fields
-                              + [T.StructField("img", IMAGE_META_SCHEMA)])
+                              + [T.StructField(out_col, out_type)])
     names = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = decoder                 # per-partition init point
         for pdf in batches:
-            metas = [dec(p) for p in pdf[payload_col]]
             pdf = pdf.copy()
-            pdf["img"] = [
-                None if m is None
-                else {"width": m[0], "height": m[1], "channels": m[2]}
-                for m in metas]
+            pdf[out_col] = [decode(p) for p in pdf[payload_col]]
             yield pdf[names]
 
     return df.mapInPandas(run, out_schema)
+
+
+def _ppm_struct(payload: bytes | None) -> dict | None:
+    m = decode_ppm_meta(payload)
+    return None if m is None else {"width": m[0], "height": m[1],
+                                   "channels": m[2]}
+
+
+def decode_images(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Append an ``img`` struct (width/height/channels) decoded from
+    binary-PPM payloads by :func:`decode_ppm_meta`."""
+    return _decode_column(df, payload_col, "img", IMAGE_META_SCHEMA,
+                          _ppm_struct)
 
 
 _PPM_HEADER_RE = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)[ \t\r\n]")
@@ -354,21 +310,10 @@ PNG_META_SCHEMA = T.StructType([
 
 
 def decode_pngs(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Append a ``png`` struct (width/height/channels/pixel_sum) via the
-    real stdlib PNG decoder — same iterator-of-batches shape as
-    :func:`decode_images`/:func:`decode_audio`."""
-    out_schema = T.StructType(df.schema.fields
-                              + [T.StructField("png", PNG_META_SCHEMA)])
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = decode_png_meta         # per-partition init point
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["png"] = [dec(p) for p in pdf[payload_col]]
-            yield pdf[names]
-
-    return df.mapInPandas(run, out_schema)
+    """Append a ``png`` struct (width/height/channels/pixel_sum) decoded
+    by the stdlib PNG codec :func:`decode_png_meta`."""
+    return _decode_column(df, payload_col, "png", PNG_META_SCHEMA,
+                          decode_png_meta)
 
 
 def synthetic_pngs(spark, n_rows: int, num_partitions: int | None = None
@@ -467,85 +412,6 @@ def resize_images(df: DataFrame, width: int, height: int,
     return df.mapInPandas(run, out_schema)
 
 
-def resize_stub(df: DataFrame, width: int, height: int,
-                payload_col: str = "payload") -> DataFrame:
-    """Resize plumbing: emits a deterministic surrogate payload
-    (sha1 of original + target dims) with the same schema a real resize
-    would produce; the pixel work is the stub."""
-    out_schema = T.StructType(df.schema.fields + [
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("resized_w", T.IntegerType()),
-        T.StructField("resized_h", T.IntegerType()),
-    ])
-    names = [f.name for f in out_schema.fields]
-    tag = f"{width}x{height}".encode()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["resized"] = [
-                None if p is None else hashlib.sha1(tag + p[:64]).digest()
-                for p in pdf[payload_col]]
-            pdf["resized_w"] = np.int32(width)
-            pdf["resized_h"] = np.int32(height)
-            yield pdf[names]
-
-    return df.mapInPandas(run, out_schema)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  duration_ms_col: str | None = None,
-                  id_col: str = "media_id",
-                  payload_col: str = "payload") -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame.
-
-    Duration comes from ``duration_ms_col`` if given, else a
-    deterministic fake derived from the payload bytes. A real
-    implementation swaps the per-frame sha1 surrogate for decoded frame
-    tensors; the fan-out shape (explode to frame grain, frame_ts
-    monotone per media) is what downstream operators contract on.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col].to_numpy()
-            mask = np.array([p is not None for p in payloads])
-            if not mask.any():
-                yield pd.DataFrame(
-                    columns=[f.name for f in FRAME_SCHEMA])
-                continue
-            ids = pdf[id_col].to_numpy()[mask]
-            pl = payloads[mask]
-            if duration_ms_col:
-                raw = pdf[duration_ms_col].to_numpy()[mask]
-                # NULL/NaN → 0 frames (skip), negative → 0 frames: the
-                # row-loop predecessor's range() semantics, which a bare
-                # astype would turn into a crash (negative repeats) or
-                # INT64_MIN garbage (NaN)
-                raw = np.nan_to_num(raw.astype(np.float64), nan=0.0)
-                durs = np.maximum(raw, 0).astype(np.int64)
-            else:
-                durs = np.array([1000 + _stable_u32(p, b"dur") % 29000
-                                 for p in pl], dtype=np.int64)
-            # vectorized fan-out: per-media frame counts → repeated ids +
-            # a single ragged frame-index vector (sha1 per frame remains
-            # the only per-frame Python — it IS the decode surrogate)
-            counts = (durs + every_ms - 1) // every_ms
-            media_idx = np.repeat(np.arange(len(pl)), counts)
-            frame_idx = (np.arange(len(media_idx))
-                         - np.repeat(np.cumsum(counts) - counts, counts))
-            ts = frame_idx * every_ms
-            sha = [hashlib.sha1(pl[m][:64] + int(t).to_bytes(8, "big"))
-                   .hexdigest() for m, t in zip(media_idx, ts)]
-            yield pd.DataFrame({
-                "media_id": ids[media_idx],
-                "frame_index": frame_idx.astype(np.int32),
-                "frame_ts_ms": ts.astype(np.int64),
-                "frame_sha1": sha,
-            })
-
-    return df.mapInPandas(run, FRAME_SCHEMA)
-
-
 AUDIO_META_SCHEMA = T.StructType([
     T.StructField("sample_rate", T.IntegerType()),
     T.StructField("channels", T.IntegerType()),
@@ -606,23 +472,11 @@ def decode_wav_meta(payload: bytes | None) -> dict | None:
             "rms": rms}
 
 
-def decode_audio(df: DataFrame, payload_col: str = "payload",
-                 decoder=decode_wav_meta) -> DataFrame:
-    """Append an ``audio`` struct via ``mapInPandas`` — same
-    iterator-of-batches shape as :func:`decode_images`, but the default
-    decoder is the REAL stdlib WAV codec (no stub)."""
-    out_schema = T.StructType(df.schema.fields
-                              + [T.StructField("audio", AUDIO_META_SCHEMA)])
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = decoder                 # per-partition init point
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["audio"] = [dec(p) for p in pdf[payload_col]]
-            yield pdf[names]
-
-    return df.mapInPandas(run, out_schema)
+def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Append an ``audio`` struct decoded from WAV payloads by the
+    stdlib codec :func:`decode_wav_meta`."""
+    return _decode_column(df, payload_col, "audio", AUDIO_META_SCHEMA,
+                          decode_wav_meta)
 
 
 def synthetic_audio(spark, n_rows: int, num_partitions: int | None = None,
@@ -632,18 +486,3 @@ def synthetic_audio(spark, n_rows: int, num_partitions: int | None = None,
     return _synthetic_payload_table(
         spark, n_rows, num_partitions,
         lambda i: synthesize_wav(i, sample_rate), "audio", "audio/wav")
-
-
-def synthetic_media(spark, n_rows: int, num_partitions: int | None = None
-                    ) -> DataFrame:
-    """Deterministic fake media table (payload = seeded bytes), same
-    pure-function-of-id scheme as dq.synth.webpages."""
-    df = spark.range(0, n_rows, 1,
-                     num_partitions
-                     or spark.sparkContext.defaultParallelism)
-    payload = F.encode(
-        F.concat(F.lit("MEDIA"), F.sha2(F.col("id").cast("string"), 256)),
-        "UTF-8").cast("binary")
-    df = df.select(F.col("id").alias("media_id"),
-                   payload.alias("payload"))
-    return with_media_meta(df)

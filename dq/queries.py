@@ -1224,7 +1224,6 @@ FROM scored QUALIFY rank <= {k}
 
 
 ORACLE_LSH_TOPK = _lsh_oracle_sql(n_planes=16, bands=8)
-ORACLE_INDEX_TOPK = _lsh_oracle_sql(n_planes=32, bands=4)
 
 
 NEAR_DUP_THRESHOLD = 0.4      # sf0.01 margin |cos-th| ≥ 5e-4 (tested)
@@ -1359,38 +1358,20 @@ def _build_index_once(path, builder):
     """Build into a temp dir + atomic rename: a concurrent builder
     either wins the rename or reads the winner's complete index."""
     import os
+    import shutil
 
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
     tmp = f"{path}.build.{os.getpid()}"
-    builder(tmp)
+    try:
+        builder(tmp)
+    except BaseException:         # a failed build leaves no partial dir
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     try:
         os.rename(tmp, path)
     except OSError:               # lost the race — winner's index is whole
-        import shutil
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def q_embedding_index_topk(spark, sf_dir):
-    """ANN over a persisted multi-table LSH index: bucketed-parquet
-    build (once per sf_dir) + partition-pruned query — the IVF-style
-    scale path where query I/O is the collision buckets, not the
-    corpus. Results are identical to scan-time LSH at the same params
-    (asserted in tests), and exactly mirrored by the driver's SQL
-    oracle via plane literals (see q_embedding_lsh_topk — same margin
-    argument)."""
-    import os
-
-    e = _t(spark, sf_dir, "embeddings")
-    path = os.path.join("/tmp", f"dq_lsh_index_{_emb_fingerprint(sf_dir)}")
-    _build_index_once(path, lambda tmp: similarity.build_lsh_index(
-        e, tmp, n_planes=32, bands=4, dim=64))
-    queries = (e.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    out = similarity.lsh_index_topk(spark, path, queries, k=5,
-                                    n_planes=32, bands=4, dim=64)
-    return out.select("query_id", "vec_id",
-                      F.round("cos_sim", 6).alias("cos_sim_r6"), "rank")
 
 
 # IVF parameters shared by the Spark query and the oracle generator —
@@ -1646,60 +1627,6 @@ FROM k GROUP BY source
 """
 
 
-def q_multimodal_decode(spark, sf_dir):
-    """Multimodal plumbing end-to-end: synthetic media table (binary
-    payload + typed meta struct) → mapInPandas decode (deterministic
-    stub) → per-bucket aggregation. Fully oracle-checked: the synthetic
-    payload is ``'MEDIA' || sha256hex(id)`` and the fake decoder derives
-    width/height from md5 of (salt + first 64 payload bytes)
-    (dq/multimodal.py:_stable_u32) — both reproducible in DuckDB, so the
-    exact per-bucket aggregates mirror in SQL (determinism across
-    partitionings is additionally asserted in tests/test_multimodal.py)."""
-    from dq import multimodal as mm
-    media = mm.synthetic_media(spark, 1000)
-    decoded = mm.decode_images(media)
-    return (decoded
-            .withColumn("aspect_bucket",
-                        (F.col("img.width") * 4 / F.col("img.height"))
-                        .cast("int"))
-            .groupBy("aspect_bucket")
-            .agg(F.count(F.lit(1)).alias("n_images"),
-                 F.sum("meta.n_bytes").alias("total_bytes"),
-                 F.min("img.width").alias("min_width"),
-                 F.max("img.height").alias("max_height")))
-
-
-# The fake decoder's u32 is the FIRST FOUR md5 digest bytes big-endian;
-# DuckDB's md5_number_upper is the first EIGHT digest bytes
-# little-endian — the byte-swap of the low 4 bytes converts.
-_MM_SWAP = ("((({u} & 255) << 24) | ((({u} >> 8) & 255) << 16) "
-            "| ((({u} >> 16) & 255) << 8) | (({u} >> 24) & 255))")
-
-ORACLE_MULTIMODAL = f"""
-WITH m AS (
-  SELECT substring('MEDIA' || sha256(CAST(i AS VARCHAR)), 1, 64) AS prefix,
-         5 + 64 AS n_bytes
-  FROM range(0, 1000) t(i)
-), u AS (
-  SELECT md5_number_upper('w' || prefix) AS uw,
-         md5_number_upper('h' || prefix) AS uh,
-         n_bytes
-  FROM m
-), dims AS (
-  SELECT CAST(64 + {_MM_SWAP.format(u='uw')} % 1984 AS INT) AS w,
-         CAST(64 + {_MM_SWAP.format(u='uh')} % 1984 AS INT) AS h,
-         n_bytes
-  FROM u
-)
-SELECT CAST(floor(w * 4.0 / h) AS INT) AS aspect_bucket,
-       count(*) AS n_images,
-       CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-       min(w) AS min_width,
-       max(h) AS max_height
-FROM dims GROUP BY 1
-"""
-
-
 def q_image_decode(spark, sf_dir):
     """REAL image codec round-trip, oracle-checked: synthetic binary-PPM
     payloads (dq/multimodal.py:synthesize_ppm — dims are pure arithmetic
@@ -1711,7 +1638,7 @@ def q_image_decode(spark, sf_dir):
     payload hash-mismatches."""
     from dq import multimodal as mm
     media = mm.synthetic_images(spark, 1000)
-    decoded = mm.decode_images(media, decoder=mm.decode_ppm_meta)
+    decoded = mm.decode_images(media)
     return (decoded
             .groupBy(F.col("img.width").alias("width"))
             .agg(F.count(F.lit(1)).alias("n_images"),
@@ -1912,12 +1839,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "heuristic_rule_summary": q_heuristic_rule_summary,
     "embedding_topk": q_embedding_topk,
     "embedding_lsh_topk": q_embedding_lsh_topk,
-    "embedding_index_topk": q_embedding_index_topk,
     "embedding_ivf_topk": q_embedding_ivf_topk,
     "embedding_near_dup": q_embedding_near_dup,
     "quality_filter_pipeline": q_quality_filter_pipeline,
     "pipeline_rules_only": q_pipeline_rules_only,
-    "multimodal_decode": q_multimodal_decode,
     "image_decode": q_image_decode,
     "png_decode": q_png_decode,
     "image_resize": q_image_resize,
@@ -1969,10 +1894,8 @@ ORACLES: dict[str, str] = {
     "heuristic_rule_summary": ORACLE_HEURISTICS,
     "embedding_topk": ORACLE_EMB_TOPK,
     "embedding_lsh_topk": ORACLE_LSH_TOPK,
-    "embedding_index_topk": ORACLE_INDEX_TOPK,
     "embedding_near_dup": ORACLE_NEAR_DUP,
     "pipeline_rules_only": ORACLE_PIPELINE_RULES,
-    "multimodal_decode": ORACLE_MULTIMODAL,
     "image_decode": ORACLE_IMAGE_DECODE,
     "png_decode": ORACLE_PNG_DECODE,
     "image_resize": ORACLE_IMAGE_RESIZE,

@@ -17,6 +17,9 @@ Two paths, per the training-data-pipeline requirement:
   by design; the brute-force path is the oracle it is validated against
   (tests/test_dedup_similarity.py).
 
+The persisted, partition-pruned ANN index is IVF (dq/ivf.py); LSH here
+is scan-time only.
+
 Why pandas UDFs and not Column higher-order functions: interpreted HOF
 lambdas (``F.aggregate`` folds) never enter whole-stage codegen and
 measured ~400x slower than numpy over Arrow batches for exactly this
@@ -235,33 +238,6 @@ def _cos_pairs(a: pd.Series, b: pd.Series,
     return pd.Series(out)
 
 
-def _banded(df: DataFrame, idc: str, vec_col: str, prefix: str,
-            planes: list[list[float]], bands: int) -> DataFrame:
-    """id/vec/norm + exploded (band, chunk_value) keys.
-
-    Carries the vector THROUGH the bands× explode — only correct where
-    the exploded frame feeds a partitioned WRITE (:func:`build_lsh_index`
-    replicates vectors by design, Indyk-Motwani multi-table layout).
-    Anything that SHUFFLES the exploded frame must use
-    :func:`_banded_keys` + a vector join-back instead: bands× copies of
-    the widest column in an exchange is pure write amplification
-    (~bands × 3 KB/vector at 768-dim — round-4 verdict finding #2)."""
-    n_planes = len(planes)
-    width = n_planes // bands
-    mask = (1 << width) - 1
-    sn = make_sig_norm_udf(planes)
-    return (df.select(F.col(idc).alias(f"{prefix}_id"),
-                      F.col(vec_col).alias(f"{prefix}_v"),
-                      sn(F.col(vec_col)).alias("_sn"))
-            .select(f"{prefix}_id", f"{prefix}_v",
-                    F.col("_sn.norm").alias(f"{prefix}_n"),
-                    F.explode(F.array(*[
-                        F.struct(F.lit(b).alias("band"),
-                                 F.shiftrightunsigned(F.col("_sn.sig"), b * width)
-                                 .bitwiseAND(F.lit(mask)).alias("cv"))
-                        for b in range(bands)])).alias("_bk")))
-
-
 def _banded_keys(df: DataFrame, idc: str, vec_col: str, prefix: str,
                  planes: list[list[float]], bands: int) -> DataFrame:
     """id + exploded (band, chunk_value) keys ONLY — the narrow frame
@@ -438,77 +414,6 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .filter(F.col("rank") <= k)
             .select(F.col("q_id").alias("query_id"),
                     F.col("c_id").alias("vec_id"), "cos_sim", "rank"))
-
-
-def build_lsh_index(df: DataFrame, path: str,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    n_planes: int = 16, bands: int = 4, dim: int = 64,
-                    seed: int = 7) -> None:
-    """Write a multi-table LSH index: each row replicated once per band,
-    parquet partitioned by (band, chunk_value).
-
-    Storage is bands× the corpus — the classic multi-table LSH trade
-    (Indyk-Motwani / Manku). The payoff is on the read side:
-    :func:`lsh_index_topk` prunes to the (band, cv) directories its
-    query set actually collides with, so query cost scales with the
-    collision buckets, not the corpus — the property brute force and
-    scan-time LSH cannot have, and the reason this is the 100-TB path
-    (an un-indexed top-k over 100 TB is a 100-TB scan per query set).
-    """
-    planes = hyperplanes(dim, n_planes, seed)
-    base = _banded(df, id_col, vec_col, "x", planes, bands)
-    (base.select("x_id", "x_v", "x_n",
-                 F.col("_bk.band").alias("band"),
-                 F.col("_bk.cv").alias("cv"))
-     # co-locate each (band, cv) bucket in one task before the
-     # partitioned write: one file per bucket directory instead of one
-     # per (task × bucket) — the classic partitionBy small-files blowup
-     .repartition(F.col("band"), F.col("cv"))
-     .write.mode("overwrite").partitionBy("band", "cv").parquet(path))
-
-
-def lsh_index_topk(spark, path: str, queries: DataFrame, k: int = 5,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "query_id",
-                   n_planes: int = 16, bands: int = 4, dim: int = 64,
-                   seed: int = 7) -> DataFrame:
-    """Approximate top-k over a :func:`build_lsh_index` index.
-
-    Query chunk values are computed driver-side (numpy, tiny) and become
-    a partition-pruning predicate over the index's (band, cv)
-    directories — ``.explain`` shows only the collision buckets being
-    scanned. The pruned candidate set then goes through the same
-    map-side collision scorer as :func:`lsh_topk`, so results are
-    IDENTICAL to scan-time LSH with the same planes/bands (asserted in
-    tests); only the I/O shrinks.
-    """
-    planes = hyperplanes(dim, n_planes, seed)
-    pmat = np.asarray(planes, dtype=np.float64)
-    width = n_planes // bands
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-    idx_full = spark.read.parquet(path)
-    out_schema = _out_schema(
-        queries, query_id_col,
-        idx_full.schema["x_id"].dataType.simpleString())
-    q_pdf = _collect_queries(queries, query_id_col, vec_col,
-                             100_000, "lsh_index_topk")
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qmat = _stack(q_pdf["qv"])
-    qsig = (((qmat @ pmat.T) >= 0).astype(np.uint64)
-            * weights[None, :]).sum(axis=1)
-    qchunks = _chunk_values(qsig, bands, width)
-    cond = None
-    for b in range(bands):
-        vals = sorted({int(v) for v in qchunks[:, b]})
-        c = (F.col("band") == b) & F.col("cv").isin(vals)
-        cond = c if cond is None else cond | c
-    cand = (idx_full.filter(cond)
-            .dropDuplicates(["x_id"])
-            .select(F.col("x_id").alias(id_col),
-                    F.col("x_v").alias(vec_col)))
-    return _lsh_topk_broadcast(cand, q_pdf, k, id_col, vec_col,
-                               planes, bands, out_schema)
 
 
 def near_dup_band_params(n: int, bands: int = 4, target_bucket: int = 16,

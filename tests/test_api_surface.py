@@ -83,3 +83,18 @@ def test_driver_heap_fits_the_machine(spark):
     max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime() \
                     .maxMemory()
     assert max_heap < phys
+
+
+def test_catalog_queries_and_oracles_pair_up():
+    """``__spark_entry__`` pairs every catalog query with an exact
+    oracle. scripts/parity.py downgrades a query without one to a
+    rows-only check, so a query that loses its oracle (or an oracle
+    whose query is gone) must fail here instead of passing there."""
+    import __spark_entry__ as entry
+    from dq.queries import ORACLES, QUERIES
+
+    assert set(ORACLES) <= set(QUERIES), set(ORACLES) - set(QUERIES)
+    oracles = entry.oracle_sql()
+    assert set(QUERIES) - set(oracles) == {"quality_filter_pipeline"}
+    assert set(oracles) - set(ORACLES) == {"embedding_ivf_topk"}
+    assert set(oracles) <= set(QUERIES)

@@ -262,54 +262,6 @@ def test_lsh_topk_recall(spark, emb):
     assert sum(recalls) / len(recalls) >= 0.8   # measured 0.98 at 8 bands
 
 
-def test_lsh_index_topk_matches_scan_lsh_and_prunes(spark, emb, tmp_path):
-    import os
-    path = str(tmp_path / "lshidx")
-    params = dict(n_planes=32, bands=4, dim=64)
-    similarity.build_lsh_index(emb, path, **params)
-    queries = (emb.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    scan = {(r["query_id"], r["vec_id"], r["rank"])
-            for r in similarity.lsh_topk(emb, queries, k=5, **params)
-            .collect()}
-    via_index = {(r["query_id"], r["vec_id"], r["rank"])
-                 for r in similarity.lsh_index_topk(
-                     spark, path, queries, k=5, **params).collect()}
-    # identical results: the index changes I/O, not semantics
-    assert via_index == scan and len(scan) > 0
-
-    # partition pruning actually happened: the pruned scan's numFiles
-    # metric is a small fraction of the index (NOT inputFiles(), which
-    # lists pre-pruning)
-    import numpy as np
-
-    def num_files(df):
-        df.collect()
-        leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numFiles"):
-                total += m.get("numFiles").get().value()
-        return total
-
-    planes = similarity.hyperplanes(64, 32, 7)
-    pmat = np.asarray(planes)
-    qm = similarity._stack(queries.toPandas()["embedding"])
-    w = (np.uint64(1) << np.arange(32, dtype=np.uint64))
-    qsig = (((qm @ pmat.T) >= 0).astype(np.uint64) * w[None, :]).sum(axis=1)
-    qc = similarity._chunk_values(qsig, 4, 8)
-    cond = None
-    for b in range(4):
-        c = (F.col("band") == b) & F.col("cv").isin(
-            sorted({int(v) for v in qc[:, b]}))
-        cond = c if cond is None else cond | c
-    idx = spark.read.parquet(path)
-    pruned = num_files(idx.filter(cond))
-    full = num_files(idx)
-    assert pruned < full / 4, (pruned, full)
-
-
 def test_brute_force_topk_query_collect_guard(spark, emb):
     with pytest.raises(ValueError, match="max_queries"):
         similarity.brute_force_topk(
@@ -348,7 +300,8 @@ def test_lsh_plane_sign_margin_supports_sql_oracle(spark):
     their exactness rests on every |dot(vec, plane)| clearing a margin
     far above cross-engine summation-order error (~1e-15 relative for
     64-dim O(1) dots). Assert the margin on every testdata corpus for
-    both plane sets used by the catalog queries."""
+    the 16-plane set of embedding_lsh_topk and the 32-plane set, whose
+    seeded prefix holds embedding_near_dup's auto-sized planes."""
     import numpy as np
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         pdf = (spark.read.parquet(f"/root/testdata/{sf}/embeddings.parquet")
@@ -468,6 +421,35 @@ def test_ivf_zero_norm_vectors_never_rank(spark, tmp_path):
     assert all(r["vec_id"] != 99 for r in got), got
     assert all(r["query_id"] != 99 for r in got), got
     assert any(r["query_id"] == 0 for r in got)
+
+
+def test_build_index_once_leaves_no_temp_dir_on_failure(tmp_path):
+    """A builder that writes part of an index and then raises must not
+    leave its ``.build.<pid>`` temp dir behind (retries would pile them
+    up), and a later successful build still lands at the path."""
+    import os
+
+    from dq.queries import _build_index_once
+
+    path = str(tmp_path / "idx")
+
+    def failing(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part-00000.parquet"), "wb") as f:
+            f.write(b"partial")
+        raise RuntimeError("build failed")
+
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="build failed"):
+            _build_index_once(path, failing)
+    assert os.listdir(tmp_path) == []
+
+    def ok(tmp):
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    _build_index_once(path, ok)
+    assert os.listdir(tmp_path) == ["idx"]
 
 
 def test_embedding_near_dup_pairs_planted(spark):

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: schema stability, determinism across
-partitionings, and the decode/resize/frame-sample operator contracts."""
+partitionings, and the decode/resize operator contracts."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,7 @@ from dq import multimodal as mm
 
 @pytest.fixture(scope="module")
 def media(spark):
-    return mm.synthetic_media(spark, 200, num_partitions=4).cache()
+    return mm.synthetic_images(spark, 200, num_partitions=4).cache()
 
 
 def test_media_meta_columns(media):
@@ -20,49 +20,29 @@ def test_media_meta_columns(media):
 
 
 def test_decode_images_deterministic_across_partitions(spark):
-    a = mm.decode_images(mm.synthetic_media(spark, 100, num_partitions=2))
-    b = mm.decode_images(mm.synthetic_media(spark, 100, num_partitions=16))
+    a = mm.decode_images(mm.synthetic_images(spark, 100, num_partitions=2))
+    b = mm.decode_images(mm.synthetic_images(spark, 100, num_partitions=16))
     ra = {r["media_id"]: r["img"] for r in a.collect()}
     rb = {r["media_id"]: r["img"] for r in b.collect()}
-    assert ra == rb
-    assert all(64 <= v["width"] <= 2047 for v in ra.values())
+    assert ra == rb and len(ra) == 100
+    assert all(16 <= v["width"] <= 39 for v in ra.values())
     assert all(v["channels"] == 3 for v in ra.values())
 
 
-def test_decode_images_null_payload(spark):
-    df = spark.createDataFrame([(1, None)], "media_id long, payload binary")
-    out = mm.decode_images(df).collect()
-    assert out[0]["img"] is None
-
-
-def test_real_decoder_is_gated(spark):
-    if mm._HAS_PIL:
-        pytest.skip("PIL present; gate not applicable")
-    with pytest.raises(NotImplementedError):
-        mm.real_image_decoder(b"notanimage")
-
-
-def test_resize_stub_schema_and_determinism(media):
-    out = mm.resize_stub(media, 224, 224)
-    rows = out.limit(5).collect()
-    assert {r["resized_w"] for r in rows} == {224}
-    assert all(len(r["resized"]) == 20 for r in rows)
-    again = {r["media_id"]: r["resized"]
-             for r in mm.resize_stub(media, 224, 224).collect()}
-    first = {r["media_id"]: r["resized"] for r in out.collect()}
-    assert first == again
-
-
-def test_sample_frames_grain(media):
-    frames = mm.sample_frames(media.limit(10), every_ms=500)
-    pdf = frames.toPandas()
-    assert set(pdf.columns) == {"media_id", "frame_index", "frame_ts_ms",
-                                "frame_sha1"}
-    for _, grp in pdf.groupby("media_id"):
-        ts = grp.sort_values("frame_index")["frame_ts_ms"].tolist()
-        assert ts == sorted(ts)
-        assert ts[0] == 0
-        assert all(b - a == 500 for a, b in zip(ts, ts[1:]))
+@pytest.mark.parametrize("decode, col, synth", [
+    (mm.decode_images, "img", mm.synthesize_ppm),
+    (mm.decode_pngs, "png", mm.synthesize_png),
+    (mm.decode_audio, "audio", mm.synthesize_wav),
+], ids=["decode_images", "decode_pngs", "decode_audio"])
+def test_decode_images_null_payload(spark, decode, col, synth):
+    """Every decode operator maps a NULL or undecodable payload to a
+    NULL struct and leaves the valid rows of the same batch decoded."""
+    df = spark.createDataFrame(
+        [(1, None), (2, b"garbage"), (3, synth(3))],
+        "media_id long, payload binary")
+    out = {r["media_id"]: r[col] for r in decode(df).collect()}
+    assert out[1] is None and out[2] is None
+    assert out[3] is not None and out[3]["channels"] in (1, 3)
 
 
 # ------------------------------------------------------- real WAV codec
@@ -116,13 +96,12 @@ def test_decode_wav_meta_handles_nulls_and_garbage(spark):
 
 def test_ppm_decode_end_to_end(spark):
     """REAL image codec path: synthesize_ppm writes genuine binary P6
-    bytes executor-side; decode_images with decode_ppm_meta parses the
+    bytes executor-side; decode_images (decode_ppm_meta) parses the
     header and validates the raster. Dims must match the id arithmetic
     the synthesizer embeds (the same invariant the DuckDB oracle of the
     image_decode driver query recomputes)."""
     rows = {r["media_id"]: r["img"]
-            for r in mm.decode_images(mm.synthetic_images(spark, 60, 4),
-                                      decoder=mm.decode_ppm_meta)
+            for r in mm.decode_images(mm.synthetic_images(spark, 60, 4))
             .collect()}
     assert len(rows) == 60
     for mid, img in rows.items():
