@@ -9,21 +9,13 @@ C4 contamination studies): an eval example whose n-grams appear in
 training data inflates benchmark scores, so contaminated documents are
 flagged (and typically dropped) before training.
 
-Scale shape (the 100-TB rationale):
-- The benchmark side is SMALL (10^4-10^6 eval examples) next to a
-  10^12-doc corpus: its distinct n-gram set is built once and
-  broadcast, so the corpus side never shuffles for the probe join —
-  the only corpus-wide movement is the map-side-combined per-doc hit
-  count. ``broadcast_bench=False`` switches to a shuffle semi-join for
-  benchmark sets too big to broadcast (same two-plan choice as the
-  embedding LSH scorer).
-- ``hash_grams=True`` exchanges/broadcasts ``xxhash64(gram)`` longs
-  instead of gram strings (~3x narrower, long-vs-long join compares) —
-  the same lever as ``jaccard_pairs(hash_postings=True)``, with the
-  same collision bound (U^2/2^65 over distinct grams) and the same
-  gating discipline: results must match the string-gram oracle.
-- Shingling rides the Arrow fast path (``dq.dedup.make_shingles_udf``),
-  bit-parity-tested against the Column tokenizer.
+Scale shape (the 100-TB rationale): the benchmark side is SMALL
+(10^4-10^6 eval examples) next to a 10^12-doc corpus, so its distinct
+n-gram set is built once and broadcast. The corpus side never shuffles
+for the probe join; the only corpus-wide movement is the
+map-side-combined per-doc hit count. Shingling rides the Arrow fast
+path (``dq.dedup.make_shingles_udf``), bit-parity-tested against the
+Column tokenizer.
 
 Reference scope note: the reference repo has no contamination check —
 this is part of the training-data operator family the north rule adds
@@ -32,124 +24,25 @@ on top of its schema-validation surface.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dq.dedup import make_shingles_udf
 
-def _bloom_params(n_items: int, fpp: float) -> tuple[int, int]:
-    """(m_bits, k) for a target false-positive rate: the standard
-    m = -n·ln p / ln²2, k = (m/n)·ln 2 sizing, with m rounded UP to a
-    power of two (cheap mask indexing) — rounding up only lowers the
-    realized FPP. A false positive here only sends one extra gram row
-    into the exact semi-join (never a wrong result)."""
-    n_items = max(n_items, 1)
-    m = -n_items * math.log(max(min(fpp, 0.5), 1e-9)) / (math.log(2) ** 2)
-    m_bits = 1 << max(10, math.ceil(math.log2(m)))
-    k = max(1, round(m_bits / n_items * math.log(2)))
-    return m_bits, min(k, 16)
-
-
-def _bloom_positions(h: np.ndarray, i: int, m_mask: np.uint64) -> np.ndarray:
-    """i-th probe position for a batch of 64-bit keys: murmur3's fmix64
-    finalizer over (key + i·φ64). Full avalanche matters here because
-    the position is taken from the LOW bits — naive Kirsch-Mitzenmacher
-    (pos_i = h1 + i·h2 with h2 = (h·c)|1) makes every masked probe a
-    function of the key's low log2(m) bits only, so keys colliding in
-    those bits share their entire probe sequence (measured ~6% fpp at a
-    nominal 1%)."""
-    # i·φ64 computed in Python ints (numpy warns on scalar overflow
-    # even though it wraps correctly)
-    x = h + np.uint64((i * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-    x = (x ^ (x >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
-    x = (x ^ (x >> np.uint64(33))) * np.uint64(0xC4CEB9FE1A85EC53)
-    return (x ^ (x >> np.uint64(33))) & m_mask
-
-
-def build_gram_bloom(grams: DataFrame, n_items: int,
-                     fpp: float = 0.01) -> tuple[np.ndarray, int, int]:
-    """Distributed Bloom-filter build over a one-column gram frame:
-    each partition sets its members' bits in a local numpy bitmap
-    (vectorized ``bitwise_or.at``), the per-partition bitmaps OR-reduce
-    on the driver (n_partitions × m/8 bytes — the bitmap is the ONLY
-    thing collected, never the grams). Keys are ``xxhash64(gram)``, so
-    string and hashed gram columns share one code path.
-
-    Spark exposes no public ``bloom_filter_agg`` SQL function
-    (verified unresolved on 4.1), so this is the library-level
-    equivalent of the engine's runtime-filter bloom."""
-    m_bits, k = _bloom_params(n_items, fpp)
-    m_mask = np.uint64(m_bits - 1)
-    hashed = grams.select(F.xxhash64(grams.columns[0]).alias("_bh"))
-
-    def bitmapper(batches):
-        bits = np.zeros(m_bits // 64, dtype=np.uint64)
-        for pdf in batches:
-            h = pdf["_bh"].to_numpy().astype(np.uint64)
-            for i in range(k):
-                pos = _bloom_positions(h, i, m_mask)
-                np.bitwise_or.at(bits, pos >> np.uint64(6),
-                                 np.uint64(1) << (pos & np.uint64(63)))
-        yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-    parts = hashed.mapInPandas(bitmapper, "bits binary").collect()
-    bits = np.zeros(m_bits // 64, dtype=np.uint64)
-    for row in parts:
-        bits |= np.frombuffer(row["bits"], dtype=np.uint64)
-    return bits, m_bits, k
-
-
-def make_might_contain_udf(spark, bits: np.ndarray, m_bits: int, k: int):
-    """boolean pandas UDF probing the broadcast bitmap — vectorized k
-    double-hash probes per Arrow batch. No false negatives by
-    construction (every inserted key's bits are set), so filtering the
-    corpus gram stream with it before the exact semi-join cannot drop a
-    real hit."""
-    bc = spark.sparkContext.broadcast(bits)
-    m_mask = np.uint64(m_bits - 1)
-
-    @F.pandas_udf("boolean")
-    def might_contain(h: pd.Series) -> pd.Series:
-        b = bc.value
-        hv = h.to_numpy().astype(np.uint64)
-        out = np.ones(hv.size, dtype=bool)
-        for i in range(k):
-            pos = _bloom_positions(hv, i, m_mask)
-            out &= ((b[pos >> np.uint64(6)]
-                     >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool)
-        return pd.Series(out)
-
-    return might_contain
-
 
 def benchmark_ngrams(benchmark: DataFrame, text_col: str = "text",
-                     n: int = 8, hash_grams: bool = False) -> DataFrame:
+                     n: int = 8) -> DataFrame:
     """Distinct n-gram shingle set of the benchmark side (one column,
-    ``gram``). Built once; the caller decides broadcast vs shuffle."""
-    g = (benchmark
-         .select(F.explode(make_shingles_udf(n)(F.col(text_col)))
-                 .alias("gram"))
-         .distinct())
-    if hash_grams:
-        # re-distinct AFTER hashing: a collision between two distinct
-        # grams must degrade to the documented membership error
-        # (U^2/2^65), not to duplicate probe rows that multiply every
-        # matching document's hit count. The set is tiny; free.
-        g = g.select(F.xxhash64("gram").alias("gram")).distinct()
-    return g
+    ``gram``). Built once and broadcast by :func:`flag_contaminated`."""
+    return (benchmark
+            .select(F.explode(make_shingles_udf(n)(F.col(text_col)))
+                    .alias("gram"))
+            .distinct())
 
 
 def flag_contaminated(corpus: DataFrame, benchmark: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 8, min_hits: int = 1,
-                      hash_grams: bool = False,
-                      broadcast_bench: bool = True,
-                      bloom_prefilter: bool = False,
-                      bloom_fpp: float = 0.01) -> DataFrame:
+                      n: int = 8, min_hits: int = 1) -> DataFrame:
     """Per-corpus-doc contamination flags.
 
     Returns (id_col, hits, contaminated): ``hits`` = number of the
@@ -165,29 +58,10 @@ def flag_contaminated(corpus: DataFrame, benchmark: DataFrame,
     cost a corpus-wide exchange the broadcast design exists to avoid,
     so the contract is on the caller (web corpora key by url).
     """
-    bench = benchmark_ngrams(benchmark, text_col, n, hash_grams)
-    if broadcast_bench:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(benchmark_ngrams(benchmark, text_col, n))
     grams = corpus.select(
         F.col(id_col),
         F.explode(make_shingles_udf(n)(F.col(text_col))).alias("gram"))
-    if hash_grams:
-        grams = grams.select(id_col, F.xxhash64("gram").alias("gram"))
-    if bloom_prefilter and not broadcast_bench:
-        # shuffle-path lever: a Bloom filter OF the benchmark grams
-        # still broadcasts when the exact gram set cannot (bits ≪
-        # strings: a 10⁹-gram eval suite at fpp=0.01 is ~1.2 GB of
-        # bitmap vs tens of GB of grams — and fpp=0.1 is ~600 MB).
-        # Corpus grams failing the probe never enter the exchange; the
-        # exact semi-join still runs on the survivors, so a false
-        # positive costs one shuffled row, never a wrong flag. At a
-        # real contamination rate ε the corpus-side exchange shrinks
-        # from |corpus grams| to ~(ε + fpp)·|corpus grams|.
-        bench = bench.persist()        # counted once, joined once
-        bits, m_bits, k = build_gram_bloom(
-            bench, bench.count(), bloom_fpp)
-        probe = make_might_contain_udf(corpus.sparkSession, bits, m_bits, k)
-        grams = grams.filter(probe(F.xxhash64("gram")))
     hits = (grams.join(bench, "gram")
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).alias("hits")))

@@ -42,7 +42,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -152,9 +152,7 @@ def make_shingles_udf(n: int = 3):
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   min_num: int = 1, min_den: int = 2,
-                  num_partitions: int | None = None,
-                  max_shingle_df: int | None = None,
-                  hash_postings: bool = False) -> DataFrame:
+                  num_partitions: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard similar pairs with sim ≥ min_num/min_den.
 
     Plan: explode distinct shingles → inverted index → self-equi-join on
@@ -165,24 +163,8 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
     Scale: the join fans out quadratically in per-shingle document
     frequency — one stop-phrase shingle shared by d docs contributes
-    d(d-1)/2 join rows. ``max_shingle_df`` caps that: shingles whose df
-    exceeds the cap are dropped from the inverted index (the standard
-    web-dedup mitigation; a shingle in >cap documents carries ~no
-    similarity signal). The cap makes intersection counts conservative
-    (union sizes still use full shingle sets), so reported similarity is
-    a lower bound; leave it None for the exact/oracle semantics, set it
-    for web-scale corpora — or use :func:`minhash_lsh_pairs`.
-
-    ``hash_postings=True`` replaces each posting's shingle string with
-    JVM-side ``xxhash64(shingle)`` before the exchange: the shuffled key
-    shrinks from ~25 B of string to 8 B and the self-join compares
-    longs, cutting exchange volume ~3x at corpus scale. Intersection
-    counts are then exact only up to 64-bit collisions among the
-    corpus's DISTINCT shingles (birthday bound: P(any collision) ≈
-    U²/2⁶⁵ ≈ 3e-5 at U = 10⁹ distinct shingles, and a collision merely
-    perturbs one intersection count by 1) — keep the default for the
-    bit-exact/oracle semantics, turn it on for 100-TB runs where the
-    postings exchange dominates.
+    d(d-1)/2 join rows. For web-scale corpora use
+    :func:`minhash_lsh_pairs`, whose shuffle is O(docs × bands).
     """
     base = df.select(F.col(id_col).alias("_id"),
                      F.col(text_col).alias("_text"))
@@ -199,17 +181,6 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     # buys us zero back-joins (and zero shingle recomputes) for sizes
     inv = base.select("_id", F.size("_sh").alias("_size"),
                       F.explode("_sh").alias("_s"))
-    if hash_postings:
-        # codegen'd long key before the exchange; see docstring
-        inv = inv.withColumn("_s", F.xxhash64("_s"))
-    if max_shingle_df is not None:
-        # the hot set is tiny by construction (only df>cap shingles) →
-        # broadcast anti-join, no extra data-side shuffle
-        hot = (inv.groupBy("_s")
-               .agg(F.count(F.lit(1)).alias("_df"))
-               .filter(F.col("_df") > max_shingle_df)
-               .select("_s"))
-        inv = inv.join(F.broadcast(hot), "_s", "left_anti")
     a, b = inv.alias("a"), inv.alias("b")
     inter = (a.join(b, (F.col("a._s") == F.col("b._s"))
                     & (F.col("a._id") < F.col("b._id")))
@@ -414,8 +385,7 @@ def with_simhash(df: DataFrame, text_col: str = "text",
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
                   max_hamming: int = 3,
-                  num_partitions: int | None = None,
-                  max_bucket_size: int | None = None) -> DataFrame:
+                  num_partitions: int | None = None) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
 
     Pigeonhole banding: split the 64-bit fingerprint into
@@ -426,12 +396,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 
     Scale: with k=3 the chunks are 16-bit → only 65,536 buckets per
     chunk table, so within-bucket candidate pairs grow ~n²/65k at
-    web-corpus n. ``max_bucket_size`` bounds it: (chunk, value) buckets
-    larger than the cap are dropped before the self-join (per Manku's
-    practical tables — an over-full bucket means a degenerate
-    fingerprint region, e.g. boilerplate, that exact dedup already
-    catches upstream). Dropped buckets lose candidates (recall, not
-    precision); leave None for exact/oracle semantics.
+    web-corpus n; every candidate is kept (exact recall).
     """
     chunks = max_hamming + 1
     width = 64 // chunks
@@ -447,12 +412,6 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                  .bitwiseAND(F.lit((1 << width) - 1)).alias("cv"))
         for c in range(chunks)
     ])).alias("_ck"))
-    if max_bucket_size is not None:
-        hot = (keyed.groupBy("_ck")
-               .agg(F.count(F.lit(1)).alias("_n"))
-               .filter(F.col("_n") > max_bucket_size)
-               .select("_ck"))
-        keyed = keyed.join(F.broadcast(hot), "_ck", "left_anti")
     a, b = keyed.alias("a"), keyed.alias("b")
     ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
     return (a.join(b, (F.col("a._ck") == F.col("b._ck"))
@@ -497,9 +456,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     logical plan exponentially and re-execute every prior sweep.
     (``localCheckpoint`` stores blocks on executors; on a preemptible
     cluster use ``sparkContext.setCheckpointDir`` + ``checkpoint()``
-    for a reliable store.) Convergence is detected with a count on the
-    already-checkpointed frame, so each sweep costs exactly one join
-    job. Checkpoint blocks of superseded sweeps are reclaimed by the
+    for a reliable store.) The change count is an ``Observation``
+    collected by the checkpoint job, so each sweep costs exactly one
+    join job. Checkpoint blocks of superseded sweeps are reclaimed by the
     ContextCleaner once the driver drops its reference (each loop
     iteration rebinds ``labels``, releasing the previous sweep's
     DataFrame → its JVM-side RDD becomes unreachable → weak-reference
@@ -542,6 +501,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         nbr = (e.join(labels.select(F.col("v").alias("dst"),
                                     F.col("comp").alias("_nc")), "dst")
                .groupBy("src").agg(F.min("_nc").alias("_nmin")))
+        obs = Observation()
         nxt = (labels.join(nbr.select(F.col("src").alias("v"), "_nmin"),
                            "v", "left")
                .select("v",
@@ -549,8 +509,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                        .alias("comp"),
                        (F.coalesce("_nmin", "comp") < F.col("comp"))
                        .cast("long").alias("_chg"))
+               .observe(obs, F.sum("_chg").alias("changed"))
                .localCheckpoint(eager=True))
-        changed = nxt.agg(F.sum("_chg")).first()[0] or 0
+        changed = obs.get["changed"] or 0
         # rebinding `labels` drops the last reference to sweep k-1's
         # frame — ContextCleaner reclaims its checkpoint blocks (see
         # docstring; an explicit unpersist() would be a no-op here)

@@ -27,7 +27,7 @@ Scale shape (the 100-TB story):
 - **Queries prune I/O to ~nprobe/k of the corpus** via partition
   pruning on ``list_id`` directories, then score map-side against the
   broadcast query matrix — the same zero-corpus-shuffle scorer shape
-  as ``similarity._lsh_topk_broadcast``.
+  as ``similarity.lsh_topk``.
 
 Determinism contract: ``lloyd`` is a pure function of (matrix, k,
 n_iter, seed) using unbuffered ``np.add.at`` accumulation in row

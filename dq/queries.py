@@ -841,21 +841,6 @@ WHERE intersection * 3 >= (sa.sz + sb.sz - intersection) * 1
 """
 
 
-def q_ngram_jaccard_hashed(spark, sf_dir):
-    """The 100-TB Jaccard variant: identical semantics but the inverted
-    index exchanges ``xxhash64(shingle)`` longs instead of shingle
-    strings (~3x less shuffle volume; see dq/dedup.py hash_postings).
-    Gated against the SAME string-shingle oracle as ngram_jaccard_pairs:
-    results are bit-identical unless two distinct corpus shingles
-    collide in 64 bits (P ≈ U²/2⁶⁵ — never on any real fixture), which
-    is exactly the claim worth gating."""
-    d = _t(spark, sf_dir, "documents")
-    return dedup.jaccard_pairs(d, "doc_id", "text", n=3,
-                               min_num=1, min_den=3,
-                               num_partitions=spark.sparkContext.defaultParallelism,
-                               hash_postings=True)
-
-
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: the exact Jaccard pair graph (sim ≥ 1/3,
     same params as ngram_jaccard_pairs) closed under transitivity via
@@ -1831,7 +1816,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "vocab_topk": q_vocab_topk,
     "pii_scan": q_pii_scan,
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "ngram_jaccard_hashed": q_ngram_jaccard_hashed,
     "dedup_clusters": q_dedup_clusters,
     "near_dedup_keep": q_near_dedup_keep,
     "minhash_lsh_pairs": q_minhash_lsh_pairs,
@@ -1886,7 +1870,6 @@ ORACLES: dict[str, str] = {
     "vocab_topk": ORACLE_VOCAB,
     "pii_scan": ORACLE_PII,
     "ngram_jaccard_pairs": ORACLE_JACCARD,
-    "ngram_jaccard_hashed": ORACLE_JACCARD,
     "dedup_clusters": ORACLE_CLUSTERS,
     "near_dedup_keep": ORACLE_NEAR_DEDUP_KEEP,
     "minhash_lsh_pairs": ORACLE_MINHASH,

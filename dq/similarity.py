@@ -9,12 +9,12 @@ Two paths, per the training-data-pipeline requirement:
   top-k rows per query. The final window therefore ranks
   O(n_batches × |queries| × k) rows, not |corpus| × |queries| — the
   partial-top-k shape that survives a 100× corpus.
-- **Hyperplane-LSH bucketed top-k** — the scale path for large query
-  sets: sign-bit signatures against ``n_planes`` seeded Gaussian
-  hyperplanes, computed for a whole Arrow batch with a single
-  ``M @ planes.T`` matmul inside a pandas UDF; corpus and queries join
-  on band keys so each query only scores its collision set. Recall < 1
-  by design; the brute-force path is the oracle it is validated against
+- **Hyperplane-LSH bucketed top-k** — sign-bit signatures against
+  ``n_planes`` seeded Gaussian hyperplanes, computed for a whole Arrow
+  batch with a single ``M @ planes.T`` matmul; the same bounded query
+  set is broadcast with its band chunks, so each query only scores the
+  corpus rows it collides with. Recall < 1 by design; the brute-force
+  path is the oracle it is validated against
   (tests/test_dedup_similarity.py).
 
 The persisted, partition-pruned ANN index is IVF (dq/ivf.py); LSH here
@@ -110,8 +110,7 @@ def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
         raise ValueError(
             f"{caller}: query set exceeds max_queries={max_queries}; "
             "collecting it would risk driver OOM — raise max_queries "
-            "explicitly or use the banded-join path (lsh_topk with a "
-            "larger-than-threshold query set)")
+            "explicitly or score the query set in chunks")
     if len(q_pdf):
         norms = np.linalg.norm(_stack(q_pdf["qv"]), axis=1)
         q_pdf = q_pdf[np.isfinite(norms) & (norms > 0)].reset_index(drop=True)
@@ -133,8 +132,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Output: (query_id, vec_id, cos_sim, rank). Self-matches (same id)
     are excluded; ties broken by ascending corpus id — fully
     deterministic. The query set is collected/broadcast, capped at
-    ``max_queries`` with an explicit error beyond it (use
-    :func:`lsh_topk` for query sets that cannot broadcast). Degenerate
+    ``max_queries`` with an explicit error beyond it. Degenerate
     vectors (zero/non-finite norm) are excluded on both sides — as
     queries they produce no rows; as corpus rows they are never
     candidates (0/0 → NaN would otherwise outrank everything in the
@@ -275,24 +273,36 @@ def _chunk_values(sigs: np.ndarray, bands: int, width: int) -> np.ndarray:
     return (sigs[:, None] >> shifts[None, :]) & mask
 
 
-def _lsh_topk_broadcast(corpus: DataFrame, q_pdf: pd.DataFrame, k: int,
-                        id_col: str, vec_col: str,
-                        planes: list[list[float]], bands: int,
-                        out_schema: str) -> DataFrame:
-    """Map-side LSH top-k for a broadcastable query set.
+def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
+             id_col: str = "vec_id", vec_col: str = "embedding",
+             query_id_col: str = "query_id",
+             n_planes: int = 16, bands: int = 4, dim: int = 64,
+             seed: int = 7, max_queries: int = 100_000) -> DataFrame:
+    """Approximate top-k: score only candidates sharing ≥1 signature band.
 
-    One ``mapInPandas`` pass over the corpus: batch signatures via one
-    matmul, collision mask against the broadcast query chunk values
-    (same any-shared-band candidate semantics as the join path), then
-    ONLY the rows that collide with ≥1 query are scored (one matmul
-    over the colliding subset — per-cell masking beyond that would be
-    slower than the dense block for small query sets). The corpus never
-    shuffles. This is the right plan when |queries| is small; the join
-    path is for query sets too big to broadcast.
+    ``n_planes`` sign bits split into ``bands`` chunks; a (corpus,
+    query) pair is a candidate iff they agree on ≥1 chunk. The query
+    set is collected and broadcast with its chunk table, capped at
+    ``max_queries`` like :func:`brute_force_topk`. One ``mapInPandas``
+    corpus pass computes batch signatures via one matmul, masks
+    collisions against the query chunks, and scores ONLY the rows that
+    collide with ≥1 query (one matmul over the colliding subset —
+    per-cell masking beyond that would be slower than the dense block).
+    Batch-local top-k feeds the final window; the corpus never
+    shuffles.
+
+    Missing neighbors (no shared band) are the recall loss; increase
+    bands or lower n_planes/bands to trade work for recall.
     """
+    planes = hyperplanes(dim, n_planes, seed)
+    q_pdf = _collect_queries(queries, query_id_col, vec_col,
+                             max_queries, "lsh_topk")
+    out_schema = _out_schema(queries, query_id_col,
+                             corpus.schema[id_col].dataType.simpleString())
     spark = corpus.sparkSession
+    if len(q_pdf) == 0:
+        return spark.createDataFrame([], out_schema + ", rank int")
     pmat = np.asarray(planes, dtype=np.float64)
-    n_planes = pmat.shape[0]
     width = n_planes // bands
     weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
 
@@ -346,74 +356,6 @@ def _lsh_topk_broadcast(corpus: DataFrame, q_pdf: pd.DataFrame, k: int,
     return (partial.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "vec_id", "cos_sim", "rank"))
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id",
-             n_planes: int = 16, bands: int = 4, dim: int = 64,
-             seed: int = 7, broadcast_threshold: int = 10_000) -> DataFrame:
-    """Approximate top-k: score only candidates sharing ≥1 signature band.
-
-    ``n_planes`` sign bits split into ``bands`` chunks; a (corpus,
-    query) pair is a candidate iff they agree on ≥1 chunk. Two physical
-    plans with identical semantics, chosen like Spark picks broadcast
-    vs shuffle joins:
-
-    - |queries| ≤ ``broadcast_threshold``: map-side — broadcast the
-      query chunk table, one ``mapInPandas`` corpus pass, batch-local
-      top-k (no corpus shuffle at all).
-    - larger query sets: banded equi-join on (band_id, chunk_value) —
-      shuffle is O(rows × bands), fan-in is the bucket collision set.
-
-    Missing neighbors (no shared band) are the recall loss; increase
-    bands or lower n_planes/bands to trade work for recall. Signatures
-    and scoring are numpy-vectorized over Arrow batches throughout.
-    """
-    planes = hyperplanes(dim, n_planes, seed)
-    out_schema = _out_schema(queries, query_id_col,
-                             corpus.schema[id_col].dataType.simpleString())
-    q_pdf = (queries.select(F.col(query_id_col).alias("qid"),
-                            F.col(vec_col).alias("qv"))
-             .limit(broadcast_threshold + 1).toPandas())
-    if len(q_pdf) <= broadcast_threshold:
-        if len(q_pdf):
-            norms = np.linalg.norm(_stack(q_pdf["qv"]), axis=1)
-            q_pdf = q_pdf[np.isfinite(norms) & (norms > 0)] \
-                .reset_index(drop=True)
-        if len(q_pdf) == 0:
-            return corpus.sparkSession.createDataFrame(
-                [], out_schema + ", rank int")
-        return _lsh_topk_broadcast(corpus, q_pdf, k, id_col, vec_col,
-                                   planes, bands, out_schema)
-    # banded equi-join over KEYS ONLY (id + band key per row); the
-    # embedding column joins back by id after the pair dedup, so it
-    # never rides the bands× exploded exchange
-    ck = _banded_keys(corpus, id_col, vec_col, "c", planes, bands)
-    qk = _banded_keys(queries, query_id_col, vec_col, "q", planes, bands)
-    pairs = (ck.join(qk, ck["_bk"] == qk["_bk"])
-             .filter(F.col("c_id") != F.col("q_id"))
-             .select("q_id", "c_id")
-             .dropDuplicates(["q_id", "c_id"]))
-    cvec = corpus.select(F.col(id_col).alias("_cid"),
-                         F.col(vec_col).alias("c_v"),
-                         _norm_udf(F.col(vec_col)).alias("c_n"))
-    qvec = queries.select(F.col(query_id_col).alias("_qid"),
-                          F.col(vec_col).alias("q_v"),
-                          _norm_udf(F.col(vec_col)).alias("q_n"))
-    cand = (pairs
-            .join(cvec, F.col("c_id") == F.col("_cid"))
-            .join(qvec, F.col("q_id") == F.col("_qid"))
-            .withColumn("cos_sim", _cos_pairs(F.col("c_v"), F.col("q_v"),
-                                              F.col("c_n"), F.col("q_n")))
-            # degenerate pairs score -inf in _cos_pairs; drop them so the
-            # join path matches the broadcast path (which never emits them)
-            .filter(F.col("cos_sim") > F.lit(float("-inf"))))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "c_id")
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q_id").alias("query_id"),
-                    F.col("c_id").alias("vec_id"), "cos_sim", "rank"))
 
 
 def near_dup_band_params(n: int, bands: int = 4, target_bucket: int = 16,

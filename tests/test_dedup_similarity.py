@@ -153,27 +153,14 @@ def test_minhash_identical_texts_always_pair(spark):
     assert not any(10 in p for p in pairs)
 
 
-def test_jaccard_hot_shingle_df_cap(spark):
-    # 40 docs sharing ONE stop-phrase shingle, otherwise disjoint:
-    # without a cap the hot shingle alone fans out 40*39/2 join rows
+def test_jaccard_hot_shingle_pairs_every_sharer(spark):
+    # 40 docs sharing ONE stop-phrase shingle, otherwise disjoint: the
+    # exact join keeps the hot shingle, so it fans out 40*39/2 pairs
     rows = [(i, f"terms of service apply u{i}a u{i}b u{i}c u{i}d")
             for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.jaccard_pairs(df, n=3, min_num=0, min_den=1).collect()
-    assert len(uncapped) == 40 * 39 // 2     # every pair is a candidate
-    capped = dedup.jaccard_pairs(df, n=3, min_num=0, min_den=1,
-                                 max_shingle_df=10).collect()
-    # the only shared shingles exceed the df cap → zero candidate pairs
-    assert capped == []
-    # a genuinely-similar pair below the cap still comes through intact
-    rows2 = rows + [(100, "alpha beta gamma delta epsilon"),
-                    (101, "alpha beta gamma delta zeta")]
-    df2 = spark.createDataFrame(rows2, "doc_id long, text string")
-    capped2 = {(r["id_a"], r["id_b"]): r["intersection"]
-               for r in dedup.jaccard_pairs(
-                   df2, n=3, min_num=0, min_den=1,
-                   max_shingle_df=10).collect()}
-    assert capped2 == {(100, 101): 2}        # shared shingles survive
+    pairs = dedup.jaccard_pairs(df, n=3, min_num=0, min_den=1).collect()
+    assert len(pairs) == 40 * 39 // 2        # every pair is a candidate
 
 
 # ---------------------------------------------------------------- simhash
@@ -199,21 +186,16 @@ def test_simhash_identical_and_near(spark):
     assert not any(4 in p for p in pairs)
 
 
-def test_simhash_hot_bucket_cap(spark):
-    # 30 identical docs → one over-full bucket per chunk; pairs explode
-    # quadratically without the cap and vanish with it, while a distinct
-    # small near-dup group is untouched
+def test_simhash_hot_bucket_pairs_once(spark):
+    # 30 identical docs collide on every chunk; each pair must come out
+    # once (the cross-chunk dropDuplicates), plus the small other group
     base = "quarterly report revenue growth outlook guidance " * 3
     other = "mountains rivers forests valleys deserts islands " * 3
     rows = ([(i, base) for i in range(30)]
             + [(100, other), (101, other)])
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.simhash_pairs(df, max_hamming=3).collect()
-    assert len(uncapped) == 30 * 29 // 2 + 1
-    capped = {(r["id_a"], r["id_b"])
-              for r in dedup.simhash_pairs(df, max_hamming=3,
-                                           max_bucket_size=10).collect()}
-    assert capped == {(100, 101)}            # hot bucket dropped, pair kept
+    pairs = dedup.simhash_pairs(df, max_hamming=3).collect()
+    assert len(pairs) == 30 * 29 // 2 + 1
 
 
 def test_simhash_null_empty(spark):
@@ -262,9 +244,10 @@ def test_lsh_topk_recall(spark, emb):
     assert sum(recalls) / len(recalls) >= 0.8   # measured 0.98 at 8 bands
 
 
-def test_brute_force_topk_query_collect_guard(spark, emb):
+@pytest.mark.parametrize("topk", ["brute_force_topk", "lsh_topk"])
+def test_brute_force_topk_query_collect_guard(spark, emb, topk):
     with pytest.raises(ValueError, match="max_queries"):
-        similarity.brute_force_topk(
+        getattr(similarity, topk)(
             emb, emb.select(F.col("vec_id").alias("query_id"), "embedding"),
             k=1, max_queries=10)
 
@@ -579,17 +562,6 @@ def test_drop_near_duplicates(spark):
     assert kept == ["a", "m", "n", "p", "x"]
 
 
-def test_jaccard_hash_postings_identical(spark, docs):
-    """hash_postings shrinks the exchange key to a long; results must be
-    identical on real data (collisions astronomically unlikely)."""
-    kw = dict(n=3, min_num=1, min_den=3)
-    a = dedup.jaccard_pairs(docs, "doc_id", "text", **kw)
-    b = dedup.jaccard_pairs(docs, "doc_id", "text", hash_postings=True, **kw)
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b and rows_a
-
-
 def test_duckdb_oracle_tokenizer_mirrors_spark_on_vt(spark):
     """The oracle SQL splits on the explicit class [ \\t\\n\\x0b\\f\\r]+
     (RE2's \\s has no \\x0b, unlike Java/Python ASCII \\s) — assert the
@@ -695,32 +667,10 @@ def test_contamination_planted(spark):
     assert out3[1] is False
 
 
-def test_contamination_levers_are_result_identical(spark):
-    """hash_grams (xxhash64 longs on the wire) and broadcast_bench=False
-    (shuffle semi-join) are physical levers only — results must be
-    bit-identical to the default string/broadcast plan."""
-    from dq.contamination import flag_contaminated
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = d.filter("doc_id % 17 = 0")
-    corpus = d.filter("doc_id % 17 != 0")
-    want = sorted(map(tuple, flag_contaminated(corpus, bench, n=3)
-                      .collect()))
-    for kw in ({"hash_grams": True}, {"broadcast_bench": False},
-               {"hash_grams": True, "broadcast_bench": False}):
-        got = sorted(map(tuple,
-                         flag_contaminated(corpus, bench, n=3, **kw)
-                         .collect()))
-        assert got == want, kw
-    assert any(r[2] for r in want)   # the dup pool plants real positives
-
-
-def test_contamination_shuffle_path_has_no_broadcast(spark):
-    """broadcast_bench=False must produce a genuinely broadcast-free
-    physical plan for the gram join (the 10⁹-gram-eval-suite path) —
-    with the auto-broadcast thresholds disabled so the optimizer can't
-    silently re-broadcast a small test benchmark, the executed plan
-    must contain no BroadcastExchange/BroadcastHashJoin, while the
-    default plan must contain one. Results identical either way."""
+def test_contamination_broadcast_survives_auto_broadcast_off(spark):
+    """The benchmark gram set is broadcast by an explicit hint, not by
+    the optimizer's size estimate: with both auto-broadcast thresholds
+    disabled the executed plan still contains a BroadcastHashJoin."""
     from dq.contamination import flag_contaminated
     d = spark.read.parquet(f"{SF}/documents.parquet")
     bench = d.filter("doc_id % 17 = 0")
@@ -733,60 +683,12 @@ def test_contamination_shuffle_path_has_no_broadcast(spark):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        shuffled = flag_contaminated(corpus, bench, n=3,
-                                     broadcast_bench=False)
-        got = sorted(map(tuple, shuffled.collect()))
-        plan = shuffled._jdf.queryExecution().executedPlan().toString()
-        assert "Broadcast" not in plan, plan
         hinted = flag_contaminated(corpus, bench, n=3)
-        want = sorted(map(tuple, hinted.collect()))
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hplan   # the hint survives -1
+        plan = hinted._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan   # the hint survives -1
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    assert got == want
-
-
-def test_contamination_bloom_lever_is_result_identical(spark):
-    """bloom_prefilter is a pure physical lever on the shuffle path:
-    the pre-probe may pass false positives into the exact semi-join
-    (which removes them) but can never drop a member, so results are
-    bit-identical — with and without hash_grams, and at a sloppy fpp."""
-    from dq.contamination import flag_contaminated
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = d.filter("doc_id % 17 = 0")
-    corpus = d.filter("doc_id % 17 != 0")
-    want = sorted(map(tuple, flag_contaminated(corpus, bench, n=3)
-                      .collect()))
-    for kw in ({}, {"hash_grams": True}, {"bloom_fpp": 0.3}):
-        got = sorted(map(tuple,
-                         flag_contaminated(corpus, bench, n=3,
-                                           broadcast_bench=False,
-                                           bloom_prefilter=True, **kw)
-                         .collect()))
-        assert got == want, kw
-
-
-def test_gram_bloom_no_false_negatives_and_bounded_fpp(spark):
-    """Direct contract check of the distributed bloom build: every
-    inserted gram probes True (no false negatives, the soundness the
-    prefilter relies on), and non-members probe True at roughly the
-    configured rate (generous 5x bound — it's a probabilistic filter,
-    the exact join is the correctness backstop)."""
-    from pyspark.sql import functions as F
-    from dq.contamination import build_gram_bloom, make_might_contain_udf
-    members = spark.range(0, 2000).select(
-        F.concat(F.lit("gram_"), F.col("id")).alias("gram"))
-    bits, m_bits, k = build_gram_bloom(members, 2000, fpp=0.01)
-    probe = make_might_contain_udf(spark, bits, m_bits, k)
-    hit = members.select(probe(F.xxhash64("gram")).alias("m"))
-    assert hit.filter("NOT m").count() == 0
-    outsiders = spark.range(0, 20000).select(
-        F.concat(F.lit("other_"), F.col("id")).alias("gram"))
-    fp = (outsiders.select(probe(F.xxhash64("gram")).alias("m"))
-          .filter("m").count())
-    assert fp / 20000 < 0.05, fp
