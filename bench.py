@@ -106,7 +106,7 @@ def bench_pipeline(spark, reps: int = int(os.environ.get("DQ_BENCH_REPS", "2"))
         t0 = time.time()
         out = run_pipeline(spark, pages, f"bench-{rep}-{t0:.0f}",
                            dt.datetime(2025, 10, 3), store=None, resume=False)
-        for frame in ("docs", "metrics", "lineage"):
+        for frame in ("docs", "lineage"):
             out[frame].write.format("noop").mode("overwrite").save()
         best = min(best, time.time() - t0)
         out["scored"].unpersist()

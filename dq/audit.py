@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 # The V1 insertInto fallback must flip the SESSION-global
 # partitionOverwriteMode conf around its write; with concurrent writers
-# (checks_job supports thread-pool table submission) one thread
+# (any caller that writes to one store from several threads) one thread
 # restoring 'static' while another's insertInto(overwrite=True) runs
 # would truncate the whole table instead of overwriting its partitions.
 # One process-wide lock serializes the flip+write+restore window.
@@ -51,6 +51,12 @@ TABLES = (
     "summary_metrics_database", "freshness", "row_count_history",
     "lineage", "rule_metrics", "checkpoint", "checkpoint_tables", "docs",
 )
+
+# One row per checked table (run_checks_job) or day (run_pipeline).
+ROW_COUNT_HISTORY_SCHEMA = (
+    "execution_id string, execution_timestamp timestamp, "
+    "environment string, database_name string, table_name string, "
+    "row_count long")
 
 DEFAULT_PARTITIONING = {
     "lineage": ["partition_value"],

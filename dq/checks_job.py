@@ -23,11 +23,7 @@ tables through the six checks, then store four metric stages via
    (``utils/helpers.py:13-46``).
 
 Scale shape: each table is one distributed aggregation pass; everything
-the driver holds is per-table scalars. Per-table jobs are independent:
-``max_concurrent_tables`` submits them from a thread pool (result lists
-are reassembled in spec order, so output is identical to sequential —
-with hundreds of configured tables the cluster otherwise idles between
-tiny jobs).
+the driver holds is per-table scalars.
 
 Resume vs idempotency grain: metric overwrites are keyed by
 execution_id, but resume skips at TABLE grain — so a partial rerun must
@@ -51,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq import rules, scoring
-from dq.audit import AuditStore
+from dq.audit import ROW_COUNT_HISTORY_SCHEMA, AuditStore
 from dq.compare import compare_row_counts
 from dq.thresholds import Threshold, compute_thresholds, threshold_for
 
@@ -171,27 +167,23 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
                 .collect())
         if rows:
             carried_df = spark.createDataFrame(rows, scoring.RESULT_SCHEMA)
+    tkeys = spark.createDataFrame(
+        keys, "environment string, database_name string, table_name string")
     counts: list[tuple[str, str, str, int]] = []
     hist = store.read(spark, "row_count_history")
     if hist is not None:
-        hdf = spark.createDataFrame(
-            keys,
-            "environment string, database_name string, table_name string")
         counts = [
             (r[0], r[1], r[2], int(r[3]))
             for r in (hist.filter(F.col("execution_id") == execution_id)
-                      .join(F.broadcast(hdf),
+                      .join(F.broadcast(tkeys),
                             ["environment", "database_name", "table_name"])
                       .select("environment", "database_name", "table_name",
                               "row_count").collect())]
     fresh_df = None
     fresh = store.read(spark, "freshness")
     if fresh is not None:
-        fdf = spark.createDataFrame(
-            keys,
-            "environment string, database_name string, table_name string")
         frows = (fresh.filter(F.col("execution_id") == execution_id)
-                 .join(F.broadcast(fdf),
+                 .join(F.broadcast(tkeys),
                        ["environment", "database_name", "table_name"])
                  .select(*[c.split()[0] for c in
                            FRESHNESS_SCHEMA.split(", ")])
@@ -210,7 +202,6 @@ def run_checks_job(
     resume: bool = True,
     manifest_dir: str | None = None,
     enabled: dict[str, bool] | None = None,
-    max_concurrent_tables: int = 1,
 ) -> dict[str, Any]:
     """One full check run over every configured table.
 
@@ -223,10 +214,6 @@ def run_checks_job(
     overwrites; re-running the same execution_id after a failure skips
     already-completed tables, carries their persisted rows forward (see
     module docstring), and never appends twice.
-
-    ``max_concurrent_tables`` > 1 submits independent per-table check
-    jobs from a thread pool — results are identical (reassembled in
-    spec order; nothing below mutates session state).
     """
     run_ts = dt.datetime.combine(run_date, dt.time(0, 0))
 
@@ -240,27 +227,16 @@ def run_checks_job(
     todo = [spec for spec in tables
             if (spec.environment, spec.database, spec.table) not in done]
 
-    def check_one(spec: TableSpec) -> list[dict[str, Any]]:
-        key = (spec.environment, spec.database, spec.table)
-        df = spark.read.parquet(spec.path)
-        thr = threshold_for(thresholds, *key)
-        return rules.run_all_checks(
-            df, spec.database, spec.table, spec.expected_schema,
-            run_date=run_date, threshold=thr,
-            environment=spec.environment, enabled=enabled)
-
-    if max_concurrent_tables > 1 and len(todo) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_concurrent_tables) as pool:
-            per_table = list(pool.map(check_one, todo))
-    else:
-        per_table = [check_one(spec) for spec in todo]
-
     results: list[dict[str, Any]] = []
     counts: list[tuple[str, str, str, int]] = []
     fresh_keys: list[tuple[str, str, str]] = []
-    for spec, table_results in zip(todo, per_table):
+    for spec in todo:
         key = (spec.environment, spec.database, spec.table)
+        table_results = rules.run_all_checks(
+            spark.read.parquet(spec.path), spec.database, spec.table,
+            spec.expected_schema, run_date=run_date,
+            threshold=threshold_for(thresholds, *key),
+            environment=spec.environment, enabled=enabled)
         results.extend(table_results)
         for r in table_results:
             if r["test_name"] == "row_count_check":
@@ -341,9 +317,7 @@ def run_checks_job(
     if counts:
         store.overwrite_partitions("row_count_history", spark.createDataFrame(
             [(execution_id, run_ts, e, d, t, c) for e, d, t, c in counts],
-            "execution_id string, execution_timestamp timestamp, "
-            "environment string, database_name string, table_name string, "
-            "row_count long"), ["execution_id", "table_name"])
+            ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
     # checkpoint rewrite must keep the previously-done marks: the
     # overwrite is execution_id-keyed, so writing only the new keys
     # would erase resume state for the completed tables

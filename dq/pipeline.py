@@ -18,7 +18,8 @@ Scale shape (the plan at 100 TB):
   form a skewed hash bucket either way);
 - lineage/metrics/docs derive from one persisted scored frame —
   MEMORY_AND_DISK locally, a staged Iceberg table on a cluster;
-- resume anti-join and metrics aggregations touch only tiny frames.
+- one collected per-day rule tally feeds rule_metrics, row_count_history
+  and the checkpoint; the resume anti-join touches only a tiny frame.
 """
 
 from __future__ import annotations
@@ -26,11 +27,12 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from dq.audit import AuditStore
+from dq.audit import ROW_COUNT_HISTORY_SCHEMA, AuditStore
 from dq.checkpoint import completed_partitions, filter_unprocessed, mark_done
 from dq.dedup import exact_dedup
 from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
@@ -47,6 +49,9 @@ class PipelineConfig:
 
 
 ALL_RULES = RULE_NAMES + ["rule_lang", "rule_ppl", "rule_not_dup"]
+RULE_METRICS_SCHEMA = (
+    "execution_id string, partition_value date, rule_name string, "
+    "passed_count long, total long, kept long, failed_count long")
 
 
 def _heuristics(spark: SparkSession, df: DataFrame,
@@ -155,21 +160,17 @@ def melt_lineage(scored: DataFrame, execution_id: str) -> DataFrame:
     )
 
 
-def rule_metrics(scored: DataFrame, execution_id: str) -> DataFrame:
-    """Per-(partition, rule) pass/fail tallies — ONE aggregation pass over
-    the wide frame (no melt shuffle): sums of boolean casts per rule, then
-    unpivot of the already-tiny aggregate."""
-    aggs = [F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in ALL_RULES]
-    aggs.append(F.count(F.lit(1)).alias("total"))
-    aggs.append(F.sum(F.col("keep").cast("long")).alias("kept"))
-    wide = scored.groupBy("partition_value").agg(*aggs)
-    stack_expr = "stack({}, {}) as (rule_name, passed_count)".format(
-        len(ALL_RULES),
-        ", ".join(f"'{r}', pass__{r}" for r in ALL_RULES))
-    return wide.select(
-        F.lit(execution_id).alias("execution_id"),
-        "partition_value", F.expr(stack_expr), "total", "kept",
-    ).withColumn("failed_count", F.col("total") - F.col("passed_count"))
+def rule_tallies(df: DataFrame, *keys) -> DataFrame:
+    """Per-key pass tallies — ONE aggregation over the wide frame (no
+    melt): ``pass__<rule>`` for every ``ALL_RULES`` column ``df``
+    carries, plus ``total`` rows and ``kept`` rows. Shared by the
+    pipeline's audit tail, the stream's windowed metrics and the
+    flagship query."""
+    rules = [r for r in ALL_RULES if r in df.columns]
+    return df.groupBy(*keys).agg(
+        *[F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in rules],
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col("keep").cast("long")).alias("kept"))
 
 
 def run_pipeline(
@@ -184,7 +185,11 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full run. Returns {'docs', 'lineage', 'metrics', 'scored'} frames.
 
-    With a store: writes lineage/rule_metrics/docs/row_count_history and
+    Runs one action even without a store: the per-day tally collect that
+    fills the persisted ``scored`` frame. ``metrics`` is built from its
+    rows (driver-local); ``docs`` and ``lineage`` stay lazy.
+
+    With a store: writes docs/lineage/rule_metrics/row_count_history and
     marks partitions done; a rerun after failure skips completed
     partitions via the checkpoint anti-join (idempotent appends).
     """
@@ -208,11 +213,19 @@ def run_pipeline(
                     F.col("text_scrubbed").alias("text"),
                     "lang_pred", "ppl", "scrub_changed"))
     lineage = melt_lineage(scored, execution_id)
-    metrics = rule_metrics(scored, execution_id)
+
+    # the per-day tally fills the persisted frame; rule_metrics, history
+    # (row_count IS the day's total) and the checkpoint's day list are
+    # built from its driver rows, so only docs and lineage re-read it
+    days = rule_tallies(scored, "partition_value").collect()
+    rows = [(execution_id, d.partition_value, r, p, d.total, d.kept,
+             d.total - p)
+            for d in days for r in ALL_RULES for p in [d[f"pass__{r}"]]]
+    metrics = spark.createDataFrame(pd.DataFrame(rows, columns=[
+        c.split()[0] for c in RULE_METRICS_SCHEMA.split(", ")]),
+        RULE_METRICS_SCHEMA)              # pandas in: a LocalRelation
 
     if store is not None:
-        parts = [r["partition_value"] for r in
-                 scored.select("partition_value").distinct().collect()]
         # dynamic partition overwrite at day grain: a partition whose
         # processing crashed after a partial append is fully REPLACED on
         # the rerun (the checkpoint anti-join only skips partitions whose
@@ -221,18 +234,13 @@ def run_pipeline(
         store.overwrite_partitions("docs", docs)
         store.overwrite_partitions("lineage", lineage)
         store.overwrite_partitions("rule_metrics", metrics)
-        history = (scored.groupBy("partition_value")
-                   .agg(F.count(F.lit(1)).alias("row_count"))
-                   .select(
-                       F.lit(execution_id).alias("execution_id"),
-                       F.lit(run_ts).alias("execution_timestamp"),
-                       F.lit("PROD").alias("environment"),
-                       F.lit(scope).alias("database_name"),
-                       F.col("partition_value").cast("string").alias("table_name"),
-                       "row_count"))
-        store.overwrite_partitions("row_count_history", history,
-                                   ["execution_id", "table_name"])
-        mark_done(spark, store, scope, execution_id, parts, run_ts)
+        store.overwrite_partitions("row_count_history", spark.createDataFrame(
+            [(execution_id, run_ts, "PROD", scope,
+              None if d.partition_value is None else str(d.partition_value),
+              d.total) for d in days],
+            ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
+        mark_done(spark, store, scope, execution_id,
+                  [d.partition_value for d in days], run_ts)
 
     return {"docs": docs, "lineage": lineage, "metrics": metrics,
             "scored": scored}

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 
 from dq import dedup, similarity, textstats
 from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
-from dq.pipeline import ALL_RULES, PipelineConfig, score_pages, scrub
+from dq.pipeline import (ALL_RULES, PipelineConfig, rule_tallies, score_pages,
+                         scrub)
 from dq.scrub import scrub_udf
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -1480,14 +1481,11 @@ def q_quality_filter_pipeline(spark, sf_dir):
     quantized score sums are pinned by committed goldens
     (tests/goldens/) so any model change that shifts verdicts or
     scores fails loudly."""
-    scored = flagship_scored(spark, sf_dir)
-    aggs = [F.sum(F.col(r).cast("long")).alias(f"pass_{r}")
-            for r in ALL_RULES]
-    return (scored.groupBy("source")
-            .agg(F.count(F.lit(1)).alias("docs"),
-                 F.sum(F.col("keep").cast("long")).alias("kept"),
-                 *aggs)
-            .withColumn("dropped", F.col("docs") - F.col("kept")))
+    return (rule_tallies(flagship_scored(spark, sf_dir), "source")
+            .select("source", F.col("total").alias("docs"), "kept",
+                    *[F.col(f"pass__{r}").alias(f"pass_{r}")
+                      for r in ALL_RULES],
+                    (F.col("total") - F.col("kept")).alias("dropped")))
 
 
 def q_pipeline_rules_only(spark, sf_dir):

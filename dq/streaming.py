@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq.dedup import exact_signature
-from dq.pipeline import ALL_RULES, PipelineConfig, score_pages
+from dq.pipeline import (ALL_RULES, PipelineConfig, rule_tallies,
+                         score_pages)
 
 
 def read_webpages_stream(spark: SparkSession, path: str,
@@ -70,11 +71,7 @@ def windowed_rule_metrics(scored: DataFrame,
     frame) bounds state; output mode 'append' emits each window once
     it is final."""
     rules = [r for r in ALL_RULES if r in scored.columns]
-    aggs = [F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in rules]
-    aggs += [F.count(F.lit(1)).alias("total"),
-             F.sum(F.col("keep").cast("long")).alias("kept")]
-    return (scored.groupBy(F.window("warc_ts", window).alias("w"))
-            .agg(*aggs)
+    return (rule_tallies(scored, F.window("warc_ts", window).alias("w"))
             .select(F.col("w.start").alias("window_start"),
                     F.col("w.end").alias("window_end"),
                     "total", "kept",

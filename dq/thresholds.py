@@ -51,8 +51,7 @@ def compute_thresholds(
 ) -> dict[tuple[str, str, str], Threshold]:
     """One windowed pass over the full history → per-table thresholds.
 
-    history schema (FIXTURES.md §3): execution_id, execution_timestamp,
-    environment, database_name, table_name, row_count.
+    ``history`` has ``dq.audit.ROW_COUNT_HISTORY_SCHEMA`` (FIXTURES.md §3).
     """
     if history is None:
         return {}

@@ -25,6 +25,8 @@ import sys
 
 
 def parse_args(argv):
+    from dq.models import DEFAULT_PPL_THRESHOLD
+
     p = argparse.ArgumentParser(description="web-text quality-filter run")
     p.add_argument("--input", required=True,
                    help="webpages table path (parquet/Iceberg)")
@@ -37,7 +39,8 @@ def parse_args(argv):
                    help="reprocess all partitions even if checkpointed")
     p.add_argument("--accept-langs", default="en",
                    help="comma-separated language allowlist")
-    p.add_argument("--ppl-threshold", type=float, default=None)
+    p.add_argument("--ppl-threshold", type=float,
+                   default=DEFAULT_PPL_THRESHOLD)
     p.add_argument("--repartition", type=int, default=None,
                    help="salted pre-stage repartition width (skewed "
                         "domains); omit to trust input splits + AQE")
@@ -47,7 +50,6 @@ def parse_args(argv):
 def main(argv=None) -> int:
     args = parse_args(argv or sys.argv[1:])
     from dq.audit import AuditStore
-    from dq.models import DEFAULT_PPL_THRESHOLD
     from dq.pipeline import PipelineConfig, run_pipeline
     from dq.session import get_spark
 
@@ -63,7 +65,7 @@ def main(argv=None) -> int:
     run_date = dt.date.fromisoformat(args.run_date)
     cfg = PipelineConfig(
         accept_langs=tuple(args.accept_langs.split(",")),
-        ppl_threshold=args.ppl_threshold or DEFAULT_PPL_THRESHOLD,
+        ppl_threshold=args.ppl_threshold,
         repartition=args.repartition,
     )
     pages = spark.read.parquet(args.input)

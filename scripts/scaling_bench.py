@@ -4,8 +4,9 @@ North rule (BASELINE.json): "throughput scaling efficiency >= 0.8 between
 N- and 4N-executor clusters", evidenced on one machine as two
 parallelism levels over the SAME materialized input.
 
-A job is ``pipeline`` (``run_pipeline`` end to end, its audit frames
-drained into ``noop`` sinks) or the name of one pipeline stage
+A job is ``pipeline`` (``run_pipeline`` end to end, its docs and
+lineage frames drained into ``noop`` sinks; its rule metrics are
+collected inside the run) or the name of one pipeline stage
 (``dq.pipeline.STAGES``, or ``scrub``). A stage job times the real stage
 function alone: its input, the output of the stages before it, is
 cached and materialized before the clock starts, so one badly-scaling
@@ -81,7 +82,7 @@ def run(job, pages):
         t0 = time.time()
         out = run_pipeline(spark, pages, job, dt.datetime(2025, 10, 3),
                            store=None, resume=False, cfg=cfg)
-        for frame in ("docs", "metrics", "lineage"):
+        for frame in ("docs", "lineage"):
             drain(out[frame])
         sec = time.time() - t0
         out["scored"].unpersist()

@@ -207,28 +207,6 @@ def test_partial_resume_carries_completed_tables_forward(spark, tmp_path,
     assert out3["results"] == []
 
 
-def test_thread_pool_submission_is_result_identical(spark, tmp_path):
-    paths = []
-    for i in range(4):
-        p = str(tmp_path / f"tbl{i}")
-        _write_table(spark, p, 20 + i)
-        paths.append(p)
-    specs = [TableSpec("DEV", "db1", f"t{i}", p, SCHEMA)
-             for i, p in enumerate(paths)]
-
-    def norm(results):
-        return sorted((r["environment"], r["database"], r["table"],
-                       r["test_name"], r["passed"]) for r in results)
-
-    seq = run_checks_job(spark, specs, "e1", RUN_DATE,
-                         AuditStore(str(tmp_path / "a1")))
-    par = run_checks_job(spark, specs, "e1", RUN_DATE,
-                         AuditStore(str(tmp_path / "a2")),
-                         max_concurrent_tables=4)
-    assert norm(seq["results"]) == norm(par["results"])
-    assert norm(seq["results"])          # non-empty
-
-
 def test_comparison_fails_when_dev_exceeds_prod(spark, tmp_path):
     dev = str(tmp_path / "dev_big")
     prod = str(tmp_path / "prod_small")

@@ -119,6 +119,11 @@ def test_flagship_goldens(spark):
 def test_pipeline_outputs_and_scrub_identity(spark, tmp_path):
     store = AuditStore(str(tmp_path / "audit"))
     pages = webpages(spark, 600)
+    # plus one page with no timestamp: its day (and history table_name)
+    # is NULL, never the string 'None'
+    pages = pages.unionByName(pages.limit(1).withColumns({
+        "url": F.lit("doc://no-ts"),
+        "warc_ts": F.lit(None).cast("timestamp")}))
     out = run_pipeline(spark, pages, "exec1", RUN_TS, store=store)
 
     docs = out["docs"].collect()
@@ -144,6 +149,32 @@ def test_pipeline_outputs_and_scrub_identity(spark, tmp_path):
         F.sum("total").alias("t"), F.sum("kept").alias("k")).collect()[0]
     assert row.t == n_pages
     assert row.k == len(docs)
+
+    # the audit tail comes from one per-day tally: per (day, rule) the
+    # passed count is the lineage's, each day's history row_count is its
+    # rule_metrics total, the checkpoint holds exactly the input's days,
+    # and the returned metrics frame is driver-local rows
+    passed = {(r.partition_value, r.rule_name): r.n for r in
+              lineage.filter("passed").groupBy("partition_value", "rule_name")
+              .agg(F.count(F.lit(1)).alias("n")).collect()}
+    metric_rows = m.collect()
+    assert len(metric_rows) == len(ALL_RULES) * len(
+        {r.partition_value for r in metric_rows})
+    for r in metric_rows:
+        assert r.passed_count == passed.get(
+            (r.partition_value, r.rule_name), 0), r
+        assert r.failed_count == r.total - r.passed_count, r
+    totals = {r.partition_value: r.total for r in metric_rows}
+    history = {r.table_name: r.row_count for r in
+               store.read(spark, "row_count_history").collect()}
+    assert history == totals and None in history
+    days = {r.d for r in pages.select(F.to_date("warc_ts").alias("d"))
+            .distinct().collect()}
+    assert {r.partition_value for r in
+            store.read(spark, "checkpoint").collect()} == days
+    assert {r.partition_value for r in metric_rows} == days
+    assert out["metrics"]._jdf.queryExecution().analyzed() \
+        .getClass().getSimpleName() == "LocalRelation"
 
     out["scored"].unpersist()
 

@@ -96,3 +96,20 @@ def test_spark_submit_pyfiles_run_and_resume(spark, tmp_path):
         f"'{audit_dir}/checkpoint/**/*.parquet', hive_partitioning=1)"
     ).fetchone()[0]
     assert cp_after == cp_before
+
+
+def test_run_job_ppl_threshold_flag():
+    """``--ppl-threshold`` defaults to the model's threshold, and an
+    explicit 0 stays 0 (not silently replaced by the default)."""
+    import importlib.util
+
+    from dq.models import DEFAULT_PPL_THRESHOLD
+
+    spec = importlib.util.spec_from_file_location("run_job", RUN_JOB)
+    run_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_job)
+    base = ["--input", "i", "--audit", "a", "--execution-id", "e",
+            "--run-date", "2025-10-03"]
+    assert run_job.parse_args(base).ppl_threshold == DEFAULT_PPL_THRESHOLD
+    args = run_job.parse_args(base + ["--ppl-threshold", "0"])
+    assert args.ppl_threshold == 0.0
