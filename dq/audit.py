@@ -46,12 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 # One process-wide lock serializes the flip+write+restore window.
 _V1_OVERWRITE_LOCK = threading.Lock()
 
-TABLES = (
-    "check_results", "dimension_scores", "summary_metrics_table",
-    "summary_metrics_database", "freshness", "row_count_history",
-    "lineage", "rule_metrics", "checkpoint", "checkpoint_tables", "docs",
-)
-
 # One row per checked table (run_checks_job) or day (run_pipeline).
 ROW_COUNT_HISTORY_SCHEMA = (
     "execution_id string, execution_timestamp timestamp, "
@@ -67,14 +61,12 @@ DEFAULT_PARTITIONING = {
 
 class AuditStore:
     def __init__(self, base_path: str | None = None,
-                 partition_by: dict[str, list[str]] | None = None,
                  catalog_db: str | None = None):
         if base_path is None and catalog_db is None:
             raise ValueError("need base_path (path mode) or catalog_db "
                              "(catalog mode)")
         self.base = base_path.rstrip("/") if base_path else None
         self.catalog_db = catalog_db
-        self.partition_by = partition_by or dict(DEFAULT_PARTITIONING)
 
     # ------------------------------------------------------------ common
 
@@ -88,7 +80,7 @@ class AuditStore:
             self._write_catalog(table, df, overwrite_parts=None)
             return
         writer = df.write.mode("append")
-        parts = self.partition_by.get(table)
+        parts = DEFAULT_PARTITIONING.get(table)
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(self.path(table))
@@ -102,7 +94,7 @@ class AuditStore:
         duplicates — partition-grain idempotency without a transaction
         log (and snapshot-atomic when the catalog is Iceberg)."""
         parts = list(keys or []) + [c for c in
-                                    self.partition_by.get(table, [])
+                                    DEFAULT_PARTITIONING.get(table, [])
                                     if c not in (keys or [])]
         if not parts:
             raise ValueError(f"overwrite_partitions({table}) needs keys "
@@ -165,7 +157,7 @@ class AuditStore:
         spark = df.sparkSession
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.catalog_db}")
         full = self.path(table)
-        parts = overwrite_parts or list(self.partition_by.get(table, []))
+        parts = overwrite_parts or list(DEFAULT_PARTITIONING.get(table, []))
         if not spark.catalog.tableExists(full):
             if self._create_catalog_table(full, df, parts):
                 return

@@ -286,12 +286,6 @@ def make_minhash_udf(num_hashes: int = 64, n: int = 3):
     return minhash
 
 
-def minhash_signature(text: Column, num_hashes: int = 64,
-                      n: int = 3) -> Column:
-    """Column form of the minhash signature (pandas-UDF-backed)."""
-    return make_minhash_udf(num_hashes, n)(text)
-
-
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_hashes: int = 64,
                       bands: int = 16, n: int = 3,
@@ -374,12 +368,6 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
 def simhash64(text: Column) -> Column:
     """Column form of the SimHash fingerprint (pandas-UDF-backed)."""
     return _simhash_udf(text)
-
-
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 out_col: str = "simhash") -> DataFrame:
-    """Append the 64-bit SimHash fingerprint column."""
-    return df.withColumn(out_col, simhash64(F.col(text_col)))
 
 
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",

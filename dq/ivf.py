@@ -25,9 +25,10 @@ Scale shape (the 100-TB story):
 - **The index write is one exchange** (repartition by list_id before
   ``partitionBy`` — one file per list, not one per task×list).
 - **Queries prune I/O to ~nprobe/k of the corpus** via partition
-  pruning on ``list_id`` directories, then score map-side against the
-  broadcast query matrix — the same zero-corpus-shuffle scorer shape
-  as ``similarity.lsh_topk``.
+  pruning on ``list_id`` directories, then go through the one cosine
+  top-k scorer, ``similarity._topk_scan``, with list membership as the
+  candidate rule — the zero-corpus-shuffle scan that brute force and
+  LSH use too.
 
 Determinism contract: ``lloyd`` is a pure function of (matrix, k,
 n_iter, seed) using unbuffered ``np.add.at`` accumulation in row
@@ -40,21 +41,13 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dq.similarity import (
-    _collect_queries,
-    _emit,
-    _out_schema,
-    _select_topk,
-    _stack,
-    _valid_rows,
-)
+from dq.similarity import _collect_queries, _stack, _topk_scan, _valid_rows
 
 CENTROID_SIDECAR = "_centroids.json"   # leading '_' → invisible to scans
 
@@ -193,69 +186,31 @@ def ivf_topk(spark, path: str, queries: DataFrame, k: int = 5,
              max_queries: int = 100_000) -> DataFrame:
     """Approximate cosine top-k over a :func:`build_ivf_index` index.
 
-    Probe lists are computed driver-side (one tiny matmul) and become a
-    partition-pruning ``list_id IN (...)`` predicate — only the probed
-    list directories are read (~nprobe/k_centroids of the corpus).
-    Candidates are then scored map-side against the broadcast query
-    matrix: a corpus row is a candidate for query q iff its list is in
-    q's probe set (and ids differ); each Arrow batch scores its
-    colliding subset with one matmul and emits batch-local top-k under
-    the same global total order (desc score, asc id) the final window
-    uses — the lossless partial-top-k shape shared with
-    ``brute_force_topk``. Output: (query_id, vec_id, cos_sim, rank).
-    Recall loss is exactly the neighbors whose list was not probed;
-    raise ``nprobe`` to buy recall per query, no rebuild."""
+    Probe lists are computed driver-side from the one query collect
+    (one tiny matmul) and become a partition-pruning ``list_id IN
+    (...)`` predicate — only the probed list directories are read
+    (~nprobe/k_centroids of the corpus). The shared
+    :func:`dq.similarity._topk_scan` then scores the pruned rows
+    map-side: a row is a candidate for query q iff its list is in q's
+    probe set. Output: (query_id, vec_id, cos_sim, rank). Recall loss
+    is exactly the neighbors whose list was not probed; raise
+    ``nprobe`` to buy recall per query, no rebuild."""
     cents = load_centroids(path)
-    idx = spark.read.parquet(path)
-    out_schema = _out_schema(queries, query_id_col,
-                             idx.schema["x_id"].dataType.simpleString())
-    q_pdf = _collect_queries(queries, query_id_col, vec_col,
-                             max_queries, "ivf_topk")
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qids = q_pdf["qid"].to_numpy()
-    qmat = _stack(q_pdf["qv"])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    probes = probe_lists(qmat, cents, nprobe)          # (Q, nprobe)
+    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
+                         "ivf_topk")
+    qids, qmat, _ = q
     member = np.zeros((len(qids), cents.shape[0]), dtype=bool)
-    np.put_along_axis(member, probes, True, axis=1)    # (Q, k_cent)
-    wanted = sorted({int(v) for v in probes.ravel()})
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm, member))
+    if len(qids):
+        np.put_along_axis(member, probe_lists(qmat, cents, nprobe), True,
+                          axis=1)                          # (Q, k_cent)
+    wanted = np.nonzero(member.any(axis=0))[0].tolist()
+    pruned = (spark.read.parquet(path).filter(F.col("list_id").isin(wanted))
+              .select(F.col("x_id").alias(id_col),
+                      F.col("x_v").alias(vec_col), "list_id"))
+    return _topk_scan(pruned, q, member, _in_probed_list, k, id_col, vec_col)
 
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm, b_member = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = _stack(pdf["x_v"])
-            cids = pdf["x_id"].to_numpy()
-            lists = pdf["list_id"].to_numpy()
-            # (B, Q): query probes this row's list
-            cand = b_member[:, lists].T
-            cand &= cids[:, None] != b_qids[None, :]
-            cand &= _valid_rows(cmat)[:, None]
-            rows = np.nonzero(cand.any(axis=1))[0]
-            if rows.size == 0:
-                continue
-            sub, sub_ids, sub_cand = cmat[rows], cids[rows], cand[rows]
-            sub_norm = np.linalg.norm(sub, axis=1)
-            scores = (sub @ b_qmat.T) / (sub_norm[:, None] * b_qnorm[None, :])
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(b_qids)):
-                sel = _select_topk(scores[:, j],
-                                   np.nonzero(sub_cand[:, j])[0],
-                                   sub_ids, k)
-                if sel.size:
-                    out_q.append(np.full(sel.size, b_qids[j]))
-                    out_c.append(sub_ids[sel])
-                    out_s.append(scores[sel, j])
-            if out_q:
-                yield _emit(out_q, out_c, out_s)
 
-    pruned = (idx.filter(F.col("list_id").isin(wanted))
-              .select("x_id", "x_v", "list_id"))
-    partial = pruned.mapInPandas(score_batches, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cos_sim", "rank"))
+def _in_probed_list(pdf: pd.DataFrame, cmat: np.ndarray,
+                    member: np.ndarray) -> np.ndarray:
+    """IVF's candidate rule: (B, Q) — the query probes the row's list."""
+    return member[:, pdf["list_id"].to_numpy()].T

@@ -8,10 +8,7 @@ DataFrame; the oracle is ANSI SQL DuckDB runs over the same parquet.
 
 Cross-engine exactness rules used throughout (so the driver's
 order-insensitive value-hash matches bit-for-bit):
-- double sums go through ``DECIMAL`` casts (exact accumulation, identical
-  half-up rounding of the ~2-decimal synthetic values in both engines),
-  then back to double (IEEE correctly-rounded, deterministic);
-- averages are ``exact_decimal_sum / count`` evaluated in double — one
+- averages are ``exact_integer_sum / count`` evaluated in double — one
   deterministic division, no accumulation-order dependence;
 - ratio thresholds are integer cross-multiplications, never float
   division;
@@ -101,10 +98,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _dec(c, p=18, s=2):
-    return F.col(c).cast(f"decimal({p},{s})")
 
 
 # =====================================================================
@@ -530,103 +523,8 @@ FROM agg
 
 
 # =====================================================================
-# Analytics queries (join/agg coverage at TPC-H shape)
+# Event analytics (time-window and JSON-extraction coverage)
 # =====================================================================
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: exact decimal accumulation, deterministic avgs."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-    qty = _dec("l_quantity")
-    price = _dec("l_extendedprice")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    tax = F.col("l_tax").cast("decimal(4,2)")
-    disc_price = price * (F.lit(1).cast("decimal(3,2)") - disc)
-    charge = disc_price * (F.lit(1).cast("decimal(3,2)") + tax)
-    agg = (li.groupBy("l_returnflag", "l_linestatus")
-           .agg(F.sum(qty).alias("_sq"),
-                F.sum(price).alias("_sp"),
-                F.sum(disc_price).alias("_sdp"),
-                F.sum(charge).alias("_sc"),
-                F.sum(disc).alias("_sd"),
-                F.count(F.lit(1)).alias("count_order")))
-    cnt = F.col("count_order")
-    return agg.select(
-        "l_returnflag", "l_linestatus",
-        F.col("_sq").cast("double").alias("sum_qty"),
-        F.col("_sp").cast("double").alias("sum_base_price"),
-        F.col("_sdp").cast("double").alias("sum_disc_price"),
-        F.col("_sc").cast("double").alias("sum_charge"),
-        (F.col("_sq").cast("double") / cnt).alias("avg_qty"),
-        (F.col("_sp").cast("double") / cnt).alias("avg_price"),
-        (F.col("_sd").cast("double") / cnt).alias("avg_disc"),
-        "count_order")
-
-
-ORACLE_PRICING = """
-WITH agg AS (
-  SELECT l_returnflag, l_linestatus,
-         sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq,
-         sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS sp,
-         sum(CAST(l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS sdp,
-         sum(CAST(l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-             * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS sc,
-         sum(CAST(l_discount AS DECIMAL(4,2))) AS sd,
-         count(*) AS count_order
-  FROM lineitem
-  WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-  GROUP BY 1, 2
-)
-SELECT l_returnflag, l_linestatus,
-       CAST(sq AS DOUBLE) AS sum_qty,
-       CAST(sp AS DOUBLE) AS sum_base_price,
-       CAST(sdp AS DOUBLE) AS sum_disc_price,
-       CAST(sc AS DOUBLE) AS sum_charge,
-       CAST(sq AS DOUBLE) / count_order AS avg_qty,
-       CAST(sp AS DOUBLE) / count_order AS avg_price,
-       CAST(sd AS DOUBLE) / count_order AS avg_disc,
-       count_order
-FROM agg
-"""
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    """4-way join with broadcast dims: revenue per region/nation."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    rev = (_dec("l_extendedprice")
-           * (F.lit(1).cast("decimal(3,2)")
-              - F.col("l_discount").cast("decimal(4,2)")))
-    j = (li.join(o, li.l_orderkey == o.o_orderkey)
-         .join(c, o.o_custkey == c.c_custkey)
-         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
-    return (j.groupBy("r_name", "n_name")
-            .agg(F.sum(rev).alias("_rev"),
-                 F.count(F.lit(1)).alias("line_count"))
-            .select("r_name", "n_name",
-                    F.col("_rev").cast("double").alias("revenue"),
-                    "line_count"))
-
-
-ORACLE_REVENUE = """
-SELECT r_name, n_name,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS revenue,
-       count(*) AS line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              JOIN customer ON o_custkey = c_custkey
-              JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-GROUP BY 1, 2
-"""
-
 
 def q_hourly_windows(spark, sf_dir):
     """Tumbling 1-hour windows over events (batch analog of the
@@ -1111,15 +1009,23 @@ FROM r GROUP BY source
 """
 
 
+def _ann_query(e: DataFrame,
+               search: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """The ANN queries' shared shape: ``search`` the embeddings ``e``
+    with the query set ``vec_id < 10``, then project the ranked rows to
+    (query_id, vec_id, cos_sim_r6, rank)."""
+    queries = (e.filter(F.col("vec_id") < 10)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    return search(queries).select(
+        "query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim_r6"),
+        "rank")
+
+
 def q_embedding_topk(spark, sf_dir):
     """Brute-force cosine top-5 per query (query set = vec_id < 10)."""
     e = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism, "vec_id")
-    queries = (e.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    out = similarity.brute_force_topk(e, queries, k=5)
-    return out.select("query_id", "vec_id",
-                      F.round("cos_sim", 6).alias("cos_sim_r6"), "rank")
+    return _ann_query(e, lambda q: similarity.brute_force_topk(e, q, k=5))
 
 
 ORACLE_EMB_TOPK = """
@@ -1153,11 +1059,8 @@ def q_embedding_lsh_topk(spark, sf_dir):
     asserted in tests."""
     e = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism, "vec_id")
-    queries = (e.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    out = similarity.lsh_topk(e, queries, k=5, n_planes=16, bands=8, dim=64)
-    return out.select("query_id", "vec_id",
-                      F.round("cos_sim", 6).alias("cos_sim_r6"), "rank")
+    return _ann_query(e, lambda q: similarity.lsh_topk(
+        e, q, k=5, n_planes=16, bands=8, dim=64))
 
 
 def _lsh_oracle_sql(n_planes: int, bands: int, dim: int = 64,
@@ -1388,11 +1291,8 @@ def q_embedding_ivf_topk(spark, sf_dir):
     path = os.path.join("/tmp", f"dq_ivf_index_{_emb_fingerprint(sf_dir)}")
     _build_index_once(path, lambda tmp: ivf.build_ivf_index(
         e, tmp, **IVF_PARAMS))
-    queries = (e.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    out = ivf.ivf_topk(spark, path, queries, k=5, nprobe=IVF_NPROBE)
-    return out.select("query_id", "vec_id",
-                      F.round("cos_sim", 6).alias("cos_sim_r6"), "rank")
+    return _ann_query(e, lambda q: ivf.ivf_topk(spark, path, q, k=5,
+                                                nprobe=IVF_NPROBE))
 
 
 def ivf_oracle_sql(sf_dir: str, k: int = 5) -> str:
@@ -1805,8 +1705,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "summary_banding": q_summary_banding,
     "rollup_scores": q_rollup_scores,
     "customers_without_orders": q_customers_without_orders,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
     "hourly_windows": q_hourly_windows,
     "json_extract": q_json_extract,
     "doc_token_stats": q_doc_token_stats,
@@ -1859,8 +1757,6 @@ ORACLES: dict[str, str] = {
     "summary_banding": ORACLE_BANDING,
     "rollup_scores": ORACLE_ROLLUP,
     "customers_without_orders": ORACLE_ANTI,
-    "pricing_summary": ORACLE_PRICING,
-    "revenue_by_nation": ORACLE_REVENUE,
     "hourly_windows": ORACLE_HOURLY,
     "json_extract": ORACLE_JSON,
     "doc_token_stats": ORACLE_TOKEN_STATS,

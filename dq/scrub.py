@@ -16,7 +16,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -93,7 +92,3 @@ def scrub_string(text: str | None) -> str | None:
 def scrub_udf(texts: pd.Series) -> pd.Series:
     # Arrow batch in/out; compiled patterns shared across batches.
     return texts.map(scrub_string, na_action="ignore")
-
-
-def scrub_col(text_col: str = "text") -> Column:
-    return scrub_udf(F.col(text_col))

@@ -1,21 +1,23 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, per the training-data-pipeline requirement:
+Cosine top-k has ONE scorer, ``_topk_scan``: the (small, bounded) query
+set is collected and broadcast as a numpy matrix; the corpus streams
+through ``mapInPandas`` where each Arrow batch scores its candidate rows
+against ALL queries with one ``C @ Q.T`` matmul and emits only its
+per-batch top-k rows per query. The final window therefore ranks
+O(n_batches × |queries| × k) rows, not |corpus| × |queries| — the
+partial-top-k shape that survives a 100× corpus. The search paths
+differ only in which corpus rows are a query's candidates:
 
-- **Brute-force cosine top-k** — the exactness baseline: the (small,
-  bounded) query set is collected and broadcast as a numpy matrix; the
-  corpus streams through ``mapInPandas`` where each Arrow batch scores
-  ALL queries with one ``C @ Q.T`` matmul and emits only its per-batch
-  top-k rows per query. The final window therefore ranks
-  O(n_batches × |queries| × k) rows, not |corpus| × |queries| — the
-  partial-top-k shape that survives a 100× corpus.
-- **Hyperplane-LSH bucketed top-k** — sign-bit signatures against
-  ``n_planes`` seeded Gaussian hyperplanes, computed for a whole Arrow
-  batch with a single ``M @ planes.T`` matmul; the same bounded query
-  set is broadcast with its band chunks, so each query only scores the
-  corpus rows it collides with. Recall < 1 by design; the brute-force
-  path is the oracle it is validated against
+- **Brute force** (``brute_force_topk``) — every row; the exactness
+  baseline.
+- **Hyperplane LSH** (``lsh_topk``) — rows sharing ≥1 band chunk of the
+  sign-bit signature against ``n_planes`` seeded Gaussian hyperplanes
+  (``_signatures``: one ``M @ planes.T`` matmul per batch). Recall < 1
+  by design; brute force is the oracle it is validated against
   (tests/test_dedup_similarity.py).
+- **IVF** (``dq.ivf.ivf_topk``) — rows in the query's probed k-means
+  lists.
 
 The persisted, partition-pruned ANN index is IVF (dq/ivf.py); LSH here
 is scan-time only.
@@ -32,7 +34,8 @@ frames and oracle parity work.
 from __future__ import annotations
 
 import random
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -71,9 +74,7 @@ def _select_topk(s: np.ndarray, keep: np.ndarray, cids: np.ndarray,
                  k: int) -> np.ndarray:
     """Batch-local top-k under the GLOBAL total order (desc score, asc
     corpus id): kth-largest threshold first so boundary ties survive to
-    the exact global tie-break, then lexsort. Shared by the brute-force
-    and LSH scorers — the equivalence of the two paths depends on this
-    being one implementation."""
+    the exact global tie-break, then lexsort."""
     if keep.size == 0:
         return keep
     if keep.size > k:
@@ -83,26 +84,20 @@ def _select_topk(s: np.ndarray, keep: np.ndarray, cids: np.ndarray,
     return keep[order][:k]
 
 
-def _emit(out_q: list, out_c: list, out_s: list) -> pd.DataFrame:
-    return pd.DataFrame({"query_id": np.concatenate(out_q),
-                         "vec_id": np.concatenate(out_c),
-                         "cos_sim": np.concatenate(out_s)})
-
-
-def _out_schema(queries: DataFrame, query_id_col: str,
-                corpus_id_type: str) -> str:
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    return (f"query_id {qid_type}, vec_id {corpus_id_type}, "
-            f"cos_sim double")
+def _valid_rows(mat: np.ndarray) -> np.ndarray:
+    """Row mask: finite positive norm (scorable under cosine)."""
+    norms = np.linalg.norm(mat, axis=1)
+    return np.isfinite(norms) & (norms > 0)
 
 
 def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
-                     max_queries: int, caller: str) -> pd.DataFrame:
-    """Bounded driver-side query collect: LIMIT max+1 so an oversized
-    query set costs one extra row, not an OOM, and fails loudly.
-    Degenerate query vectors (zero / non-finite norm) are dropped here —
-    cosine is undefined for them, and NaN scores would otherwise outrank
-    every real neighbor under Spark's NaN-greatest double ordering."""
+                     max_queries: int, caller: str
+                     ) -> tuple[np.ndarray, np.ndarray, str]:
+    """Bounded driver-side query collect → (ids, (Q, dim) matrix, id
+    SQL type). LIMIT max+1 so an oversized query set costs one extra
+    row, not an OOM, and fails loudly. Degenerate query vectors (zero /
+    non-finite norm) are dropped here — cosine is undefined for them.
+    An empty query set gives a (0, 0) matrix."""
     q_pdf = (queries.select(F.col(query_id_col).alias("qid"),
                             F.col(vec_col).alias("qv"))
              .limit(max_queries + 1).toPandas())
@@ -111,23 +106,83 @@ def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
             f"{caller}: query set exceeds max_queries={max_queries}; "
             "collecting it would risk driver OOM — raise max_queries "
             "explicitly or score the query set in chunks")
-    if len(q_pdf):
-        norms = np.linalg.norm(_stack(q_pdf["qv"]), axis=1)
-        q_pdf = q_pdf[np.isfinite(norms) & (norms > 0)].reset_index(drop=True)
-    return q_pdf
+    qmat = _stack(q_pdf["qv"]) if len(q_pdf) else np.zeros((0, 0))
+    ok = _valid_rows(qmat)
+    return (q_pdf["qid"].to_numpy()[ok], qmat[ok],
+            queries.schema[query_id_col].dataType.simpleString())
 
 
-def _valid_rows(mat: np.ndarray) -> np.ndarray:
-    """Row indices with finite positive norm (scorable under cosine)."""
-    norms = np.linalg.norm(mat, axis=1)
-    return np.isfinite(norms) & (norms > 0)
+def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
+               keys: Any,
+               candidates: Callable[[pd.DataFrame, np.ndarray, Any],
+                                    np.ndarray],
+               k: int, id_col: str, vec_col: str) -> DataFrame:
+    """The one cosine top-k scorer: ``brute_force_topk``, ``lsh_topk``
+    and ``ivf.ivf_topk`` differ only in ``candidates``.
+
+    ``q`` is :func:`_collect_queries`' output; it broadcasts with the
+    per-query ``keys`` table. One ``mapInPandas`` corpus pass: per Arrow
+    batch, ``candidates(pdf, cmat, keys)`` gives a (B, Q) bool mask (or
+    one that broadcasts to it); self-matches and degenerate corpus rows
+    (0/0 NaN would outrank every real score in the desc window and
+    poison ``_select_topk``'s kth threshold) are masked out here; the
+    rows that are a candidate for any query are scored with one matmul,
+    and each query emits its batch-local top-k under the same total
+    order the final window uses (desc cos_sim, asc vec_id) — so the
+    partial pass is lossless, the corpus never shuffles, and the window
+    ranks O(batches × Q × k) rows. Output: (query_id, vec_id, cos_sim,
+    rank)."""
+    spark = corpus.sparkSession
+    qids, qmat, qid_type = q
+    out_schema = (f"query_id {qid_type}, vec_id "
+                  f"{corpus.schema[id_col].dataType.simpleString()}, "
+                  "cos_sim double")
+    if len(qids) == 0:
+        return spark.createDataFrame([], out_schema + ", rank int")
+    bq = spark.sparkContext.broadcast(
+        (qids, qmat, np.linalg.norm(qmat, axis=1), keys))
+
+    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        b_qids, b_qmat, b_qnorm, b_keys = bq.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cmat = _stack(pdf[vec_col])
+            cids = pdf[id_col].to_numpy()
+            cand = (candidates(pdf, cmat, b_keys)
+                    & (cids[:, None] != b_qids[None, :])
+                    & _valid_rows(cmat)[:, None])
+            rows = np.nonzero(cand.any(axis=1))[0]
+            if rows.size == 0:
+                continue
+            sub, sub_ids, sub_cand = cmat[rows], cids[rows], cand[rows]
+            scores = (sub @ b_qmat.T) / (np.linalg.norm(sub, axis=1)[:, None]
+                                         * b_qnorm[None, :])
+            sels = [_select_topk(scores[:, j], np.nonzero(sub_cand[:, j])[0],
+                                 sub_ids, k) for j in range(len(b_qids))]
+            yield pd.DataFrame({
+                "query_id": np.repeat(b_qids, [s.size for s in sels]),
+                "vec_id": np.concatenate([sub_ids[s] for s in sels]),
+                "cos_sim": np.concatenate(
+                    [scores[s, j] for j, s in enumerate(sels)])})
+
+    partial = corpus.mapInPandas(score_batches, schema=out_schema)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
+    return (partial.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "vec_id", "cos_sim", "rank"))
+
+
+def _every_row(pdf: pd.DataFrame, cmat: np.ndarray, keys: Any) -> np.ndarray:
+    """Brute force's candidate rule: (B, 1), broadcast over every query."""
+    return np.ones((len(cmat), 1), dtype=bool)
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id",
                      max_queries: int = 100_000) -> DataFrame:
-    """Exact cosine top-k per query.
+    """Exact cosine top-k per query: every corpus row is a candidate.
 
     Output: (query_id, vec_id, cos_sim, rank). Self-matches (same id)
     are excluded; ties broken by ascending corpus id — fully
@@ -135,54 +190,12 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ``max_queries`` with an explicit error beyond it. Degenerate
     vectors (zero/non-finite norm) are excluded on both sides — as
     queries they produce no rows; as corpus rows they are never
-    candidates (0/0 → NaN would otherwise outrank everything in the
-    desc window and poison ``_select_topk``'s kth threshold).
-    Per Arrow batch we emit only the batch-local top-k per query under
-    the SAME total order the final window uses (desc score, asc id), so
-    the partial pass is lossless and the window input is tiny.
+    candidates. See :func:`_topk_scan` for the plan.
     """
-    spark = corpus.sparkSession
-    q_pdf = _collect_queries(queries, query_id_col, vec_col,
-                             max_queries, "brute_force_topk")
-    out_schema = _out_schema(queries, query_id_col,
-                             corpus.schema[id_col].dataType.simpleString())
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qids = q_pdf["qid"].to_numpy()
-    qmat = _stack(q_pdf["qv"])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = _stack(pdf[vec_col])
-            cids = pdf[id_col].to_numpy()
-            cnorm = np.linalg.norm(cmat, axis=1)
-            valid = np.isfinite(cnorm) & (cnorm > 0)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # one matmul scores the whole batch against every query
-                scores = (cmat @ b_qmat.T) / (cnorm[:, None] * b_qnorm[None, :])
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(b_qids)):
-                sel = _select_topk(scores[:, j],
-                                   np.nonzero(valid & (cids != b_qids[j]))[0],
-                                   cids, k)
-                if sel.size:
-                    out_q.append(np.full(sel.size, b_qids[j]))
-                    out_c.append(cids[sel])
-                    out_s.append(scores[sel, j])
-            if out_q:
-                yield _emit(out_q, out_c, out_s)
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score_batches, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cos_sim", "rank"))
+    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
+                         "brute_force_topk")
+    return _topk_scan(corpus.select(id_col, vec_col), q, None, _every_row,
+                      k, id_col, vec_col)
 
 
 def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
@@ -192,16 +205,22 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]
             for _ in range(n_planes)]
 
 
-def make_sig_norm_udf(planes: list[list[float]]):
-    """Series[array<float>] → struct(sig bigint, norm double) pandas UDF.
+def _signatures(mat: np.ndarray, pmat: np.ndarray) -> np.ndarray:
+    """(n, dim) vectors → (n,) uint64 sign-bit signatures against the
+    (P, dim) plane matrix: one ``mat @ pmat.T`` matmul, bit p =
+    (vec · plane_p) >= 0."""
+    weights = np.uint64(1) << np.arange(pmat.shape[0], dtype=np.uint64)
+    return (((mat @ pmat.T) >= 0).astype(np.uint64)
+            * weights[None, :]).sum(axis=1)
 
-    One ``M @ planes.T`` matmul per Arrow batch produces every row's
-    sign-bit signature; bit p = (vec · plane_p) >= 0. Replaces the
+
+def make_sig_norm_udf(planes: list[list[float]]):
+    """Series[array<float>] → struct(sig bigint, norm double) pandas UDF:
+    one :func:`_signatures` matmul per Arrow batch. Replaces the
     round-1 per-plane interpreted ``F.aggregate`` folds (16 interpreted
     dot products per row) that made the LSH path slower than brute force.
     """
     pmat = np.asarray(planes, dtype=np.float64)            # (P, dim)
-    weights = (np.uint64(1) << np.arange(pmat.shape[0], dtype=np.uint64))
 
     @F.pandas_udf("sig bigint, norm double")
     def sig_norm(vecs: pd.Series) -> pd.DataFrame:
@@ -209,9 +228,7 @@ def make_sig_norm_udf(planes: list[list[float]]):
             return pd.DataFrame({"sig": pd.Series([], dtype="int64"),
                                  "norm": pd.Series([], dtype="float64")})
         m = _stack(vecs)
-        bits = (m @ pmat.T) >= 0                           # (n, P)
-        sig = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-        return pd.DataFrame({"sig": sig.astype(np.int64),
+        return pd.DataFrame({"sig": _signatures(m, pmat).astype(np.int64),
                              "norm": np.linalg.norm(m, axis=1)})
 
     return sig_norm
@@ -282,80 +299,29 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     ``n_planes`` sign bits split into ``bands`` chunks; a (corpus,
     query) pair is a candidate iff they agree on ≥1 chunk. The query
-    set is collected and broadcast with its chunk table, capped at
-    ``max_queries`` like :func:`brute_force_topk`. One ``mapInPandas``
-    corpus pass computes batch signatures via one matmul, masks
-    collisions against the query chunks, and scores ONLY the rows that
-    collide with ≥1 query (one matmul over the colliding subset —
-    per-cell masking beyond that would be slower than the dense block).
-    Batch-local top-k feeds the final window; the corpus never
+    set is collected (capped at ``max_queries`` like
+    :func:`brute_force_topk`) and broadcast with its chunk table; each
+    Arrow batch computes its signatures with one matmul and the shared
+    :func:`_topk_scan` scores only the colliding rows. The corpus never
     shuffles.
 
     Missing neighbors (no shared band) are the recall loss; increase
     bands or lower n_planes/bands to trade work for recall.
     """
-    planes = hyperplanes(dim, n_planes, seed)
-    q_pdf = _collect_queries(queries, query_id_col, vec_col,
-                             max_queries, "lsh_topk")
-    out_schema = _out_schema(queries, query_id_col,
-                             corpus.schema[id_col].dataType.simpleString())
-    spark = corpus.sparkSession
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    pmat = np.asarray(planes, dtype=np.float64)
+    pmat = np.asarray(hyperplanes(dim, n_planes, seed), dtype=np.float64)
     width = n_planes // bands
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
+    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
+                         "lsh_topk")
+    qids, qmat, _ = q
+    qchunks = (_chunk_values(_signatures(qmat, pmat), bands, width)
+               if len(qids) else None)                  # (Q, bands)
 
-    qids = q_pdf["qid"].to_numpy()
-    qmat = _stack(q_pdf["qv"])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qsig = (((qmat @ pmat.T) >= 0).astype(np.uint64) * weights[None, :]) \
-        .sum(axis=1)
-    qchunks = _chunk_values(qsig, bands, width)            # (Q, bands)
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm, qchunks))
+    def collide(pdf, cmat, b_qchunks):
+        cchunks = _chunk_values(_signatures(cmat, pmat), bands, width)
+        return (cchunks[:, None, :] == b_qchunks[None, :, :]).any(axis=2)
 
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm, b_qchunks = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = _stack(pdf[vec_col])
-            cids = pdf[id_col].to_numpy()
-            csig = (((cmat @ pmat.T) >= 0).astype(np.uint64)
-                    * weights[None, :]).sum(axis=1)
-            cchunks = _chunk_values(csig, bands, width)    # (B, bands)
-            # candidate iff ANY band chunk matches: (B, Q) bool
-            cand = (cchunks[:, None, :] == b_qchunks[None, :, :]).any(axis=2)
-            cand &= cids[:, None] != b_qids[None, :]
-            # degenerate rows (zero/non-finite norm) are never candidates
-            # — their 0/0 NaN would outrank every real score downstream
-            cand &= _valid_rows(cmat)[:, None]
-            rows = np.nonzero(cand.any(axis=1))[0]
-            if rows.size == 0:
-                continue
-            sub = cmat[rows]                   # score colliding rows only
-            sub_ids = cids[rows]
-            sub_cand = cand[rows]
-            sub_norm = np.linalg.norm(sub, axis=1)
-            scores = (sub @ b_qmat.T) / (sub_norm[:, None] * b_qnorm[None, :])
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(b_qids)):
-                sel = _select_topk(scores[:, j],
-                                   np.nonzero(sub_cand[:, j])[0],
-                                   sub_ids, k)
-                if sel.size:
-                    out_q.append(np.full(sel.size, b_qids[j]))
-                    out_c.append(sub_ids[sel])
-                    out_s.append(scores[sel, j])
-            if out_q:
-                yield _emit(out_q, out_c, out_s)
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score_batches, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cos_sim", "rank"))
+    return _topk_scan(corpus.select(id_col, vec_col), q, qchunks, collide,
+                      k, id_col, vec_col)
 
 
 def near_dup_band_params(n: int, bands: int = 4, target_bucket: int = 16,

@@ -1,10 +1,8 @@
-"""Column-form convenience wrappers and schema helpers — thin public
+"""Schema helpers, session confs and the catalog contract — thin public
 API surface over the tested internals; exercised here so none of it
 drifts dead."""
 
-from pyspark.sql import functions as F
-
-from dq import dedup, multimodal, schemas, scrub
+from dq import multimodal, schemas
 
 
 def test_get_schema_returns_copy(spark):
@@ -51,22 +49,6 @@ def test_catalog_session_restores_confs(spark):
         # shared test session: put the suite's defaults back
         spark.conf.set("spark.sql.ansi.enabled", "false")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_column_form_wrappers(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta contact a@b.co now")],
-        "doc_id long, text string")
-    out = dedup.with_simhash(df).withColumns({
-        "sig": dedup.minhash_signature(F.col("text"), num_hashes=16),
-        "clean": scrub.scrub_col("text"),
-    }).collect()[0]
-    assert out["simhash"] is not None
-    assert len(out["sig"]) == 16
-    assert "[EMAIL]" in out["clean"]
-    # wrappers mirror the underlying callables exactly
-    assert out["clean"] == scrub.scrub_string(
-        "alpha beta gamma delta contact a@b.co now")
 
 
 def test_driver_heap_fits_the_machine(spark):

@@ -24,10 +24,14 @@ def emb(spark):
 
 def test_token_stats_crafted(spark):
     df = spark.createDataFrame(
-        [(1, "the cat  sat on the mat"), (2, ""), (3, None), (4, "  x  ")],
+        [(1, "the cat  sat on the mat"), (2, ""), (3, None), (4, "  x  "),
+         (5, "café2024, ok!?")],
         "id long, text string")
     out = {r["id"]: r for r in textstats.with_text_stats(df).collect()}
     assert out[1]["n_tokens"] == 6
+    # sub-word count: letter runs, digit runs and single symbols
+    assert [out[i]["n_bpe_tokens"] for i in (1, 2, 3, 4, 5)] \
+        == [6, 0, 0, 1, 6]               # café|2024|,|ok|!|?
     assert out[1]["n_distinct_tokens"] == 5          # 'the' twice
     assert out[1]["token_len_sum"] == 17
     assert out[2]["n_tokens"] == 0 and out[3]["n_tokens"] == 0
@@ -244,12 +248,44 @@ def test_lsh_topk_recall(spark, emb):
     assert sum(recalls) / len(recalls) >= 0.8   # measured 0.98 at 8 bands
 
 
-@pytest.mark.parametrize("topk", ["brute_force_topk", "lsh_topk"])
-def test_brute_force_topk_query_collect_guard(spark, emb, topk):
-    with pytest.raises(ValueError, match="max_queries"):
-        getattr(similarity, topk)(
-            emb, emb.select(F.col("vec_id").alias("query_id"), "embedding"),
-            k=1, max_queries=10)
+@pytest.fixture(scope="module")
+def ivf_index(spark, emb, tmp_path_factory):
+    from dq import ivf
+
+    path = str(tmp_path_factory.mktemp("ivf") / "idx")
+    ivf.build_ivf_index(emb, path, n_centroids=8)
+    return path
+
+
+@pytest.mark.parametrize("topk", ["brute_force_topk", "lsh_topk", "ivf_topk"])
+def test_brute_force_topk_query_collect_guard(spark, emb, topk, request):
+    from dq import ivf
+
+    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(ValueError, match=f"^{topk}: .*max_queries=10"):
+        if topk == "ivf_topk":
+            ivf.ivf_topk(spark, request.getfixturevalue("ivf_index"),
+                         queries, k=1, max_queries=10)
+        else:
+            getattr(similarity, topk)(emb, queries, k=1, max_queries=10)
+
+
+def test_ivf_full_probe_equals_brute_force(spark, emb, ivf_index):
+    """Probing every list makes IVF exact: the same ranked rows as brute
+    force, scored by the same scorer (cos_sim may differ only by the
+    summation order of a differently composed Arrow batch)."""
+    from dq import ivf
+
+    queries = (emb.filter(F.col("vec_id") < 10)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    exact = {(r.query_id, r.vec_id, r.rank): r.cos_sim for r in
+             similarity.brute_force_topk(emb, queries, k=5).collect()}
+    full = {(r.query_id, r.vec_id, r.rank): r.cos_sim for r in
+            ivf.ivf_topk(spark, ivf_index, queries, k=5,
+                         nprobe=8).collect()}
+    assert len(exact) == 50
+    assert full.keys() == exact.keys()
+    assert all(abs(full[key] - exact[key]) <= 1e-12 for key in exact)
 
 
 def test_zero_norm_vectors_never_rank(spark):

@@ -4,6 +4,7 @@
 import datetime as dt
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from dq.audit import AuditStore
@@ -209,3 +210,36 @@ def test_partial_resume_processes_only_remaining(spark, tmp_path):
             out["scored"].select("partition_value").distinct().collect()}
     assert seen == set(parts) - set(half)
     out["scored"].unpersist()
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError,
+                   reason="exact_dedup sees only the current run's pages: "
+                          "a copy whose keeper lies in a day an earlier run "
+                          "already did is kept (ROADMAP.md: a persisted "
+                          "keeper table)")
+def test_split_runs_give_one_run_dedup_verdicts(spark, tmp_path):
+    """Days that reach the pipeline over two runs (the second resuming)
+    must get the same exact-dedup verdicts as one run over all pages:
+    ``http://a/1`` (09-20) is the min-url keeper of the text that
+    ``http://b/1`` (09-01) copies, whichever run sees which day."""
+    text = " ".join(["the quick brown fox jumps over the lazy dog"] * 8)
+    pages = spark.createDataFrame(
+        [("http://b/1", dt.datetime(2025, 9, 1, 12), text),
+         ("http://a/1", dt.datetime(2025, 9, 20, 12), text),
+         ("http://c/1", dt.datetime(2025, 9, 10, 12),
+          "a filler page with words of its own")],
+        "url string, warc_ts timestamp, text string")
+
+    def not_dup(store):
+        return {r.url: r.passed for r in store.read(spark, "lineage")
+                .filter("rule_name = 'rule_not_dup'").collect()}
+
+    one = AuditStore(str(tmp_path / "one"))
+    run_pipeline(spark, pages, "exec1", RUN_TS, store=one)["scored"].unpersist()
+    split = AuditStore(str(tmp_path / "split"))
+    first = pages.filter(F.to_date("warc_ts") <= dt.date(2025, 9, 15))
+    run_pipeline(spark, first, "exec1", RUN_TS,
+                 store=split)["scored"].unpersist()
+    run_pipeline(spark, pages, "exec2", RUN_TS, store=split,
+                 resume=True)["scored"].unpersist()
+    assert not_dup(split) == not_dup(one)
