@@ -33,9 +33,12 @@ file commits.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import threading
+from zoneinfo import ZoneInfo
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 # The V1 insertInto fallback must flip the SESSION-global
@@ -51,6 +54,29 @@ ROW_COUNT_HISTORY_SCHEMA = (
     "execution_id string, execution_timestamp timestamp, "
     "environment string, database_name string, table_name string, "
     "row_count long")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                ddl: str) -> DataFrame:
+    """Driver-built audit rows (``ddl``: ``"name type, ..."``) as a
+    pandas-backed ``LocalRelation``. A list of tuples would become a
+    Python RDD, which starts Python workers to write a few rows."""
+    names = [c.split()[0] for c in ddl.split(", ")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
+
+
+def session_ts(spark: SparkSession, ts: dt.datetime) -> dt.datetime:
+    """``ts`` made time-zone aware, a naive one read as wall time in the
+    session time zone. Audit stamps go through this once per run: a
+    naive datetime in ``F.lit`` or ``createDataFrame(list)`` is turned
+    into an instant with the driver's OS zone (``time.mktime``), in a
+    pandas frame with the session zone, so one run's tables would
+    disagree on a host whose OS zone differs."""
+    if ts.tzinfo is not None:
+        return ts
+    return ts.replace(tzinfo=ZoneInfo(
+        spark.conf.get("spark.sql.session.timeZone")))
+
 
 DEFAULT_PARTITIONING = {
     "lineage": ["partition_value"],

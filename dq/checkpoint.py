@@ -20,7 +20,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dq.audit import AuditStore
+from dq.audit import AuditStore, local_frame
 
 
 def completed_partitions(spark: SparkSession, store: AuditStore,
@@ -54,9 +54,8 @@ def mark_done(spark: SparkSession, store: AuditStore, scope: str,
               completed_at: dt.datetime) -> None:
     if not partition_values:
         return
-    rows = [(scope, execution_id, p, "done", completed_at)
-            for p in partition_values]
-    df = spark.createDataFrame(
-        rows, "scope string, execution_id string, partition_value date, "
-              "status string, completed_at timestamp")
-    store.append("checkpoint", df)
+    store.append("checkpoint", local_frame(
+        spark, [(scope, execution_id, p, "done", completed_at)
+                for p in partition_values],
+        "scope string, execution_id string, partition_value date, "
+        "status string, completed_at timestamp"))

@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq import rules, scoring
-from dq.audit import ROW_COUNT_HISTORY_SCHEMA, AuditStore
+from dq.audit import (ROW_COUNT_HISTORY_SCHEMA, AuditStore, local_frame,
+                      session_ts)
 from dq.compare import compare_row_counts
 from dq.thresholds import Threshold, compute_thresholds, threshold_for
 
@@ -215,7 +216,7 @@ def run_checks_job(
     already-completed tables, carries their persisted rows forward (see
     module docstring), and never appends twice.
     """
-    run_ts = dt.datetime.combine(run_date, dt.time(0, 0))
+    run_ts = session_ts(spark, dt.datetime.combine(run_date, dt.time(0, 0)))
 
     # 1. the cross-run feedback loop: history in → thresholds out
     history = store.read(spark, "row_count_history")
@@ -315,8 +316,9 @@ def run_checks_job(
     if fresh_df is not None:
         store.overwrite_partitions("freshness", fresh_df, ekeys)
     if counts:
-        store.overwrite_partitions("row_count_history", spark.createDataFrame(
-            [(execution_id, run_ts, e, d, t, c) for e, d, t, c in counts],
+        store.overwrite_partitions("row_count_history", local_frame(
+            spark, [(execution_id, run_ts, e, d, t, c)
+                    for e, d, t, c in counts],
             ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
     # checkpoint rewrite must keep the previously-done marks: the
     # overwrite is execution_id-keyed, so writing only the new keys

@@ -19,7 +19,9 @@ Scale shape (the plan at 100 TB):
 - lineage/metrics/docs derive from one persisted scored frame —
   MEMORY_AND_DISK locally, a staged Iceberg table on a cluster;
 - one collected per-day rule tally feeds rule_metrics, row_count_history
-  and the checkpoint; the resume anti-join touches only a tiny frame.
+  and the checkpoint, built as driver-local frames (``dq.audit.
+  local_frame``) so the audit tail starts no Python worker; the resume
+  anti-join touches only a tiny frame.
 """
 
 from __future__ import annotations
@@ -27,12 +29,12 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from dq.audit import ROW_COUNT_HISTORY_SCHEMA, AuditStore
+from dq.audit import (ROW_COUNT_HISTORY_SCHEMA, AuditStore, local_frame,
+                      session_ts)
 from dq.checkpoint import completed_partitions, filter_unprocessed, mark_done
 from dq.dedup import exact_dedup
 from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
@@ -130,21 +132,25 @@ def score_pages(spark: SparkSession, pages: DataFrame,
 
 
 def scrub(scored: DataFrame) -> DataFrame:
-    """PII-scrub the kept docs: ``text_scrubbed`` (NULL for dropped
-    docs) and ``scrub_changed``.
+    """PII-scrub the kept docs: ``text_scrubbed`` and ``scrub_changed``,
+    both NULL for dropped docs.
 
     The keep-condition goes INSIDE the UDF input: Spark extracts pandas
     UDFs out of ``when`` branches into an unconditional ArrowEvalPython
     node, so ``when(keep, scrub_udf(text))`` would still regex-scan every
     DROPPED doc — feeding ``when(keep, text)`` (null otherwise) instead
-    skips them inside the batch (na_action='ignore'), byte-identically
-    for kept docs."""
+    skips them inside the batch (na_action='ignore'). The UDF sends back
+    only the texts it changes (NULL elsewhere), so ``coalesce`` with the
+    JVM's own text gives the scrubbed text, byte-identically."""
+    keep = F.col("keep")
+    changed = F.col("_scrub_out")
     return (scored
-            .withColumn("text_scrubbed",
-                        scrub_udf(F.when(F.col("keep"), F.col("text"))))
-            .withColumn("scrub_changed",
-                        F.when(F.col("keep"),
-                               F.col("text_scrubbed") != F.col("text"))))
+            .withColumn("_scrub_out", scrub_udf(F.when(keep, F.col("text"))))
+            .withColumns({
+                "text_scrubbed": F.when(keep, F.coalesce(changed,
+                                                         F.col("text"))),
+                "scrub_changed": F.when(keep, changed.isNotNull())})
+            .drop("_scrub_out"))
 
 
 def melt_lineage(scored: DataFrame, execution_id: str) -> DataFrame:
@@ -194,6 +200,7 @@ def run_pipeline(
     partitions via the checkpoint anti-join (idempotent appends).
     """
     cfg = cfg or PipelineConfig()
+    run_ts = session_ts(spark, run_ts)
     pages = pages.withColumn("partition_value", F.to_date("warc_ts"))
     if resume and store is not None:
         done = completed_partitions(spark, store, scope)
@@ -221,9 +228,7 @@ def run_pipeline(
     rows = [(execution_id, d.partition_value, r, p, d.total, d.kept,
              d.total - p)
             for d in days for r in ALL_RULES for p in [d[f"pass__{r}"]]]
-    metrics = spark.createDataFrame(pd.DataFrame(rows, columns=[
-        c.split()[0] for c in RULE_METRICS_SCHEMA.split(", ")]),
-        RULE_METRICS_SCHEMA)              # pandas in: a LocalRelation
+    metrics = local_frame(spark, rows, RULE_METRICS_SCHEMA)
 
     if store is not None:
         # dynamic partition overwrite at day grain: a partition whose
@@ -234,10 +239,10 @@ def run_pipeline(
         store.overwrite_partitions("docs", docs)
         store.overwrite_partitions("lineage", lineage)
         store.overwrite_partitions("rule_metrics", metrics)
-        store.overwrite_partitions("row_count_history", spark.createDataFrame(
-            [(execution_id, run_ts, "PROD", scope,
-              None if d.partition_value is None else str(d.partition_value),
-              d.total) for d in days],
+        store.overwrite_partitions("row_count_history", local_frame(
+            spark, [(execution_id, run_ts, "PROD", scope,
+                     None if d.partition_value is None
+                     else str(d.partition_value), d.total) for d in days],
             ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
         mark_done(spark, store, scope, execution_id,
                   [d.partition_value for d in days], run_ts)

@@ -1398,8 +1398,9 @@ def q_pipeline_rules_only(spark, sf_dir):
     (ORACLE_HEURISTICS semantics at this config), the keep-first-by-url
     dedup (min(url) per text), and the scrubbed-text fingerprints
     (scrub is the identity on this corpus — proven separately by
-    scrubbed_fingerprints — so the md5 tallies pin the scrub stage's
-    byte-round-trip inside the composition too)."""
+    scrubbed_fingerprints — so the md5 tallies pin that the scrub UDF
+    reports no change here and that ``scrub``'s JVM keep/coalesce
+    projection hands back the kept text unchanged)."""
     scored = scrub(score_pages(spark, _documents_as_webpages(spark, sf_dir),
                                _FLAGSHIP_CFG, skip=("models",)))
     fp_hex = F.md5(F.encode(F.col("text_scrubbed"), "UTF-8"))
@@ -1678,7 +1679,8 @@ def q_scrubbed_fingerprints(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.md5(F.encode(scrub_udf(F.col("text")), "UTF-8"))
+        F.md5(F.encode(F.coalesce(scrub_udf(F.col("text")), F.col("text")),
+                       "UTF-8"))
         .alias("scrubbed_md5"))
 
 

@@ -90,5 +90,8 @@ def scrub_string(text: str | None) -> str | None:
 
 @F.pandas_udf(T.StringType())
 def scrub_udf(texts: pd.Series) -> pd.Series:
-    # Arrow batch in/out; compiled patterns shared across batches.
-    return texts.map(scrub_string, na_action="ignore")
+    # Changes only: scrub_string(t) where it differs from t, else NULL, so
+    # unchanged texts cross back as nulls; coalesce(scrub_udf(t), t) is the
+    # scrub. Arrow batch in/out; compiled patterns shared across batches.
+    out = texts.map(scrub_string, na_action="ignore")
+    return out.where(out != texts, None)

@@ -79,6 +79,22 @@ def test_full_run_persists_all_metric_stages(spark, tmp_path, specs):
     assert manifest["passed_tests"] + manifest["failed_tests"] == 13
 
 
+def test_run_stamps_use_session_time_zone(spark, tmp_path, specs,
+                                          os_time_zone):
+    """Every table a run stamps carries the run date's midnight in the
+    session zone (UTC), with the driver's OS zone at UTC+05:30."""
+    store = AuditStore(str(tmp_path / "audit"))
+    run_checks_job(spark, specs, "e1", RUN_DATE, store)
+    stamped = {t: "execution_timestamp" for t in (
+        "check_results", "dimension_scores", "summary_metrics_table",
+        "summary_metrics_database", "freshness", "row_count_history")}
+    stamped["checkpoint_tables"] = "completed_at"
+    for table, col in stamped.items():
+        got = {r.t for r in store.read(spark, table).select(
+            F.date_format(col, "yyyy-MM-dd HH:mm:ss").alias("t")).collect()}
+        assert got == {"2025-10-03 00:00:00"}, (table, got)
+
+
 def test_dynamic_threshold_feedback_across_runs(spark, tmp_path, specs):
     store = AuditStore(str(tmp_path / "audit"))
     key = ("DEV", "db1", "t1")

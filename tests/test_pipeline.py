@@ -63,20 +63,49 @@ def _final_plan(df) -> str:
     return plan.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
 
 
-def test_scored_plan_has_one_python_crossing(spark):
+class _RecordingStore(AuditStore):
+    """An AuditStore that records the analyzed plan's root class of
+    every frame written to it."""
+
+    def __init__(self, base_path):
+        super().__init__(base_path)
+        self.roots = {}
+
+    def _record(self, table, df):
+        self.roots[table] = (df._jdf.queryExecution().analyzed()
+                             .getClass().getSimpleName())
+
+    def append(self, table, df):
+        self._record(table, df)
+        super().append(table, df)
+
+    def overwrite_partitions(self, table, df, keys=None):
+        self._record(table, df)
+        super().overwrite_partitions(table, df, keys)
+
+
+def test_scored_plan_has_one_python_crossing(spark, tmp_path):
     """The stages keep the Python boundary crossed once per document:
     score_pages executes ONE ArrowEvalPython node (token stats, langid
     and perplexity fused) and one dedup exchange, so the keeper branch
     never pulls in the UDFs; run_pipeline's scored frame adds only the
-    scrub node."""
+    scrub node. The audit tail's driver-built frames are LocalRelations,
+    so writing them starts no Python worker (a silent fallback to a
+    Python RDD shows here)."""
     pages = webpages(spark, 2000)
     plan = _final_plan(score_pages(spark, pages))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    out = run_pipeline(spark, pages, "plan", RUN_TS, resume=False)
+    store = _RecordingStore(str(tmp_path / "audit"))
+    out = run_pipeline(spark, pages, "plan", RUN_TS, store=store)
     plan = _final_plan(out["scored"])
-    assert plan.count("ArrowEvalPython") == 2, plan
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 2, plan
+    assert sum("scrub_udf" in n for n in nodes) == 1, plan
     out["scored"].unpersist()
+    local = {t for t, root in store.roots.items() if root == "LocalRelation"}
+    assert local == {"rule_metrics", "row_count_history", "checkpoint"}, \
+        store.roots
 
 
 def test_flagship_goldens(spark):
@@ -121,22 +150,37 @@ def test_pipeline_outputs_and_scrub_identity(spark, tmp_path):
     store = AuditStore(str(tmp_path / "audit"))
     pages = webpages(spark, 600)
     # plus one page with no timestamp: its day (and history table_name)
-    # is NULL, never the string 'None'
-    pages = pages.unionByName(pages.limit(1).withColumns({
-        "url": F.lit("doc://no-ts"),
-        "warc_ts": F.lit(None).cast("timestamp")}))
+    # is NULL, never the string 'None'; a too-short page with PII (the
+    # scrub scans it, its verdict still hides the result); NULL text
+    one = pages.limit(1)
+    ts = F.to_timestamp(F.lit("2025-10-03 06:00:00"))
+    for url, cols in (
+            ("doc://no-ts", {"warc_ts": F.lit(None).cast("timestamp")}),
+            ("doc://pii-dropped", {"warc_ts": ts, "text": F.lit(
+                "mail jane.doe@example.com today")}),
+            ("doc://null-text", {"warc_ts": ts,
+                                 "text": F.lit(None).cast("string")})):
+        pages = pages.unionByName(one.withColumns({"url": F.lit(url), **cols}))
     out = run_pipeline(spark, pages, "exec1", RUN_TS, store=store)
 
     docs = out["docs"].collect()
     assert len(docs) > 0
-    # kept docs: scrubbed text byte-identical to python scrub of original
+    # kept docs: scrubbed text byte-identical to python scrub of original,
+    # scrub_changed exactly where it differs
     originals = {r.url: r.text for r in pages.collect()}
     changed = 0
     for d in docs:
         assert d.text == scrub_string(originals[d.url]), d.url
+        assert d.scrub_changed == (d.text != originals[d.url]), d.url
         changed += int(d.scrub_changed)
-    assert changed > 0                      # PII docs were kept and scrubbed
+    assert 0 < changed < len(docs)          # PII docs were kept and scrubbed
     assert all("@" not in d.text or "[EMAIL]" in d.text for d in docs)
+    # dropped docs carry no scrub verdict; NULL text stays NULL
+    scored = {r.url: r for r in out["scored"].filter(F.col("url").isin(
+        "doc://pii-dropped", "doc://null-text")).collect()}
+    assert not scored["doc://pii-dropped"].keep
+    for r in scored.values():
+        assert r.text_scrubbed is None and r.scrub_changed is None, r
 
     # lineage: one row per (url, rule)
     from dq.pipeline import ALL_RULES
@@ -178,6 +222,22 @@ def test_pipeline_outputs_and_scrub_identity(spark, tmp_path):
         .getClass().getSimpleName() == "LocalRelation"
 
     out["scored"].unpersist()
+
+
+def test_audit_timestamps_use_session_time_zone(spark, tmp_path,
+                                                os_time_zone):
+    """A naive run_ts is stored as that wall time in the session zone
+    (UTC), whatever the driver's OS zone: row_count_history and the
+    checkpoint read back as RUN_TS with the driver at UTC+05:30."""
+    store = AuditStore(str(tmp_path / "audit_tz"))
+    run_pipeline(spark, webpages(spark, 100), "exec_tz", RUN_TS,
+                 store=store)["scored"].unpersist()
+    want = RUN_TS.strftime("%Y-%m-%d %H:%M:%S")
+    for table, col in (("row_count_history", "execution_timestamp"),
+                       ("checkpoint", "completed_at")):
+        got = {r.t for r in store.read(spark, table).select(
+            F.date_format(col, "yyyy-MM-dd HH:mm:ss").alias("t")).collect()}
+        assert got == {want}, (table, got)
 
 
 def test_resume_skips_completed_partitions(spark, tmp_path):

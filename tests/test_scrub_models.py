@@ -32,10 +32,13 @@ def test_scrub_spark_matches_python_bytewise(spark):
     texts = [g[0] for g in GOLDEN if g[0] is not None] + [
         "Contact erin@example.com or call +1-555-087-8965 from host "
         "203.10.139.157. That felgercarb server is down."]
+    texts.append(None)
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [r.s for r in df.select(scrub_udf("text").alias("s")).collect()]
+    got = df.select("text", scrub_udf("text").alias("s")).collect()
     want = [scrub_string(t) for t in texts]
-    assert got == want                      # byte-identical per row
+    # changes only: NULL exactly where the scrub leaves the text as is
+    assert [r.s is None for r in got] == [w == t for w, t in zip(want, texts)]
+    assert [r.text if r.s is None else r.s for r in got] == want
 
 
 def test_langid_on_vocab_sentences():
