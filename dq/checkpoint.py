@@ -41,12 +41,11 @@ def completed_partitions(spark: SparkSession, store: AuditStore,
     return [r["partition_value"] for r in rows]
 
 
-def filter_unprocessed(df: DataFrame, done: list[dt.date],
-                       partition_col: str = "partition_value") -> DataFrame:
+def filter_unprocessed(df: DataFrame, done: list[dt.date]) -> DataFrame:
     """Drop already-completed partitions (partition-pruning-friendly)."""
     if not done:
         return df
-    return df.filter(~F.col(partition_col).isin(done))
+    return df.filter(~F.col("partition_value").isin(done))
 
 
 def mark_done(spark: SparkSession, store: AuditStore, scope: str,

@@ -112,8 +112,7 @@ FRESHNESS_SCHEMA = (
 
 
 def save_run_manifest(results: list[dict[str, Any]], out_dir: str,
-                      execution_id: str, run_ts: dt.datetime,
-                      extra: dict[str, Any] | None = None) -> str:
+                      execution_id: str, run_ts: dt.datetime) -> str:
     """S6 JSON sink (reference ``utils/helpers.py:13-46``): dump the run's
     result dicts + summary counts to ``<out_dir>/dq_results_<id>.json``."""
     os.makedirs(out_dir, exist_ok=True)
@@ -126,8 +125,6 @@ def save_run_manifest(results: list[dict[str, Any]], out_dir: str,
         "failed_tests": sum(1 for r in results if not r["passed"]),
         "results": results,
     }
-    if extra:
-        payload.update(extra)
     with open(path, "w", encoding="utf-8") as f:
         json.dump(payload, f, indent=2, default=str)
     return path
@@ -202,7 +199,6 @@ def run_checks_job(
     store: AuditStore,
     resume: bool = True,
     manifest_dir: str | None = None,
-    enabled: dict[str, bool] | None = None,
 ) -> dict[str, Any]:
     """One full check run over every configured table.
 
@@ -237,7 +233,7 @@ def run_checks_job(
             spark.read.parquet(spec.path), spec.database, spec.table,
             spec.expected_schema, run_date=run_date,
             threshold=threshold_for(thresholds, *key),
-            environment=spec.environment, enabled=enabled)
+            environment=spec.environment)
         results.extend(table_results)
         for r in table_results:
             if r["test_name"] == "row_count_check":

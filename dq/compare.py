@@ -18,18 +18,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def compare_row_counts(counts: DataFrame,
-                       dev_env: str = "DEV",
-                       prod_env: str = "PROD") -> DataFrame:
+def compare_row_counts(counts: DataFrame) -> DataFrame:
     """counts: (environment, database, table, row_count) → comparison rows.
 
     Output: database, table, dev_count, prod_count, difference, passed —
     only for pairs where both sides exist and neither is zero.
     """
-    dev = (counts.filter(F.col("environment") == dev_env)
+    dev = (counts.filter(F.col("environment") == "DEV")
            .select("database", "table",
                    F.col("row_count").alias("dev_count")))
-    prod = (counts.filter(F.col("environment") == prod_env)
+    prod = (counts.filter(F.col("environment") == "PROD")
             .select("database", "table",
                     F.col("row_count").alias("prod_count")))
     return (

@@ -30,45 +30,44 @@ from pyspark.sql import functions as F
 from dq.dedup import make_shingles_udf
 
 
-def benchmark_ngrams(benchmark: DataFrame, text_col: str = "text",
-                     n: int = 8) -> DataFrame:
-    """Distinct n-gram shingle set of the benchmark side (one column,
-    ``gram``). Built once and broadcast by :func:`flag_contaminated`."""
+def benchmark_ngrams(benchmark: DataFrame, n: int = 8) -> DataFrame:
+    """Distinct n-gram shingle set of the benchmark side's ``text`` (one
+    column, ``gram``). Built once and broadcast by
+    :func:`flag_contaminated`."""
     return (benchmark
-            .select(F.explode(make_shingles_udf(n)(F.col(text_col)))
+            .select(F.explode(make_shingles_udf(n)(F.col("text")))
                     .alias("gram"))
             .distinct())
 
 
 def flag_contaminated(corpus: DataFrame, benchmark: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
                       n: int = 8, min_hits: int = 1) -> DataFrame:
-    """Per-corpus-doc contamination flags.
+    """Per-corpus-doc contamination flags over ``doc_id`` and ``text``.
 
-    Returns (id_col, hits, contaminated): ``hits`` = number of the
+    Returns (doc_id, hits, contaminated): ``hits`` = number of the
     document's DISTINCT n-gram shingles that appear anywhere in the
     benchmark set (per-doc distinctness comes from the shingle UDF, so
     a gram repeated inside one document counts once); ``contaminated``
     = hits >= min_hits. Documents with no shingles (blank/short text)
     report hits=0.
 
-    Precondition (same as ``dq.dedup.exact_dedup``): ``id_col`` values
+    Precondition (same as ``dq.dedup.exact_dedup``): ``doc_id`` values
     are unique in ``corpus``. Duplicate ids would sum their rows' hits
     under one key and duplicate output rows — deduplicating here would
     cost a corpus-wide exchange the broadcast design exists to avoid,
     so the contract is on the caller (web corpora key by url).
     """
-    bench = F.broadcast(benchmark_ngrams(benchmark, text_col, n))
+    bench = F.broadcast(benchmark_ngrams(benchmark, n))
     grams = corpus.select(
-        F.col(id_col),
-        F.explode(make_shingles_udf(n)(F.col(text_col))).alias("gram"))
+        F.col("doc_id"),
+        F.explode(make_shingles_udf(n)(F.col("text"))).alias("gram"))
     hits = (grams.join(bench, "gram")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("hits")))
     zero = F.lit(0).cast("long")
-    return (corpus.select(id_col)
-            .join(hits, id_col, "left")
-            .select(F.col(id_col),
+    return (corpus.select("doc_id")
+            .join(hits, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("hits"), zero).alias("hits"),
                     (F.coalesce(F.col("hits"), zero) >= min_hits)
                     .alias("contaminated")))

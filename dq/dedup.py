@@ -151,8 +151,7 @@ def make_shingles_udf(n: int = 3):
 
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
-                  min_num: int = 1, min_den: int = 2,
-                  num_partitions: int | None = None) -> DataFrame:
+                  min_num: int = 1, min_den: int = 2) -> DataFrame:
     """Exact n-gram Jaccard similar pairs with sim ≥ min_num/min_den.
 
     Plan: explode distinct shingles → inverted index → self-equi-join on
@@ -166,12 +165,12 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     d(d-1)/2 join rows. For web-scale corpora use
     :func:`minhash_lsh_pairs`, whose shuffle is O(docs × bands).
     """
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(text_col).alias("_text"))
-    if num_partitions:
-        # small single-file inputs read as ONE split; spread the
-        # shingle computation and join across the cluster
-        base = base.repartition(num_partitions, "_id")
+    # small single-file inputs read as ONE split; spread the shingle
+    # computation and join across the cluster
+    base = (df.select(F.col(id_col).alias("_id"),
+                      F.col(text_col).alias("_text"))
+            .repartition(df.sparkSession.sparkContext.defaultParallelism,
+                         "_id"))
     # Arrow-UDF shingling (result-identical to the Column form, ~15x
     # faster — see make_shingles_udf); the self-join's two sides share
     # one shuffle via ReusedExchange so shingles compute once per doc
@@ -288,8 +287,7 @@ def make_minhash_udf(num_hashes: int = 64, n: int = 3):
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_hashes: int = 64,
-                      bands: int = 16, n: int = 3,
-                      num_partitions: int | None = None) -> DataFrame:
+                      bands: int = 16, n: int = 3) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
 
     Signature of ``num_hashes`` minhashes split into ``bands`` bands of
@@ -304,11 +302,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     estimated Jaccard from full-signature agreement.
     """
     rows = num_hashes // bands
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col))
-    if num_partitions:
-        # small single-file inputs read as ONE split; spread the
-        # signature computation across the cluster
-        base = base.repartition(num_partitions, "_id")
+    # small single-file inputs read as ONE split; spread the signature
+    # computation across the cluster
+    base = (df.select(F.col(id_col).alias("_id"), F.col(text_col))
+            .repartition(df.sparkSession.sparkContext.defaultParallelism,
+                         "_id"))
     base = (base.withColumn("_sig", make_minhash_udf(num_hashes, n)(
                 F.col(text_col)))
                 .select("_id", "_sig")
@@ -372,8 +370,7 @@ def simhash64(text: Column) -> Column:
 
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
-                  max_hamming: int = 3,
-                  num_partitions: int | None = None) -> DataFrame:
+                  max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
 
     Pigeonhole banding: split the 64-bit fingerprint into
@@ -388,9 +385,9 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     chunks = max_hamming + 1
     width = 64 // chunks
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col))
-    if num_partitions:
-        base = base.repartition(num_partitions, "_id")
+    base = (df.select(F.col(id_col).alias("_id"), F.col(text_col))
+            .repartition(df.sparkSession.sparkContext.defaultParallelism,
+                         "_id"))
     base = (base.withColumn("_fp", simhash64(F.col(text_col)))
             .select("_id", "_fp")
             .filter(F.col("_fp").isNotNull()))
@@ -413,10 +410,9 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 
 # ------------------------------------------------- connected components ---
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
-    """Cluster the near-dup pair graph: ``(doc_id, cluster_id)`` where
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Cluster the near-dup pair graph (``id_a``, ``id_b`` edges):
+    ``(doc_id, cluster_id)`` where
     ``cluster_id`` is the minimum doc id in the connected component.
 
     The missing last step of every pair-producing dedup family above
@@ -461,7 +457,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     (returning partially-propagated labels would silently split
     clusters).
     """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    edges = pairs.select(F.col("id_a").alias("src"),
+                         F.col("id_b").alias("dst"))
     edges = (edges.union(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
              .distinct()
@@ -514,9 +511,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
 
 def drop_near_duplicates(df: DataFrame, pairs: DataFrame,
-                         id_col: str = "doc_id",
-                         id_a: str = "id_a", id_b: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
+                         id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (the minimum id) per near-dup cluster.
 
     Composition of :func:`connected_components` + left-anti join: every
@@ -525,8 +520,7 @@ def drop_near_duplicates(df: DataFrame, pairs: DataFrame,
     pass through unchanged. Deterministic: the survivor of a cluster is
     always its lexicographically smallest id.
     """
-    cc = connected_components(pairs, id_a=id_a, id_b=id_b,
-                              max_iter=max_iter)
+    cc = connected_components(pairs)
     losers = (cc.filter(F.col("doc_id") != F.col("cluster_id"))
               .select(F.col("doc_id").alias(id_col)))
     return df.join(losers, id_col, "left_anti")

@@ -287,11 +287,10 @@ def with_heuristics(df: DataFrame, text_col: str = "text",
         cfg)
 
 
-def with_heuristics_expr(df: DataFrame, text_col: str = "text",
-                         cfg: HeuristicConfig | None = None) -> DataFrame:
+def with_heuristics_expr(df: DataFrame) -> DataFrame:
     """Pure Column-expression implementation — IDENTICAL semantics to
-    :func:`with_heuristics`, kept as the JVM-side reference for parity
-    tests and oracle authoring.
+    :func:`with_heuristics` (over ``text``, default config), kept as the
+    JVM-side reference for parity tests and oracle authoring.
 
     NOT the hot path: the per-token work runs in *interpreted*
     higher-order functions (``F.aggregate`` / ``F.transform`` /
@@ -299,8 +298,7 @@ def with_heuristics_expr(df: DataFrame, text_col: str = "text",
     0.42 scaling efficiency 8→32 cores as a pipeline stage — use the
     Arrow-UDF default for anything data-wide.
     """
-    cfg = cfg or HeuristicConfig()
-    text = F.col(text_col)
+    text = F.col("text")
     has_text = text.isNotNull() & (F.trim(text) != "")
 
     # lowercase ONCE on the full string, then tokenize; normalize ONCE:
@@ -331,5 +329,5 @@ def with_heuristics_expr(df: DataFrame, text_col: str = "text",
         "_alpha_count": F.size(F.filter(words,
                                         lambda w: w.rlike(_LETTER_RE))),
     }).drop("_words", "_norm")
-    return _with_rules(df, cfg)
+    return _with_rules(df, HeuristicConfig())
 

@@ -82,15 +82,14 @@ def lloyd(mat: np.ndarray, k: int, n_iter: int = 8,
 
 
 def train_centroids(df: DataFrame, n_centroids: int,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     max_train: int = 262_144, n_iter: int = 8,
                     seed: int = 7) -> np.ndarray:
     """Fit centroids on the id-ordered head of the corpus (bounded,
     deterministic sample — the FAISS-style train-on-a-sample step).
     Driver memory is ``max_train × dim × 8`` bytes, explicit and
     bounded; everything after training stays distributed."""
-    pdf = (df.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_v"))
+    pdf = (df.select(F.col("vec_id").alias("_id"),
+                     F.col("embedding").alias("_v"))
            .orderBy("_id").limit(max_train).toPandas())
     if len(pdf) == 0:
         raise ValueError("train_centroids: empty corpus")
@@ -99,8 +98,6 @@ def train_centroids(df: DataFrame, n_centroids: int,
 
 
 def train_centroids_from_parquet(path: str, n_centroids: int,
-                                 id_col: str = "vec_id",
-                                 vec_col: str = "embedding",
                                  max_train: int = 262_144,
                                  n_iter: int = 8,
                                  seed: int = 7) -> np.ndarray:
@@ -110,9 +107,9 @@ def train_centroids_from_parquet(path: str, n_centroids: int,
     to what the Spark query trains."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(path, columns=[id_col, vec_col]).to_pandas()
-    t = t.sort_values(id_col, kind="mergesort").head(max_train)
-    return lloyd(_stack(t[vec_col].reset_index(drop=True)),
+    t = pq.read_table(path, columns=["vec_id", "embedding"]).to_pandas()
+    t = t.sort_values("vec_id", kind="mergesort").head(max_train)
+    return lloyd(_stack(t["embedding"].reset_index(drop=True)),
                  n_centroids, n_iter, seed)
 
 
@@ -139,7 +136,6 @@ def make_assign_udf(spark, centroids: np.ndarray):
 
 
 def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     max_train: int = 262_144, n_iter: int = 8,
                     seed: int = 7) -> np.ndarray:
     """Train centroids, assign every row to its inverted list, write
@@ -150,12 +146,11 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     parquet directory scans) so queries reopen the index without
     retraining; JSON floats round-trip exactly (shortest-repr)."""
     spark = df.sparkSession
-    cents = train_centroids(df, n_centroids, id_col, vec_col,
-                            max_train, n_iter, seed)
+    cents = train_centroids(df, n_centroids, max_train, n_iter, seed)
     assign = make_assign_udf(spark, cents)
-    (df.select(F.col(id_col).alias("x_id"),
-               F.col(vec_col).alias("x_v"),
-               assign(F.col(vec_col)).alias("list_id"))
+    (df.select(F.col("vec_id").alias("x_id"),
+               F.col("embedding").alias("x_v"),
+               assign(F.col("embedding")).alias("list_id"))
      .repartition(F.col("list_id"))
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
     with open(os.path.join(path, CENTROID_SIDECAR), "w") as fh:
@@ -181,9 +176,7 @@ def probe_lists(qmat: np.ndarray, centroids: np.ndarray,
 
 
 def ivf_topk(spark, path: str, queries: DataFrame, k: int = 5,
-             nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding", query_id_col: str = "query_id",
-             max_queries: int = 100_000) -> DataFrame:
+             nprobe: int = 4, max_queries: int = 100_000) -> DataFrame:
     """Approximate cosine top-k over a :func:`build_ivf_index` index.
 
     Probe lists are computed driver-side from the one query collect
@@ -196,8 +189,7 @@ def ivf_topk(spark, path: str, queries: DataFrame, k: int = 5,
     is exactly the neighbors whose list was not probed; raise
     ``nprobe`` to buy recall per query, no rebuild."""
     cents = load_centroids(path)
-    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
-                         "ivf_topk")
+    q = _collect_queries(queries, max_queries, "ivf_topk")
     qids, qmat, _ = q
     member = np.zeros((len(qids), cents.shape[0]), dtype=bool)
     if len(qids):
@@ -205,9 +197,9 @@ def ivf_topk(spark, path: str, queries: DataFrame, k: int = 5,
                           axis=1)                          # (Q, k_cent)
     wanted = np.nonzero(member.any(axis=0))[0].tolist()
     pruned = (spark.read.parquet(path).filter(F.col("list_id").isin(wanted))
-              .select(F.col("x_id").alias(id_col),
-                      F.col("x_v").alias(vec_col), "list_id"))
-    return _topk_scan(pruned, q, member, _in_probed_list, k, id_col, vec_col)
+              .select(F.col("x_id").alias("vec_id"),
+                      F.col("x_v").alias("embedding"), "list_id"))
+    return _topk_scan(pruned, q, member, _in_probed_list, k)
 
 
 def _in_probed_list(pdf: pd.DataFrame, cmat: np.ndarray,

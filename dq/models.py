@@ -240,10 +240,9 @@ class LangIdModel:
         self._unk_idx = n_langs
 
     @classmethod
-    def train(cls, sources: dict[str, list[str]] = None) -> "LangIdModel":
-        sources = sources or LANG_PROFILES_SOURCE
+    def train(cls) -> "LangIdModel":
         profiles = {}
-        for lang, words in sources.items():
+        for lang, words in LANG_PROFILES_SOURCE.items():
             counts: Counter = Counter()
             for w in words:
                 b = (" " + w.lower() + " ").encode("utf-8")
@@ -455,8 +454,9 @@ class NGramLM:
             self._max_probe = max(self._max_probe, probe)
 
     @classmethod
-    def train(cls, seed: int = 1234, n_tokens: int = 60_000) -> "NGramLM":
-        rng = random.Random(seed)
+    def train(cls) -> "NGramLM":
+        n_tokens = 60_000
+        rng = random.Random(1234)
         toks = []
         for _ in range(n_tokens):
             if rng.random() < 0.45:

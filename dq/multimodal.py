@@ -34,13 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType([
-    T.StructField("media_type", T.StringType()),      # image|audio
-    T.StructField("mime", T.StringType()),
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("sha1", T.StringType()),
-])
-
 IMAGE_META_SCHEMA = T.StructType([
     T.StructField("width", T.IntegerType()),
     T.StructField("height", T.IntegerType()),
@@ -48,21 +41,12 @@ IMAGE_META_SCHEMA = T.StructType([
 ])
 
 
-def media_table_schema() -> T.StructType:
-    """Canonical multimodal table shape: id + opaque payload + metadata."""
-    return T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META_SCHEMA),
-    ])
-
-
-def with_media_meta(df: DataFrame, payload_col: str = "payload",
-                    media_type: str = "image",
+def with_media_meta(df: DataFrame, media_type: str = "image",
                     mime: str = "image/png") -> DataFrame:
-    """Attach the typed metadata struct — pure Column expressions
-    (length / sha1 are JVM built-ins; no decode needed)."""
-    p = F.col(payload_col)
+    """Attach the typed metadata struct of the ``payload`` column — pure
+    Column expressions (length / sha1 are JVM built-ins; no decode
+    needed)."""
+    p = F.col("payload")
     return df.withColumn("meta", F.struct(
         F.lit(media_type).alias("media_type"),
         F.lit(mime).alias("mime"),
@@ -72,8 +56,7 @@ def with_media_meta(df: DataFrame, payload_col: str = "payload",
     ))
 
 
-def _decode_column(df: DataFrame, payload_col: str, out_col: str,
-                   out_type: T.StructType,
+def _decode_column(df: DataFrame, out_col: str, out_type: T.StructType,
                    decode: Callable[[bytes | None], dict | None]
                    ) -> DataFrame:
     """Append ``out_col`` = ``decode(payload)`` per row via
@@ -87,7 +70,7 @@ def _decode_column(df: DataFrame, payload_col: str, out_col: str,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = [decode(p) for p in pdf[payload_col]]
+            pdf[out_col] = [decode(p) for p in pdf["payload"]]
             yield pdf[names]
 
     return df.mapInPandas(run, out_schema)
@@ -99,11 +82,10 @@ def _ppm_struct(payload: bytes | None) -> dict | None:
                                    "channels": m[2]}
 
 
-def decode_images(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Append an ``img`` struct (width/height/channels) decoded from
-    binary-PPM payloads by :func:`decode_ppm_meta`."""
-    return _decode_column(df, payload_col, "img", IMAGE_META_SCHEMA,
-                          _ppm_struct)
+    binary-PPM ``payload`` bytes by :func:`decode_ppm_meta`."""
+    return _decode_column(df, "img", IMAGE_META_SCHEMA, _ppm_struct)
 
 
 _PPM_HEADER_RE = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)[ \t\r\n]")
@@ -309,11 +291,10 @@ PNG_META_SCHEMA = T.StructType([
 ])
 
 
-def decode_pngs(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_pngs(df: DataFrame) -> DataFrame:
     """Append a ``png`` struct (width/height/channels/pixel_sum) decoded
-    by the stdlib PNG codec :func:`decode_png_meta`."""
-    return _decode_column(df, payload_col, "png", PNG_META_SCHEMA,
-                          decode_png_meta)
+    from ``payload`` by the stdlib PNG codec :func:`decode_png_meta`."""
+    return _decode_column(df, "png", PNG_META_SCHEMA, decode_png_meta)
 
 
 def synthetic_pngs(spark, n_rows: int, num_partitions: int | None = None
@@ -381,9 +362,8 @@ def resize_ppm(payload: bytes | None, width: int, height: int
             int(out.sum(dtype=np.int64)))
 
 
-def resize_images(df: DataFrame, width: int, height: int,
-                  payload_col: str = "payload") -> DataFrame:
-    """Distributed REAL resize over a binary media column: mapInPandas
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Distributed REAL resize over the binary ``payload`` column: mapInPandas
     (iterator form, codec loop per payload — the resize IS the per-
     payload work) appending the resized P6 payload, its dims, and its
     pixel-byte sum; an undecodable payload gets NULL ``resized`` and
@@ -401,7 +381,7 @@ def resize_images(df: DataFrame, width: int, height: int,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            res = [resize_ppm(p, width, height) for p in pdf[payload_col]]
+            res = [resize_ppm(p, width, height) for p in pdf["payload"]]
             pdf["resized"] = [r[0] if r else None for r in res]
             pdf["resized_w"] = np.int32(width)
             pdf["resized_h"] = np.int32(height)
@@ -422,11 +402,12 @@ AUDIO_META_SCHEMA = T.StructType([
 ])
 
 
-def synthesize_wav(media_id: int, sample_rate: int = 8000) -> bytes:
-    """REAL RIFF/WAVE bytes (stdlib ``wave`` writer): a PCM16 mono sine
+def synthesize_wav(media_id: int) -> bytes:
+    """REAL RIFF/WAVE bytes (stdlib ``wave`` writer): a PCM16 mono 8 kHz sine
     tone whose frequency and length are pure functions of the id, so
     the synthetic audio table is deterministic under any partitioning
     (same scheme as dq.synth.webpages)."""
+    sample_rate = 8000
     freq = 110.0 + (media_id % 32) * 55.0
     n = sample_rate // 10 + (media_id % 7) * (sample_rate // 100)
     t = np.arange(n, dtype=np.float64)
@@ -472,17 +453,15 @@ def decode_wav_meta(payload: bytes | None) -> dict | None:
             "rms": rms}
 
 
-def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Append an ``audio`` struct decoded from WAV payloads by the
-    stdlib codec :func:`decode_wav_meta`."""
-    return _decode_column(df, payload_col, "audio", AUDIO_META_SCHEMA,
-                          decode_wav_meta)
+def decode_audio(df: DataFrame) -> DataFrame:
+    """Append an ``audio`` struct decoded from WAV ``payload`` bytes by
+    the stdlib codec :func:`decode_wav_meta`."""
+    return _decode_column(df, "audio", AUDIO_META_SCHEMA, decode_wav_meta)
 
 
-def synthetic_audio(spark, n_rows: int, num_partitions: int | None = None,
-                    sample_rate: int = 8000) -> DataFrame:
+def synthetic_audio(spark, n_rows: int, num_partitions: int | None = None
+                    ) -> DataFrame:
     """Deterministic audio media table carrying REAL WAV payloads
     (``synthesize_wav`` per id)."""
     return _synthetic_payload_table(
-        spark, n_rows, num_partitions,
-        lambda i: synthesize_wav(i, sample_rate), "audio", "audio/wav")
+        spark, n_rows, num_partitions, synthesize_wav, "audio", "audio/wav")

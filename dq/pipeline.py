@@ -50,6 +50,7 @@ class PipelineConfig:
     repartition: int | None = None       # explicit pre-stage balancing
 
 
+SCOPE = "webpages"                       # checkpoint scope, history table name
 ALL_RULES = RULE_NAMES + ["rule_lang", "rule_ppl", "rule_not_dup"]
 RULE_METRICS_SCHEMA = (
     "execution_id string, partition_value date, rule_name string, "
@@ -187,7 +188,6 @@ def run_pipeline(
     store: AuditStore | None = None,
     resume: bool = True,
     cfg: PipelineConfig | None = None,
-    scope: str = "webpages",
 ) -> dict[str, DataFrame]:
     """Full run. Returns {'docs', 'lineage', 'metrics', 'scored'} frames.
 
@@ -203,7 +203,7 @@ def run_pipeline(
     run_ts = session_ts(spark, run_ts)
     pages = pages.withColumn("partition_value", F.to_date("warc_ts"))
     if resume and store is not None:
-        done = completed_partitions(spark, store, scope)
+        done = completed_partitions(spark, store, SCOPE)
         pages = filter_unprocessed(pages, done)
 
     # persist WITHOUT the raw text: every downstream consumer (docs/
@@ -240,11 +240,11 @@ def run_pipeline(
         store.overwrite_partitions("lineage", lineage)
         store.overwrite_partitions("rule_metrics", metrics)
         store.overwrite_partitions("row_count_history", local_frame(
-            spark, [(execution_id, run_ts, "PROD", scope,
+            spark, [(execution_id, run_ts, "PROD", SCOPE,
                      None if d.partition_value is None
                      else str(d.partition_value), d.total) for d in days],
             ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
-        mark_done(spark, store, scope, execution_id,
+        mark_done(spark, store, SCOPE, execution_id,
                   [d.partition_value for d in days], run_ts)
 
     return {"docs": docs, "lineage": lineage, "metrics": metrics,

@@ -709,8 +709,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     """Exact 3-gram Jaccard near-dup pairs (sim ≥ 1/3), integer-exact."""
     d = _t(spark, sf_dir, "documents")
     return dedup.jaccard_pairs(d, "doc_id", "text", n=3,
-                               min_num=1, min_den=3,
-                               num_partitions=spark.sparkContext.defaultParallelism)
+                               min_num=1, min_den=3)
 
 
 ORACLE_JACCARD = """
@@ -751,8 +750,7 @@ def q_dedup_clusters(spark, sf_dir):
     its cluster representative and cluster size."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", n=3, min_num=1, min_den=3,
-        num_partitions=spark.sparkContext.defaultParallelism)
+        d, "doc_id", "text", n=3, min_num=1, min_den=3)
     cc = dedup.connected_components(pairs)
     sizes = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size"))
@@ -816,8 +814,7 @@ def q_near_dedup_keep(spark, sf_dir):
     (NOT IN would diverge from left_anti on a NULL id)."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(
-        d, "doc_id", "text", n=3, min_num=1, min_den=3,
-        num_partitions=spark.sparkContext.defaultParallelism)
+        d, "doc_id", "text", n=3, min_num=1, min_den=3)
     kept = dedup.drop_near_duplicates(d, pairs, id_col="doc_id")
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("kept_docs"))
@@ -842,8 +839,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     vs the spec)."""
     d = _t(spark, sf_dir, "documents")
     return (dedup.minhash_lsh_pairs(d, "doc_id", "text",
-                                    num_hashes=64, bands=16, n=3,
-                                    num_partitions=spark.sparkContext.defaultParallelism)
+                                    num_hashes=64, bands=16, n=3)
             .select("id_a", "id_b", "est_jaccard"))
 
 
@@ -893,8 +889,7 @@ def q_simhash_pairs(spark, sf_dir):
     votes, dq/dedup.py) → the exact pair set + Hamming distances
     reproduce in DuckDB SQL."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(d, "doc_id", "text", max_hamming=3,
-                               num_partitions=spark.sparkContext.defaultParallelism)
+    return dedup.simhash_pairs(d, "doc_id", "text", max_hamming=3)
 
 
 def _simhash_oracle_sql() -> str:
@@ -1295,7 +1290,7 @@ def q_embedding_ivf_topk(spark, sf_dir):
                                                 nprobe=IVF_NPROBE))
 
 
-def ivf_oracle_sql(sf_dir: str, k: int = 5) -> str:
+def ivf_oracle_sql(sf_dir: str) -> str:
     """Exact SQL mirror of ``q_embedding_ivf_topk``, generated at
     comparison time because the centroids depend on the DATA (unlike
     the seeded plane literals): train the same centroids from the same
@@ -1351,7 +1346,7 @@ WITH cents(cid, cv) AS (VALUES
 SELECT query_id, vec_id, round(cos_sim, 6) AS cos_sim_r6,
        row_number() OVER (PARTITION BY query_id
                           ORDER BY cos_sim DESC, vec_id) AS rank
-FROM scored QUALIFY rank <= {k}
+FROM scored QUALIFY rank <= 5
 """
 
 

@@ -111,22 +111,22 @@ def collect_table_metrics(df: DataFrame, expected_schema: dict[str, str] | None 
     return row
 
 
-def _result(test_name: str, database: str, table: str, partition, passed: bool,
+def _result(test_name: str, database: str, table: str, passed: bool,
             details: str, dimension: str, **extra: Any) -> dict[str, Any]:
     out = {
         "test_name": test_name, "database": database, "table": table,
-        "partition": partition, "passed": bool(passed), "details": details,
+        "partition": None, "passed": bool(passed), "details": details,
         "dimension": dimension,
     }
     out.update(extra)
     return out
 
 
-def null_columns_check(m: dict, df: DataFrame, database: str, table: str,
-                       partition=None) -> dict[str, Any]:
+def null_columns_check(m: dict, df: DataFrame, database: str,
+                       table: str) -> dict[str, Any]:
     total = m["__total"]
     if total == 0:
-        return _result("null_columns_check", database, table, partition, True,
+        return _result("null_columns_check", database, table, True,
                        "Table is empty - no null-only columns to check",
                        "completeness", null_columns=[])
     bad = []
@@ -143,18 +143,18 @@ def null_columns_check(m: dict, df: DataFrame, database: str, table: str,
     details = ("No columns with all NULL or empty values found" if passed else
                f"Found {len(bad)} columns with all NULL or empty values: "
                + ", ".join(b["column"] for b in bad))
-    return _result("null_columns_check", database, table, partition, passed,
+    return _result("null_columns_check", database, table, passed,
                    details, "completeness", null_columns=bad, total_rows=total)
 
 
 def row_count_check(m: dict, database: str, table: str,
-                    threshold: Threshold, partition=None) -> dict[str, Any]:
+                    threshold: Threshold) -> dict[str, Any]:
     rc = m["__total"]
     passed = rc >= threshold.min_rows
     suffix = (" based on increment trend"
               if threshold.method == "increment" else "")
     return _result(
-        "row_count_check", database, table, partition, passed,
+        "row_count_check", database, table, passed,
         f"Table has {rc} rows (minimum: {threshold.min_rows}{suffix})",
         "completeness", actual_row_count=rc,
         minimum_required=threshold.min_rows,
@@ -162,7 +162,7 @@ def row_count_check(m: dict, database: str, table: str,
 
 
 def schema_presence_check(df: DataFrame, expected_schema: dict[str, str],
-                          database: str, table: str, partition=None) -> dict[str, Any]:
+                          database: str, table: str) -> dict[str, Any]:
     actual = {c.lower() for c in df.columns}
     expected = {c.lower() for c in expected_schema}
     missing = sorted(expected - actual)
@@ -170,13 +170,13 @@ def schema_presence_check(df: DataFrame, expected_schema: dict[str, str],
     passed = not missing
     details = ("All expected columns present" if passed else
                f"Missing columns: {', '.join(missing)}")
-    return _result("schema_presence_check", database, table, partition,
+    return _result("schema_presence_check", database, table,
                    passed, details, "consistency",
                    missing_columns=missing, extra_columns=extra)
 
 
 def schema_types_check(m: dict, df: DataFrame, expected_schema: dict[str, str],
-                       database: str, table: str, partition=None) -> dict[str, Any]:
+                       database: str, table: str) -> dict[str, Any]:
     total = m["__total"]
     actual_types = {f.name.lower(): f.dataType for f in df.schema.fields}
     mismatches = []
@@ -225,27 +225,27 @@ def schema_types_check(m: dict, df: DataFrame, expected_schema: dict[str, str],
                 "expected_normalized": want, "actual_normalized": have,
             })
     passed = not mismatches
-    return _result("schema_types_check", database, table, partition, passed,
+    return _result("schema_types_check", database, table, passed,
                    f"Type mismatches found: {len(mismatches)}", "consistency",
                    type_mismatches=mismatches, total_columns_checked=checked)
 
 
 def freshness_check(m: dict, df: DataFrame, database: str, table: str,
-                    run_date: dt.date, partition=None) -> dict[str, Any]:
+                    run_date: dt.date) -> dict[str, Any]:
     name = "date_insertion_freshness_check"
     yesterday = run_date - dt.timedelta(days=1)
     if DATE_COLUMN not in [c.lower() for c in df.columns]:
-        return _result(name, database, table, partition, False,
+        return _result(name, database, table, False,
                        f"Column '{DATE_COLUMN}' not found in table",
                        "timeliness", latest_date_found=None,
                        expected_date=None)
     if m["__total"] == 0:
-        return _result(name, database, table, partition, False,
+        return _result(name, database, table, False,
                        "Table is empty - no date_insertion values to check",
                        "timeliness", latest_date_found=None,
                        expected_date=yesterday.isoformat())
     if (m.get("__valid_dates") or 0) == 0 or m.get("__max_date") is None:
-        return _result(name, database, table, partition, False,
+        return _result(name, database, table, False,
                        f"No valid dates found in '{DATE_COLUMN}' column",
                        "timeliness", latest_date_found=None,
                        expected_date=yesterday.isoformat())
@@ -254,18 +254,18 @@ def freshness_check(m: dict, df: DataFrame, database: str, table: str,
     diff = (latest - yesterday).days
     desc = ("matches expected date" if passed else
             f"{abs(diff)} day(s) {'ahead of' if diff > 0 else 'behind'} expected")
-    return _result(name, database, table, partition, passed,
+    return _result(name, database, table, passed,
                    f"Latest date {latest.isoformat()} {desc}", "timeliness",
                    latest_date_found=latest.isoformat(),
                    expected_date=yesterday.isoformat(),
                    date_difference_days=diff)
 
 
-def row_uniqueness_check(m: dict, database: str, table: str,
-                         partition=None) -> dict[str, Any]:
+def row_uniqueness_check(m: dict, database: str,
+                         table: str) -> dict[str, Any]:
     total = m["__total"]
     if total == 0:
-        return _result("row_uniqueness_check", database, table, partition,
+        return _result("row_uniqueness_check", database, table,
                        True, "Table is empty - no duplicates to check",
                        "uniqueness", total_rows=0, unique_rows=0,
                        duplicate_rows=0, duplicate_percentage=0.0)
@@ -276,7 +276,7 @@ def row_uniqueness_check(m: dict, database: str, table: str,
     details = (f"No duplicate rows found - all {total:,} rows are unique"
                if passed else
                f"Found {dups:,} duplicate rows ({pct:.2f}% of total)")
-    return _result("row_uniqueness_check", database, table, partition, passed,
+    return _result("row_uniqueness_check", database, table, passed,
                    details, "uniqueness", total_rows=total, unique_rows=unique,
                    duplicate_rows=dups, duplicate_percentage=pct)
 
@@ -289,10 +289,9 @@ def run_all_checks(
     run_date: dt.date,
     threshold: Threshold | None = None,
     environment: str = "DEV",
-    partition: str | None = None,
     enabled: dict[str, bool] | None = None,
 ) -> list[dict[str, Any]]:
-    """All checks for one table/partition from ONE metrics pass.
+    """All checks for one table from ONE metrics pass.
 
     Mirrors ``run_all_quality_checks`` (reference :1156-1240) including the
     empty-frame short-circuit that returns [] when the table has no rows
@@ -306,20 +305,19 @@ def run_all_checks(
     thr = threshold or Threshold(2, None, "manual")
     results = []
     if enabled.get("null_checks", True):
-        results.append(null_columns_check(m, df, database, table, partition))
+        results.append(null_columns_check(m, df, database, table))
     if enabled.get("row_count", True):
-        results.append(row_count_check(m, database, table, thr, partition))
+        results.append(row_count_check(m, database, table, thr))
     if enabled.get("schema_presence", True):
         results.append(schema_presence_check(df, expected_schema, database,
-                                             table, partition))
+                                             table))
     if enabled.get("schema_types", True):
         results.append(schema_types_check(m, df, expected_schema, database,
-                                          table, partition))
+                                          table))
     if enabled.get("freshness", True):
-        results.append(freshness_check(m, df, database, table, run_date,
-                                       partition))
+        results.append(freshness_check(m, df, database, table, run_date))
     if enabled.get("uniqueness", True):
-        results.append(row_uniqueness_check(m, database, table, partition))
+        results.append(row_uniqueness_check(m, database, table))
     for r in results:
         r["environment"] = environment
     return results

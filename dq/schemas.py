@@ -1,4 +1,4 @@
-"""Declared schemas + type normalization.
+"""Type normalization for the schema checks.
 
 Reproduces the reference's 5-way type-class normalization
 (``core/quality_checks.py:113-184`` in /root/reference): any type string
@@ -9,9 +9,8 @@ map/struct mappings; unknown → string.
 
 Also normalizes *actual* Spark DataTypes into the same 5 classes so the
 schema-types check can compare declared-vs-actual without pandas dtypes.
-
-Declared fixture schemas follow FIXTURES.md §2 (mirroring the reference's
-``config/schemas.py:6-89`` table shapes).
+The declared schemas themselves come from each table's ``TableSpec``
+(``dq.checks_job``; the JSON config of ``scripts/run_checks.py``).
 """
 
 from __future__ import annotations
@@ -75,59 +74,3 @@ def spark_type_class(dt: T.DataType) -> str:
         return "struct"
     return "string"
 
-
-# Declared schemas for the reference-shaped fixture tables (FIXTURES.md §2)
-# plus the primary webpages input (BASELINE.json input_hint).
-TABLE_SCHEMAS: dict[str, dict[str, str]] = {
-    "webpages": {
-        "url": "string",
-        "warc_ts": "timestamp",
-        "html": "binary",
-        "text": "string",
-        "lang": "string",
-    },
-    "personnes": {
-        "date_insertion": "timestamp",
-        "nom": "string",
-        "prenom": "string",
-        "profession": "string",
-        "date_de_naissance": "timestamp",
-        "age": "int",
-    },
-    "tva_due": {
-        "date_insertion": "timestamp",
-        "batch_id": "int",
-        "systeme_source": "string",
-        "type_import": "string",
-        "id_declaration": "string",
-        "id_adherent": "string",
-        "identifiant_f": "string",
-        "raison_sociale": "string",
-        "code_declarant": "string",
-        "date_depot": "timestamp",
-        "type_declaration": "string",
-        "exercice": "smallint",
-        "id_ligne": "string",
-        "credit": "float",
-        "resolution": "string",
-        "credit_apres": "float",
-        "credit_accom": "float",
-        "tva_due_per": "float",
-        "net_paie": "float",
-    },
-    "dts_recap": {
-        "date_insertion": "timestamp",
-        "id_recap": "bigint",
-        "exercice": "smallint",
-        "periode": "tinyint",
-        "montant_du": "decimal(12,2)",
-        "montant_paye": "decimal(12,2)",
-        "taux": "decimal(5,2)",
-        "solde": "decimal(15,2)",
-        "code_statut": "string",
-    },
-}
-
-
-def get_schema(table: str) -> dict[str, str]:
-    return dict(TABLE_SCHEMAS.get(table, {}))

@@ -3,7 +3,7 @@
 Cosine top-k has ONE scorer, ``_topk_scan``: the (small, bounded) query
 set is collected and broadcast as a numpy matrix; the corpus streams
 through ``mapInPandas`` where each Arrow batch scores its candidate rows
-against ALL queries with one ``C @ Q.T`` matmul and emits only its
+against ALL queries with one ``einsum`` and emits only its
 per-batch top-k rows per query. The final window therefore ranks
 O(n_batches × |queries| × k) rows, not |corpus| × |queries| — the
 partial-top-k shape that survives a 100× corpus. The search paths
@@ -27,8 +27,10 @@ lambdas (``F.aggregate`` folds) never enter whole-stage codegen and
 measured ~400x slower than numpy over Arrow batches for exactly this
 signature/dot-product work (round-1 bench: HOF-based LSH was 4x slower
 than brute force; see dq/dedup.py minhash section for the same finding).
-The Column helpers ``dot``/``l2_norm``/``cosine`` are kept for small
-frames and oracle parity work.
+
+All operators read the catalog's embedding layout: id ``vec_id``,
+vector ``embedding`` (``array<float>``), and query id ``query_id`` on
+the query side.
 """
 
 from __future__ import annotations
@@ -39,30 +41,9 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _to_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (deterministic summation order).
-    Interpreted HOF — fine for small frames / oracles, not hot paths."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    a, b = _to_double(a), _to_double(b)
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def _stack(series: pd.Series) -> np.ndarray:
@@ -90,16 +71,15 @@ def _valid_rows(mat: np.ndarray) -> np.ndarray:
     return np.isfinite(norms) & (norms > 0)
 
 
-def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
-                     max_queries: int, caller: str
+def _collect_queries(queries: DataFrame, max_queries: int, caller: str
                      ) -> tuple[np.ndarray, np.ndarray, str]:
     """Bounded driver-side query collect → (ids, (Q, dim) matrix, id
     SQL type). LIMIT max+1 so an oversized query set costs one extra
     row, not an OOM, and fails loudly. Degenerate query vectors (zero /
     non-finite norm) are dropped here — cosine is undefined for them.
     An empty query set gives a (0, 0) matrix."""
-    q_pdf = (queries.select(F.col(query_id_col).alias("qid"),
-                            F.col(vec_col).alias("qv"))
+    q_pdf = (queries.select(F.col("query_id").alias("qid"),
+                            F.col("embedding").alias("qv"))
              .limit(max_queries + 1).toPandas())
     if len(q_pdf) > max_queries:
         raise ValueError(
@@ -109,14 +89,14 @@ def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
     qmat = _stack(q_pdf["qv"]) if len(q_pdf) else np.zeros((0, 0))
     ok = _valid_rows(qmat)
     return (q_pdf["qid"].to_numpy()[ok], qmat[ok],
-            queries.schema[query_id_col].dataType.simpleString())
+            queries.schema["query_id"].dataType.simpleString())
 
 
 def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
                keys: Any,
                candidates: Callable[[pd.DataFrame, np.ndarray, Any],
                                     np.ndarray],
-               k: int, id_col: str, vec_col: str) -> DataFrame:
+               k: int) -> DataFrame:
     """The one cosine top-k scorer: ``brute_force_topk``, ``lsh_topk``
     and ``ivf.ivf_topk`` differ only in ``candidates``.
 
@@ -126,8 +106,11 @@ def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
     one that broadcasts to it); self-matches and degenerate corpus rows
     (0/0 NaN would outrank every real score in the desc window and
     poison ``_select_topk``'s kth threshold) are masked out here; the
-    rows that are a candidate for any query are scored with one matmul,
-    and each query emits its batch-local top-k under the same total
+    rows that are a candidate for any query are scored with one
+    ``einsum`` (each dot product summed in index order, so a row's score
+    does not depend on which rows share its Arrow batch — BLAS matmul
+    blocks its sums by the operand shapes), and each query emits its
+    batch-local top-k under the same total
     order the final window uses (desc cos_sim, asc vec_id) — so the
     partial pass is lossless, the corpus never shuffles, and the window
     ranks O(batches × Q × k) rows. Output: (query_id, vec_id, cos_sim,
@@ -135,7 +118,7 @@ def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
     spark = corpus.sparkSession
     qids, qmat, qid_type = q
     out_schema = (f"query_id {qid_type}, vec_id "
-                  f"{corpus.schema[id_col].dataType.simpleString()}, "
+                  f"{corpus.schema['vec_id'].dataType.simpleString()}, "
                   "cos_sim double")
     if len(qids) == 0:
         return spark.createDataFrame([], out_schema + ", rank int")
@@ -147,8 +130,8 @@ def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cmat = _stack(pdf[vec_col])
-            cids = pdf[id_col].to_numpy()
+            cmat = _stack(pdf["embedding"])
+            cids = pdf["vec_id"].to_numpy()
             cand = (candidates(pdf, cmat, b_keys)
                     & (cids[:, None] != b_qids[None, :])
                     & _valid_rows(cmat)[:, None])
@@ -156,8 +139,9 @@ def _topk_scan(corpus: DataFrame, q: tuple[np.ndarray, np.ndarray, str],
             if rows.size == 0:
                 continue
             sub, sub_ids, sub_cand = cmat[rows], cids[rows], cand[rows]
-            scores = (sub @ b_qmat.T) / (np.linalg.norm(sub, axis=1)[:, None]
-                                         * b_qnorm[None, :])
+            scores = (np.einsum("ij,kj->ik", sub, b_qmat)
+                      / (np.linalg.norm(sub, axis=1)[:, None]
+                         * b_qnorm[None, :]))
             sels = [_select_topk(scores[:, j], np.nonzero(sub_cand[:, j])[0],
                                  sub_ids, k) for j in range(len(b_qids))]
             yield pd.DataFrame({
@@ -179,8 +163,6 @@ def _every_row(pdf: pd.DataFrame, cmat: np.ndarray, keys: Any) -> np.ndarray:
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     query_id_col: str = "query_id",
                      max_queries: int = 100_000) -> DataFrame:
     """Exact cosine top-k per query: every corpus row is a candidate.
 
@@ -192,10 +174,9 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     queries they produce no rows; as corpus rows they are never
     candidates. See :func:`_topk_scan` for the plan.
     """
-    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
-                         "brute_force_topk")
-    return _topk_scan(corpus.select(id_col, vec_col), q, None, _every_row,
-                      k, id_col, vec_col)
+    q = _collect_queries(queries, max_queries, "brute_force_topk")
+    return _topk_scan(corpus.select("vec_id", "embedding"), q, None,
+                      _every_row, k)
 
 
 def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
@@ -253,8 +234,8 @@ def _cos_pairs(a: pd.Series, b: pd.Series,
     return pd.Series(out)
 
 
-def _banded_keys(df: DataFrame, idc: str, vec_col: str, prefix: str,
-                 planes: list[list[float]], bands: int) -> DataFrame:
+def _banded_keys(df: DataFrame, planes: list[list[float]],
+                 bands: int) -> DataFrame:
     """id + exploded (band, chunk_value) keys ONLY — the narrow frame
     that enters a banded join's exchange (id + 2 ints per row instead
     of id + vector + norm). Vectors join back by id AFTER the candidate
@@ -264,9 +245,9 @@ def _banded_keys(df: DataFrame, idc: str, vec_col: str, prefix: str,
     width = n_planes // bands
     mask = (1 << width) - 1
     sn = make_sig_norm_udf(planes)
-    return (df.select(F.col(idc).alias(f"{prefix}_id"),
-                      sn(F.col(vec_col)).alias("_sn"))
-            .select(f"{prefix}_id",
+    return (df.select(F.col("vec_id").alias("x_id"),
+                      sn(F.col("embedding")).alias("_sn"))
+            .select("x_id",
                     F.explode(F.array(*[
                         F.struct(F.lit(b).alias("band"),
                                  F.shiftrightunsigned(F.col("_sn.sig"), b * width)
@@ -291,10 +272,8 @@ def _chunk_values(sigs: np.ndarray, bands: int, width: int) -> np.ndarray:
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id",
              n_planes: int = 16, bands: int = 4, dim: int = 64,
-             seed: int = 7, max_queries: int = 100_000) -> DataFrame:
+             max_queries: int = 100_000) -> DataFrame:
     """Approximate top-k: score only candidates sharing ≥1 signature band.
 
     ``n_planes`` sign bits split into ``bands`` chunks; a (corpus,
@@ -308,10 +287,9 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Missing neighbors (no shared band) are the recall loss; increase
     bands or lower n_planes/bands to trade work for recall.
     """
-    pmat = np.asarray(hyperplanes(dim, n_planes, seed), dtype=np.float64)
+    pmat = np.asarray(hyperplanes(dim, n_planes), dtype=np.float64)
     width = n_planes // bands
-    q = _collect_queries(queries, query_id_col, vec_col, max_queries,
-                         "lsh_topk")
+    q = _collect_queries(queries, max_queries, "lsh_topk")
     qids, qmat, _ = q
     qchunks = (_chunk_values(_signatures(qmat, pmat), bands, width)
                if len(qids) else None)                  # (Q, bands)
@@ -320,38 +298,33 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         cchunks = _chunk_values(_signatures(cmat, pmat), bands, width)
         return (cchunks[:, None, :] == b_qchunks[None, :, :]).any(axis=2)
 
-    return _topk_scan(corpus.select(id_col, vec_col), q, qchunks, collide,
-                      k, id_col, vec_col)
+    return _topk_scan(corpus.select("vec_id", "embedding"), q, qchunks,
+                      collide, k)
 
 
-def near_dup_band_params(n: int, bands: int = 4, target_bucket: int = 16,
-                         max_width: int = 16) -> tuple[int, int]:
-    """Size the near-dup LSH banding to the corpus: ``(n_planes, bands)``
-    such that each band has ``~n / target_bucket`` buckets (band width
-    ``ceil(log2(n / target_bucket))`` sign bits, floor 2, cap
-    ``max_width``).
+def near_dup_band_params(n: int) -> tuple[int, int]:
+    """Size the near-dup LSH banding to the corpus: ``(n_planes, 4)``
+    such that each of the 4 bands has ``~n / 16`` buckets (band width
+    ``ceil(log2(n / 16))`` sign bits, floor 2, cap 16).
 
     This is the scale invariant the round-3 verdict flagged as missing:
     with a FIXED band width, within-bucket candidate pairs grow as
     ``O(n² / 2^width)`` — a demo width that works at 1k vectors fans a
     10k corpus into ~10⁷ scored pairs. Growing the bucket count with
     ``n`` keeps the expected bucket size (and so per-band candidate
-    work ``O(n · target_bucket)``) constant per vector, which is what
+    work ``O(16 · n)``) constant per vector, which is what
     lets the same query run unchanged from the test fixture to a
     100-TB corpus. Recall at a given cosine decreases as width grows —
-    that is the standard LSH trade (Indyk-Motwani); raise ``bands`` to
-    buy recall back if the threshold demands it."""
+    that is the standard LSH trade (Indyk-Motwani); more bands buy
+    recall back if the threshold demands it."""
     import math
-    width = max(2, min(max_width,
-                       math.ceil(math.log2(max(n / target_bucket, 2.0)))))
-    return bands * width, bands
+    width = max(2, min(16, math.ceil(math.log2(max(n / 16, 2.0)))))
+    return 4 * width, 4
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              n_planes: int = 16, bands: int = 4,
-                             dim: int = 64, seed: int = 7) -> DataFrame:
+                             dim: int = 64) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold) via the
     same hyperplane-LSH banding, corpus-vs-itself. Output
     (id_a, id_b, cos_sim) with id_a < id_b.
@@ -363,20 +336,20 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     pairs are deduplicated while still narrow; the two vector join-backs
     then move each embedding once per corpus row, keyed by id
     (AQE-broadcastable / skew-splittable like the dedup keeper join).
-    PRECONDITION: ``id_col`` is unique per row (shared with
+    PRECONDITION: ``vec_id`` is unique per row (shared with
     exact_dedup's keeper join) — a duplicated id would re-multiply
     deduplicated pairs at the join-back."""
-    planes = hyperplanes(dim, n_planes, seed)
-    keys = _banded_keys(df, id_col, vec_col, "x", planes, bands)
+    planes = hyperplanes(dim, n_planes)
+    keys = _banded_keys(df, planes, bands)
     a, b = keys.alias("a"), keys.alias("b")
     pairs = (a.join(b, (F.col("a._bk") == F.col("b._bk"))
                     & (F.col("a.x_id") < F.col("b.x_id")))
              .select(F.col("a.x_id").alias("id_a"),
                      F.col("b.x_id").alias("id_b"))
              .dropDuplicates(["id_a", "id_b"]))
-    vecs = df.select(F.col(id_col).alias("_vid"),
-                     F.col(vec_col).alias("_vv"),
-                     _norm_udf(F.col(vec_col)).alias("_vn"))
+    vecs = df.select(F.col("vec_id").alias("_vid"),
+                     F.col("embedding").alias("_vv"),
+                     _norm_udf(F.col("embedding")).alias("_vn"))
     va, vb = vecs.alias("va"), vecs.alias("vb")
     return (pairs
             .join(va, F.col("id_a") == F.col("va._vid"))

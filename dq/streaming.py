@@ -29,8 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq.dedup import exact_signature
-from dq.pipeline import (ALL_RULES, PipelineConfig, rule_tallies,
-                         score_pages)
+from dq.pipeline import ALL_RULES, rule_tallies, score_pages
 
 
 def read_webpages_stream(spark: SparkSession, path: str,
@@ -46,12 +45,12 @@ def read_webpages_stream(spark: SparkSession, path: str,
 
 
 def score_stream(spark: SparkSession, pages: DataFrame,
-                 cfg: PipelineConfig | None = None,
                  watermark: str = "1 hour") -> DataFrame:
-    """Scored stream: the batch pipeline's stages minus the global dedup
-    (streaming uses watermark-bounded dedup, see ``streaming_dedup``)."""
+    """Scored stream (default config): the batch pipeline's stages minus
+    the global dedup (streaming uses watermark-bounded dedup, see
+    ``streaming_dedup``)."""
     return score_pages(spark, pages.withWatermark("warc_ts", watermark),
-                       cfg, skip=("dedup",))
+                       skip=("dedup",))
 
 
 def streaming_dedup(scored: DataFrame) -> DataFrame:

@@ -103,26 +103,25 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     })
 
 
-def quality_flags(df: DataFrame, text_col: str = "text",
-                  min_tokens: int = 30, max_tokens: int = 10_000,
-                  min_mean_len_x10: int = 30, max_mean_len_x10: int = 120,
-                  min_distinct_pct: int = 20) -> DataFrame:
-    """Integer-arithmetic quality gates (cross-engine exact).
+def quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Integer-arithmetic quality gates (cross-engine exact): 30 to
+    10,000 tokens, mean token length 3.0 to 12.0 chars, at least 20%
+    distinct tokens.
 
     Ratio thresholds are expressed as integer cross-multiplications
-    (``distinct*100 >= pct*n``) so the booleans are bit-reproducible in
+    (``distinct*100 >= 20*n``) so the booleans are bit-reproducible in
     the SQL oracle — the float versions live in dq.heuristics.
     """
     df = with_text_stats(df, text_col)
     n = F.col("n_tokens")
     return df.withColumns({
-        "q_min_tokens": n >= min_tokens,
-        "q_max_tokens": n <= max_tokens,
+        "q_min_tokens": n >= 30,
+        "q_max_tokens": n <= 10_000,
         "q_mean_token_len": (
-            (F.col("token_len_sum") * 10 >= min_mean_len_x10 * n)
-            & (F.col("token_len_sum") * 10 <= max_mean_len_x10 * n)
+            (F.col("token_len_sum") * 10 >= 30 * n)
+            & (F.col("token_len_sum") * 10 <= 120 * n)
             & (n > 0)),
         "q_distinct_ratio": (
-            (F.col("n_distinct_tokens") * 100 >= min_distinct_pct * n)
+            (F.col("n_distinct_tokens") * 100 >= 20 * n)
             & (n > 0)),
     })

@@ -1,7 +1,7 @@
 """Dynamic row-count thresholds from historical run state.
 
 Reproduces the reference's trend math (``core/quality_checks.py:516-625``):
-fetch the last ``limit`` (10) history rows per (environment, database,
+fetch the last ``HISTORY_LIMIT`` (10) history rows per (environment, database,
 table) newest-first, reverse to oldest-first, take consecutive increments,
 average them, and set
 
@@ -45,9 +45,6 @@ class Threshold:
 
 def compute_thresholds(
     history: DataFrame | None,
-    tolerance_pct: float = TOLERANCE_PCT,
-    limit: int = HISTORY_LIMIT,
-    manual_min: int = MANUAL_MIN_ROWS,
 ) -> dict[tuple[str, str, str], Threshold]:
     """One windowed pass over the full history → per-table thresholds.
 
@@ -61,7 +58,7 @@ def compute_thresholds(
     recent = (
         history
         .withColumn("_rn", F.row_number().over(w_recent))
-        .filter(F.col("_rn") <= limit)
+        .filter(F.col("_rn") <= HISTORY_LIMIT)
     )
     w_time = Window.partitionBy(*KEY_COLS).orderBy(
         "execution_timestamp", "execution_id")
@@ -75,12 +72,12 @@ def compute_thresholds(
             F.max_by("row_count", F.col("execution_timestamp")).alias("latest"),
         )
     )
-    tol = tolerance_pct / 100.0
+    tol = TOLERANCE_PCT / 100.0
     out: dict[tuple[str, str, str], Threshold] = {}
     for r in agg.collect():
         key = (r["environment"], r["database_name"], r["table_name"])
         if r["n_records"] < 2:
-            out[key] = Threshold(manual_min, None, "manual",
+            out[key] = Threshold(MANUAL_MIN_ROWS, None, "manual",
                                  historical_records=r["n_records"])
         else:
             avg_inc = float(r["avg_inc"])
@@ -101,7 +98,6 @@ def threshold_for(
     environment: str,
     database: str,
     table: str,
-    manual_min: int = MANUAL_MIN_ROWS,
 ) -> Threshold:
     return thresholds.get((environment, database, table),
-                          Threshold(manual_min, None, "manual"))
+                          Threshold(MANUAL_MIN_ROWS, None, "manual"))

@@ -1,23 +1,113 @@
-"""Schema helpers, session confs and the catalog contract — thin public
-API surface over the tested internals; exercised here so none of it
-drifts dead."""
+"""Session confs, the catalog contract and the public option surface —
+thin API checks over the tested internals."""
 
-from dq import multimodal, schemas
+import ast
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+# streaming deployment settings: the job launcher that runs the stream
+# sets them, no code in this repository does
+DEPLOYMENT_OPTIONS = {("read_webpages_stream", "max_files_per_trigger"),
+                      ("run_stream_to_audit", "available_now")}
 
 
-def test_get_schema_returns_copy(spark):
-    s = schemas.get_schema("webpages")
-    assert s, "webpages schema must be declared"
-    s["injected"] = "string"
-    assert "injected" not in schemas.get_schema("webpages")
-    assert schemas.get_schema("no_such_table") == {}
+def _public_options(tree):
+    """(function, parameter, positional index or None) for every
+    defaulted parameter of a public function or method in ``tree``,
+    nested defs included; ``self``/``cls`` are not counted as a
+    position."""
+    out = []
+
+    def walk(node, private, in_class):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                priv = private or ch.name.startswith("_")
+                a = ch.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                             for d in ch.decorator_list)
+                if in_class and not static:
+                    pos = pos[1:]
+                if not priv:
+                    first = len(pos) - len(a.defaults)
+                    out.extend((ch.name, p, first + i) for i, p
+                               in enumerate(pos[first:]))
+                    out.extend((ch.name, k.arg, None) for k, d
+                               in zip(a.kwonlyargs, a.kw_defaults)
+                               if d is not None)
+                walk(ch, priv, False)
+            elif isinstance(ch, ast.ClassDef):
+                walk(ch, private or ch.name.startswith("_"), True)
+            else:
+                walk(ch, private, in_class)
+
+    walk(tree, False, False)
+    return out
 
 
-def test_media_table_schema_shape(spark):
-    st = multimodal.media_table_schema()
-    assert [f.name for f in st.fields] == ["media_id", "payload", "meta"]
-    df = spark.createDataFrame([], st)   # instantiable
-    assert df.schema == st
+def _call_sites(trees):
+    """What the calls in ``trees`` pass, by callee name: the most
+    positional arguments, the keywords, and the keywords of calls whose
+    callee has no name (``getattr(...)(max_queries=10)``). A ``*args``
+    covers every position; ``**NAME`` of a module-level dict literal
+    passes its keys, any other ``**`` mapping every parameter."""
+    dicts = {}
+    for tree in trees:
+        for node in tree.body:
+            if (isinstance(node, ast.Assign) and len(node.targets) == 1
+                    and isinstance(node.targets[0], ast.Name)
+                    and isinstance(node.value, ast.Dict)
+                    and all(isinstance(k, ast.Constant) for k in node.value.keys)):
+                dicts[node.targets[0].id] = {k.value for k in node.value.keys}
+    npos, kws, anonymous = {}, {}, set()
+    for tree in trees:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            passed = set()
+            for k in call.keywords:
+                if k.arg is not None:
+                    passed.add(k.arg)
+                    continue
+                v = k.value
+                name = (v.id if isinstance(v, ast.Name) else
+                        v.attr if isinstance(v, ast.Attribute) else None)
+                passed |= dicts.get(name, {"**"})
+            f = call.func
+            name = (f.id if isinstance(f, ast.Name) else
+                    f.attr if isinstance(f, ast.Attribute) else None)
+            if name is None:
+                anonymous |= passed
+                continue
+            kws.setdefault(name, set()).update(passed)
+            n = (float("inf") if any(isinstance(a, ast.Starred)
+                                     for a in call.args) else len(call.args))
+            npos[name] = max(npos.get(name, 0), n)
+    return npos, kws, anonymous
+
+
+def test_every_option_has_a_caller():
+    """Every defaulted parameter of a public ``dq`` function is passed at
+    some call site of a function of that name in the package, scripts,
+    benchmark or tests. An option nothing sets can only take its
+    default: make it a constant instead. Calls are matched by name, so
+    this is a floor, not proof that each option is used."""
+    sources = [*sorted(ROOT.glob("dq/*.py")), *sorted(ROOT.glob("scripts/*.py")),
+               *sorted(ROOT.glob("perfbench/*.py")),
+               *sorted(ROOT.glob("tests/*.py")),
+               ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in sources}
+    npos, kws, anonymous = _call_sites(trees.values())
+    uncalled = [
+        f"{path.name}:{fn}({param})"
+        for path, tree in trees.items() if path.parent.name == "dq"
+        for fn, param, i in _public_options(tree)
+        if (fn, param) not in DEPLOYMENT_OPTIONS
+        and param not in anonymous
+        and not kws.get(fn, set()) & {param, "**"}
+        and not (i is not None and npos.get(fn, 0) > i)]
+    assert not uncalled, uncalled
 
 
 def test_catalog_session_restores_confs(spark):
