@@ -43,7 +43,7 @@ import os
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from dq import rules, scoring
@@ -130,6 +130,22 @@ def save_run_manifest(results: list[dict[str, Any]], out_dir: str,
     return path
 
 
+def _done_rows(spark: SparkSession, store: AuditStore, table: str,
+               execution_id: str, keys: list[tuple[str, str, str]],
+               key_cols: tuple[str, str, str], cols: list[str],
+               where=None) -> list:
+    """``cols`` of ``table``'s rows for ``execution_id`` whose
+    ``key_cols`` are one of ``keys``, collected to the driver."""
+    df = store.read(spark, table)
+    if df is None:
+        return []
+    df = df.filter(F.col("execution_id") == execution_id)
+    if where is not None:
+        df = df.filter(where)
+    kdf = local_frame(spark, keys, ", ".join(f"{c} string" for c in key_cols))
+    return df.join(F.broadcast(kdf), list(key_cols)).select(*cols).collect()
+
+
 def _carry_forward(spark: SparkSession, store: AuditStore,
                    execution_id: str, done: set[tuple[str, str, str]]):
     """Rows already persisted for this execution's completed tables —
@@ -151,43 +167,22 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
     if not done:
         return None, [], None
     keys = sorted(done)
-    carried_df = None
-    prev = store.read(spark, "check_results")
-    if prev is not None:
-        kdf = spark.createDataFrame(
-            keys, "environment string, database string, table string")
-        rows = (
-            prev.filter(F.col("execution_id") == execution_id)
-                .filter(F.col("test_name") != "row_count_comparison")
-                .join(F.broadcast(kdf),
-                      ["environment", "database", "table"])
-                .select(*[f.name for f in scoring.RESULT_SCHEMA.fields])
-                .collect())
-        if rows:
-            carried_df = spark.createDataFrame(rows, scoring.RESULT_SCHEMA)
-    tkeys = spark.createDataFrame(
-        keys, "environment string, database_name string, table_name string")
-    counts: list[tuple[str, str, str, int]] = []
-    hist = store.read(spark, "row_count_history")
-    if hist is not None:
-        counts = [
-            (r[0], r[1], r[2], int(r[3]))
-            for r in (hist.filter(F.col("execution_id") == execution_id)
-                      .join(F.broadcast(tkeys),
-                            ["environment", "database_name", "table_name"])
-                      .select("environment", "database_name", "table_name",
-                              "row_count").collect())]
-    fresh_df = None
-    fresh = store.read(spark, "freshness")
-    if fresh is not None:
-        frows = (fresh.filter(F.col("execution_id") == execution_id)
-                 .join(F.broadcast(tkeys),
-                       ["environment", "database_name", "table_name"])
-                 .select(*[c.split()[0] for c in
-                           FRESHNESS_SCHEMA.split(", ")])
-                 .collect())
-        if frows:
-            fresh_df = spark.createDataFrame(frows, FRESHNESS_SCHEMA)
+    audit_keys = ("environment", "database_name", "table_name")
+    rows = _done_rows(
+        spark, store, "check_results", execution_id, keys,
+        ("environment", "database", "table"),
+        [f.name for f in scoring.RESULT_SCHEMA.fields],
+        F.col("test_name") != "row_count_comparison")
+    carried_df = (spark.createDataFrame(rows, scoring.RESULT_SCHEMA)
+                  if rows else None)
+    counts = [(r[0], r[1], r[2], int(r[3])) for r in _done_rows(
+        spark, store, "row_count_history", execution_id, keys, audit_keys,
+        [*audit_keys, "row_count"])]
+    frows = _done_rows(
+        spark, store, "freshness", execution_id, keys, audit_keys,
+        [c.split()[0] for c in FRESHNESS_SCHEMA.split(", ")])
+    fresh_df = (spark.createDataFrame(frows, FRESHNESS_SCHEMA)
+                if frows else None)
     return carried_df, counts, fresh_df
 
 

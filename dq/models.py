@@ -71,7 +71,6 @@ from dq.vocab import (
     EN_CONTENT,
     EN_STOPWORDS,
     FR_WORDS,
-    GIB_WORDS,
 )
 
 LANG_PROFILES_SOURCE: dict[str, list[str]] = {

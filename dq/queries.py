@@ -26,7 +26,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dq import dedup, similarity, textstats
+from dq import (compare, dedup, rules, scoring, similarity, textstats,
+                thresholds)
+from dq.audit import local_frame
 from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
 from dq.pipeline import (ALL_RULES, PipelineConfig, rule_tallies, score_pages,
                          scrub)
@@ -105,29 +107,28 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # =====================================================================
 
 def q_null_empty_profile(spark, sf_dir):
-    """A2/A3/A4: per-column null + empty-string tallies in ONE agg pass
-    (the reference rescans per check; we fuse — SURVEY §4)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
-        F.sum((F.col("text").isNotNull() & (F.trim("text") == ""))
-              .cast("long")).alias("empty_text"),
-        F.sum(F.col("lang").isNull().cast("long")).alias("null_lang"),
-        F.sum(F.col("source").isNull().cast("long")).alias("null_source"),
-        F.sum(F.col("n_chars").isNull().cast("long")).alias("null_n_chars"),
-        F.sum(F.col("text").isNotNull().cast("long")).alias("nonnull_text"),
-    )
+    """A2/A3/A4 per-column null and empty-string tallies: gates
+    ``rules.collect_table_metrics``, the checks' one fused aggregation,
+    projected to ``total_rows``, a ``null_<col>`` per column and an
+    ``empty_<col>`` per string column."""
+    m = rules.collect_table_metrics(_t(spark, sf_dir, "documents"))
+    tallies = {k.replace("__", "_", 1): v for k, v in m.items()
+               if k.startswith(("null__", "empty__"))}
+    return local_frame(
+        spark, [(m["__total"], *tallies.values())],
+        ", ".join(f"{c} long" for c in ("total_rows", *tallies)))
 
 
 ORACLE_NULL_EMPTY = """
 SELECT count(*) AS total_rows,
+       CAST(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_doc_id,
        CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_text,
        CAST(sum(CASE WHEN text IS NOT NULL AND trim(text, ' ') = '' THEN 1 ELSE 0 END) AS BIGINT) AS empty_text,
        CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_lang,
+       CAST(sum(CASE WHEN lang IS NOT NULL AND trim(lang, ' ') = '' THEN 1 ELSE 0 END) AS BIGINT) AS empty_lang,
        CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_source,
-       CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_n_chars,
-       CAST(sum(CASE WHEN text IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nonnull_text
+       CAST(sum(CASE WHEN source IS NOT NULL AND trim(source, ' ') = '' THEN 1 ELSE 0 END) AS BIGINT) AS empty_source,
+       CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_n_chars
 FROM documents
 """
 
@@ -197,31 +198,29 @@ FROM events GROUP BY event_type
 
 
 def q_rowcount_trend(spark, sf_dir):
-    """A7/W1-W3 dynamic threshold: last-10 daily counts per type →
-    lag-increments → avg → min_rows = floor(latest + avg*(1-0.20)),
-    clamped ≥1 (reference quality_checks.py:564-614)."""
+    """A7/J3/W1-W3 dynamic row-count threshold: gates
+    ``thresholds.compute_thresholds``. Its history is the per-(event_type,
+    day) event count, one execution per day stamped at that day; each
+    returned ``Threshold`` is one row."""
     e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy("event_type", F.to_date("ts").alias("d"))
-             .agg(F.count(F.lit(1)).alias("row_count")))
-    w_recent = Window.partitionBy("event_type").orderBy(F.desc("d"))
-    recent = (daily.withColumn("_rn", F.row_number().over(w_recent))
-              .filter(F.col("_rn") <= 10))
-    w_time = Window.partitionBy("event_type").orderBy("d")
-    agg = (recent
-           .withColumn("_inc",
-                       F.col("row_count") - F.lag("row_count").over(w_time))
-           .groupBy("event_type")
-           .agg(F.count(F.lit(1)).alias("n_records"),
-                F.sum("_inc").alias("inc_sum"),
-                F.count("_inc").alias("inc_n"),
-                F.max_by("row_count", F.col("d")).alias("latest_count")))
-    avg_inc = F.col("inc_sum").cast("double") / F.col("inc_n")
-    min_rows = F.greatest(
-        F.floor(F.col("latest_count") + avg_inc * 0.8).cast("bigint"),
-        F.lit(1).cast("bigint"))
-    return (agg.withColumn("min_rows", min_rows)
-            .select("event_type", "n_records", "latest_count",
-                    "inc_sum", "min_rows"))
+    history = (e.groupBy("event_type", F.to_date("ts").alias("d"))
+               .agg(F.count(F.lit(1)).alias("row_count"))
+               .select(F.col("d").cast("string").alias("execution_id"),
+                       F.col("d").cast("timestamp")
+                       .alias("execution_timestamp"),
+                       F.lit("PROD").alias("environment"),
+                       F.lit("events").alias("database_name"),
+                       F.col("event_type").alias("table_name"),
+                       "row_count"))
+    return local_frame(
+        spark,
+        [(table, t.historical_records, t.latest_count, t.average_increment,
+          t.min_rows, t.max_rows, t.method)
+         for (_env, _db, table), t
+         in thresholds.compute_thresholds(history).items()],
+        "event_type string, n_records long, latest_count long, "
+        "average_increment double, min_rows long, max_rows long, "
+        "method string")
 
 
 ORACLE_TREND = """
@@ -236,14 +235,18 @@ WITH daily AS (
          row_count - lag(row_count) OVER (PARTITION BY event_type ORDER BY d) AS inc
   FROM recent
 ), agg AS (
-  SELECT event_type, count(*) AS n_records,
-         CAST(sum(inc) AS BIGINT) AS inc_sum, count(inc) AS inc_n,
-         max_by(row_count, d) AS latest_count
+  SELECT event_type, count(*) AS n_records, max_by(row_count, d) AS latest,
+         CAST(sum(inc) AS DOUBLE) / count(inc) AS avg_inc
   FROM incs GROUP BY event_type
 )
-SELECT event_type, n_records, latest_count, inc_sum,
-       greatest(CAST(floor(latest_count + (CAST(inc_sum AS DOUBLE)/inc_n) * 0.8) AS BIGINT),
-                CAST(1 AS BIGINT)) AS min_rows
+SELECT event_type, n_records,
+       CASE WHEN n_records >= 2 THEN latest END AS latest_count,
+       CASE WHEN n_records >= 2 THEN avg_inc END AS average_increment,
+       CASE WHEN n_records < 2 THEN 2
+            ELSE greatest(CAST(trunc(latest + avg_inc * 0.8) AS BIGINT), 1) END AS min_rows,
+       CASE WHEN n_records >= 2
+            THEN CAST(trunc(latest + avg_inc * 1.2) AS BIGINT) END AS max_rows,
+       CASE WHEN n_records < 2 THEN 'manual' ELSE 'increment' END AS method
 FROM agg
 """
 
@@ -267,22 +270,19 @@ FROM events QUALIFY rn <= 3
 
 
 def q_env_compare(spark, sf_dir):
-    """J1 DEV≤PROD row-count comparison (main.py:214-268 semantics:
-    inner-join on key, skip zero counts, passed = dev <= prod).
-    Environments are a deterministic split of events."""
+    """J1/C7 DEV≤PROD row-count comparison: gates
+    ``compare.compare_row_counts`` (main.py:214-268 semantics: inner-join
+    on key, skip zero counts, passed = dev <= prod). Environments are a
+    deterministic split of events, one table per event type."""
     e = _t(spark, sf_dir, "events")
-    tagged = e.withColumn(
-        "environment",
-        F.when(F.col("user_id") % 2 == 0, "DEV").otherwise("PROD"))
-    counts = tagged.groupBy("environment", "event_type").count()
-    dev = (counts.filter(F.col("environment") == "DEV")
-           .select("event_type", F.col("count").alias("dev_count")))
-    prod = (counts.filter(F.col("environment") == "PROD")
-            .select("event_type", F.col("count").alias("prod_count")))
-    return (dev.join(F.broadcast(prod), "event_type", "inner")
-            .filter((F.col("dev_count") != 0) & (F.col("prod_count") != 0))
-            .withColumn("difference", F.col("dev_count") - F.col("prod_count"))
-            .withColumn("passed", F.col("dev_count") <= F.col("prod_count")))
+    env = F.when(F.col("user_id") % 2 == 0, "DEV").otherwise("PROD")
+    counts = (e.groupBy(env.alias("environment"), "event_type")
+              .agg(F.count(F.lit(1)).alias("row_count"))
+              .select("environment", F.lit("events").alias("database"),
+                      F.col("event_type").alias("table"), "row_count"))
+    return (compare.compare_row_counts(counts)
+            .select(F.col("table").alias("event_type"), "dev_count",
+                    "prod_count", "difference", "passed"))
 
 
 ORACLE_ENV_COMPARE = """
@@ -304,37 +304,42 @@ WHERE d.cnt <> 0 AND p.cnt <> 0
 
 
 def q_summary_banding(spark, sf_dir):
-    """A8 pass-rate scoring + urgency banding (postgres_storage.py:518-538
-    bands) with integer-exact pass_rate_x100 = floor(passed*10000/total)."""
+    """A8 pass-rate scoring + urgency banding with per-table overrides:
+    gates ``scoring.table_summary`` (postgres_storage.py:518-538 bands).
+    One check result per lineitem row: database = ``l_returnflag``, table
+    = ``l_linestatus`` with 'F' renamed to 'tva_due' (a table with its
+    own band thresholds), passed = ``l_discount <= 0.05``."""
     li = _t(spark, sf_dir, "lineitem")
-    agg = (li.groupBy("l_returnflag", "l_linestatus")
-           .agg(F.count(F.lit(1)).alias("total_tests"),
-                F.sum((F.col("l_discount") <= 0.05).cast("long"))
-                .alias("passed_tests")))
-    rate = F.floor(F.col("passed_tests") * 10000 / F.col("total_tests")) \
-            .cast("bigint")
-    band = (F.when(rate < 5000, "CRITICAL").when(rate < 7000, "HIGH")
-            .when(rate < 8500, "MEDIUM").when(rate < 9500, "LOW")
-            .otherwise("PASS"))
-    return (agg.withColumn("pass_rate_x100", rate)
-            .withColumn("status", band))
+    results = li.select(
+        F.lit("DEV").alias("environment"),
+        F.col("l_returnflag").alias("database"),
+        F.when(F.col("l_linestatus") == "F", "tva_due")
+        .otherwise(F.col("l_linestatus")).alias("table"),
+        (F.col("l_discount") <= 0.05).alias("passed"))
+    return scoring.table_summary(results).drop("environment")
 
 
 ORACLE_BANDING = """
 WITH agg AS (
-  SELECT l_returnflag, l_linestatus,
+  SELECT l_returnflag AS "database",
+         CASE WHEN l_linestatus = 'F' THEN 'tva_due' ELSE l_linestatus END AS "table",
          count(*) AS total_tests,
          CAST(sum(CASE WHEN l_discount <= 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS passed_tests
   FROM lineitem GROUP BY 1, 2
+), scored AS (
+  SELECT *, CASE WHEN total_tests > 0 THEN passed_tests / total_tests * 100.0
+                 ELSE 100.0 END AS overall_score
+  FROM agg
+), bands AS (
+  SELECT * FROM (VALUES ('tva_due', 80, 90, 95, 98),
+                        ('personnes', 70, 85, 92, 97)) b("table", c, h, m, l)
 )
-SELECT l_returnflag, l_linestatus, total_tests, passed_tests,
-       CAST(floor(passed_tests * 10000 / total_tests) AS BIGINT) AS pass_rate_x100,
-       CASE WHEN floor(passed_tests * 10000 / total_tests) < 5000 THEN 'CRITICAL'
-            WHEN floor(passed_tests * 10000 / total_tests) < 7000 THEN 'HIGH'
-            WHEN floor(passed_tests * 10000 / total_tests) < 8500 THEN 'MEDIUM'
-            WHEN floor(passed_tests * 10000 / total_tests) < 9500 THEN 'LOW'
-            ELSE 'PASS' END AS status
-FROM agg
+SELECT "database", "table", total_tests, passed_tests, overall_score,
+       CASE WHEN overall_score < coalesce(c, 50) THEN 'CRITICAL'
+            WHEN overall_score < coalesce(h, 70) THEN 'HIGH'
+            WHEN overall_score < coalesce(m, 85) THEN 'MEDIUM'
+            WHEN overall_score < coalesce(l, 95) THEN 'LOW' ELSE 'PASS' END AS status
+FROM scored LEFT JOIN bands USING ("table")
 """
 
 
@@ -385,23 +390,26 @@ GROUP BY n_name
 """
 
 
-def q_table_checks(spark, sf_dir):
-    """The reference's six-check contract (SURVEY §2.10) end-to-end over
-    the documents table, one row per check. Expected schema deliberately
-    includes the reference's mandatory ``date_insertion`` column (absent
-    here) so presence/freshness FAIL while null/count/types/uniqueness
-    PASS — both branches of every check exercised under the oracle."""
-    import dq.rules as rules
-
-    d = _t(spark, sf_dir, "documents")
+def _documents_checks(spark, sf_dir):
+    """The six checks over the documents table, as result dicts. The
+    expected schema deliberately includes the reference's mandatory
+    ``date_insertion`` column (absent here) so presence/freshness FAIL
+    while null/count/types/uniqueness PASS."""
     expected = {"doc_id": "bigint", "text": "string", "lang": "string",
                 "source": "string", "n_chars": "bigint",
                 "date_insertion": "timestamp"}
-    results = rules.run_all_checks(
-        d, "testdb", "documents", expected,
+    return rules.run_all_checks(
+        _t(spark, sf_dir, "documents"), "testdb", "documents", expected,
         run_date=dt.date.fromisoformat(RUN_DATE))
+
+
+def q_table_checks(spark, sf_dir):
+    """The reference's six-check contract (SURVEY §2.10) end-to-end over
+    the documents table, one row per check — both branches of every
+    check exercised under the oracle."""
     return spark.createDataFrame(
-        [(r["test_name"], r["passed"], r["dimension"]) for r in results],
+        [(r["test_name"], r["passed"], r["dimension"])
+         for r in _documents_checks(spark, sf_dir)],
         "test_name string, passed boolean, dimension string")
 
 
@@ -438,9 +446,6 @@ def q_test_type_stats(spark, sf_dir):
     groupBy(test_name) rollup over the six-check results — two table
     scopes (documents twice under different expected schemas) so totals
     exceed 1 per test."""
-    import dq.rules as rules
-    from dq.scoring import test_type_stats
-
     d = _t(spark, sf_dir, "documents")
     run_date = dt.date.fromisoformat(RUN_DATE)
     with_di = {"doc_id": "bigint", "text": "string", "lang": "string",
@@ -458,7 +463,7 @@ def q_test_type_stats(spark, sf_dir):
     # SO2 result-list merge (reference utils/helpers.py:159-172): the
     # per-scope result frames concatenate by column NAME, not position
     rdf = frames[0].unionByName(frames[1])
-    return test_type_stats(rdf)
+    return scoring.test_type_stats(rdf)
 
 
 ORACLE_TEST_TYPE_STATS = f"""
@@ -495,17 +500,10 @@ FROM checks GROUP BY test_name
 
 def q_dimension_scores(spark, sf_dir):
     """A9 dimension rollup (storage/postgres_storage.py:326-400 analog):
-    per-dimension pass/fail tallies + integer-exact score over the
-    six-check results of q_table_checks."""
-    results = q_table_checks(spark, sf_dir)
-    agg = (results.groupBy("dimension")
-           .agg(F.count(F.lit(1)).alias("total_tests"),
-                F.sum(F.col("passed").cast("long")).alias("passed_tests")))
-    return (agg.withColumn("failed_tests",
-                           F.col("total_tests") - F.col("passed_tests"))
-            .withColumn("score_x100",
-                        F.floor(F.col("passed_tests") * 10000
-                                / F.col("total_tests")).cast("bigint")))
+    gates ``scoring.dimension_scores`` over the six-check results of
+    q_table_checks."""
+    return scoring.dimension_scores(
+        scoring.results_to_df(spark, _documents_checks(spark, sf_dir)))
 
 
 ORACLE_DIMENSION_SCORES = f"""
@@ -515,9 +513,11 @@ agg AS (
          CAST(sum(CASE WHEN passed THEN 1 ELSE 0 END) AS BIGINT) AS passed_tests
   FROM checks GROUP BY dimension
 )
-SELECT dimension, total_tests, passed_tests,
+SELECT 'DEV' AS environment, 'testdb' AS "database", 'documents' AS "table",
+       dimension, total_tests, passed_tests,
        total_tests - passed_tests AS failed_tests,
-       CAST(floor(passed_tests * 10000 / total_tests) AS BIGINT) AS score_x100
+       CASE WHEN total_tests > 0 THEN passed_tests / total_tests * 100.0
+            ELSE 100.0 END AS score
 FROM agg
 """
 

@@ -289,7 +289,6 @@ def run_all_checks(
     run_date: dt.date,
     threshold: Threshold | None = None,
     environment: str = "DEV",
-    enabled: dict[str, bool] | None = None,
 ) -> list[dict[str, Any]]:
     """All checks for one table from ONE metrics pass.
 
@@ -298,26 +297,18 @@ def run_all_checks(
     AND no columns-worth checking — the reference returns [] for an empty
     fetch (:1172-1174); we interpret 'empty' as zero rows.
     """
-    enabled = enabled or {}
     m = collect_table_metrics(df, expected_schema)
     if m["__total"] == 0:
         return []
     thr = threshold or Threshold(2, None, "manual")
-    results = []
-    if enabled.get("null_checks", True):
-        results.append(null_columns_check(m, df, database, table))
-    if enabled.get("row_count", True):
-        results.append(row_count_check(m, database, table, thr))
-    if enabled.get("schema_presence", True):
-        results.append(schema_presence_check(df, expected_schema, database,
-                                             table))
-    if enabled.get("schema_types", True):
-        results.append(schema_types_check(m, df, expected_schema, database,
-                                          table))
-    if enabled.get("freshness", True):
-        results.append(freshness_check(m, df, database, table, run_date))
-    if enabled.get("uniqueness", True):
-        results.append(row_uniqueness_check(m, database, table))
+    results = [
+        null_columns_check(m, df, database, table),
+        row_count_check(m, database, table, thr),
+        schema_presence_check(df, expected_schema, database, table),
+        schema_types_check(m, df, expected_schema, database, table),
+        freshness_check(m, df, database, table, run_date),
+        row_uniqueness_check(m, database, table),
+    ]
     for r in results:
         r["environment"] = environment
     return results

@@ -63,15 +63,20 @@ def _band_with_overrides(score: Column, table: Column) -> Column:
     return expr.otherwise(_band(score, DEFAULT_THRESHOLDS))
 
 
+def _score() -> Column:
+    """100·passed/total over ``total_tests``/``passed_tests``; 100 when
+    there are no tests."""
+    return (F.when(F.col("total_tests") > 0,
+                   F.col("passed_tests") / F.col("total_tests") * 100.0)
+            .otherwise(F.lit(100.0)))
+
+
 def table_summary(results: DataFrame) -> DataFrame:
-    score = F.when(F.col("total_tests") > 0,
-                   F.col("passed_tests") / F.col("total_tests") * 100.0
-                   ).otherwise(F.lit(100.0))
     return (
         results.groupBy("environment", "database", "table")
         .agg(F.count(F.lit(1)).alias("total_tests"),
              F.sum(F.col("passed").cast("long")).alias("passed_tests"))
-        .withColumn("overall_score", score)
+        .withColumn("overall_score", _score())
         .withColumn("status",
                     _band_with_overrides(F.col("overall_score"), F.col("table")))
     )
@@ -94,12 +99,9 @@ def database_summary(results: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("total_tests"),
              F.sum(F.col("passed").cast("long")).alias("passed_tests"))
     )
-    score = F.when(F.col("total_tests") > 0,
-                   F.col("passed_tests") / F.col("total_tests") * 100.0
-                   ).otherwise(F.lit(100.0))
     return (
         per_db_tables.join(per_db_tests, ["environment", "database"])
-        .withColumn("overall_score", score)
+        .withColumn("overall_score", _score())
         .withColumn("status", _band(F.col("overall_score"), DEFAULT_THRESHOLDS))
     )
 
@@ -120,14 +122,11 @@ def test_type_stats(results: DataFrame) -> DataFrame:
 
 
 def dimension_scores(results: DataFrame) -> DataFrame:
-    score = F.when(F.col("total_tests") > 0,
-                   F.col("passed_tests") / F.col("total_tests") * 100.0
-                   ).otherwise(F.lit(100.0))
     return (
         results.groupBy("environment", "database", "table", "dimension")
         .agg(F.count(F.lit(1)).alias("total_tests"),
              F.sum(F.col("passed").cast("long")).alias("passed_tests"))
         .withColumn("failed_tests",
                     F.col("total_tests") - F.col("passed_tests"))
-        .withColumn("score", score)
+        .withColumn("score", _score())
     )

@@ -4,7 +4,10 @@ thin API checks over the tested internals."""
 import ast
 import pathlib
 
+import pytest
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
+SF = "/root/testdata/sf0.001"
 
 # streaming deployment settings: the job launcher that runs the stream
 # sets them, no code in this repository does
@@ -110,6 +113,51 @@ def test_every_option_has_a_caller():
     assert not uncalled, uncalled
 
 
+def test_no_unused_imports():
+    """Every name an import binds in the package, scripts, tests and
+    entry points is used in its file (no linter runs on this repo)."""
+    sources = [*sorted(ROOT.glob("dq/*.py")), *sorted(ROOT.glob("scripts/*.py")),
+               *sorted(ROOT.glob("tests/*.py")),
+               ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    unused = []
+    for path in sources:
+        tree = ast.parse(path.read_text(), str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if (not isinstance(node, (ast.Import, ast.ImportFrom))
+                    or getattr(node, "module", None) == "__future__"):
+                continue
+            bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            unused.extend(f"{path.relative_to(ROOT)}:{node.lineno} {b}"
+                          for b in bound if b not in used)
+    assert not unused, unused
+
+
+def test_catalog_gates_run_the_product(spark, monkeypatch):
+    """Each check-contract gate query runs the product function it gates,
+    looked up on its module: replacing the function makes the query fail,
+    so its oracle checks the product, not a copy."""
+    from dq import compare, rules, scoring, thresholds
+    from dq.queries import QUERIES
+
+    class Stubbed(Exception):
+        pass
+
+    def stub(*_args, **_kwargs):
+        raise Stubbed
+
+    gates = {"rowcount_trend": (thresholds, "compute_thresholds"),
+             "env_compare": (compare, "compare_row_counts"),
+             "summary_banding": (scoring, "table_summary"),
+             "dimension_scores": (scoring, "dimension_scores"),
+             "null_empty_profile": (rules, "collect_table_metrics")}
+    for query, (module, name) in gates.items():
+        with monkeypatch.context() as m:
+            m.setattr(module, name, stub)
+            with pytest.raises(Stubbed):
+                QUERIES[query](spark, SF).collect()
+
+
 def test_catalog_session_restores_confs(spark):
     """Embedding a catalog query in an ANSI-on session: catalog_session
     restores both pinned confs on exit, and ANSI semantics are really
@@ -121,7 +169,7 @@ def test_catalog_session_restores_confs(spark):
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         with catalog_session(spark):
-            df = QUERIES["daily_row_counts"](spark, "/root/testdata/sf0.001")
+            df = QUERIES["daily_row_counts"](spark, SF)
             assert df.count() > 0
             # inside: the catalog pinned its semantics
             assert spark.conf.get("spark.sql.ansi.enabled") == "false"

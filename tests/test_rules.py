@@ -2,11 +2,9 @@
 
 import datetime as dt
 
-from pyspark.sql import Row
-
 from dq.rules import run_all_checks, collect_table_metrics
 from dq.schemas import normalize_type
-from dq.thresholds import Threshold, compute_thresholds
+from dq.thresholds import compute_thresholds
 
 RUN_DATE = dt.date(2025, 10, 3)
 YESTERDAY = dt.datetime(2025, 10, 2, 8, 30)
@@ -126,14 +124,13 @@ def test_schema_types_bool_datetime_string(spark):
     df = spark.createDataFrame(
         [(0, "2025-01-01 10:00:00", "x"), (1, "2025-02-02", "y")],
         "flag int, when_str string, name string")
-    res = _by_name(run_all_checks(df, "db", "t", schema, RUN_DATE,
-                                  enabled={"freshness": False}))
+    res = _by_name(run_all_checks(df, "db", "t", schema, RUN_DATE))
     assert res["schema_types_check"]["passed"], res["schema_types_check"]
 
     df2 = spark.createDataFrame(
         [(2, "not a date", 5)], "flag int, when_str string, name int")
-    r2 = _by_name(run_all_checks(df2, "db", "t", schema, RUN_DATE,
-                                 enabled={"freshness": False}))["schema_types_check"]
+    r2 = _by_name(run_all_checks(df2, "db", "t", schema,
+                                 RUN_DATE))["schema_types_check"]
     assert not r2["passed"]
     bad = {mm["column"] for mm in r2["type_mismatches"]}
     assert bad == {"flag", "when_str", "name"}

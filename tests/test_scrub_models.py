@@ -2,8 +2,6 @@
 
 import math
 
-from pyspark.sql import functions as F
-
 from dq.models import LANGID_MODEL, LM_MODEL
 from dq.scrub import scrub_string, scrub_udf
 

@@ -2,10 +2,8 @@
 metrics with watermark, availableNow end-to-end, bounded dedup."""
 
 import datetime as dt
-import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from dq import streaming
 from dq.pipeline import ALL_RULES, score_pages
